@@ -44,11 +44,13 @@ def set_jaccard(a: Column | str, b: Column | str) -> Column:
     exact-Jaccard verify over MinHash candidates dropped 2.8 s -> 0.9 s at
     sf0.1). Identical values and null/empty law: Spark's array_intersect
     returns the distinct intersection, so for distinct inputs the identity
-    is exact; null arrays null the union expression -> 0.0, as before.
-    Callers whose arrays may contain duplicates must use token_jaccard."""
+    is exact. A NULL array scores 0.0 in either ANSI mode: ``array_size``
+    is NULL for it, where ``size`` returns -1 with ANSI off and would give a
+    negative score. Callers whose arrays may contain duplicates must use
+    token_jaccard."""
     a, b = _col(a), _col(b)
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(a).cast("double") + F.size(b).cast("double") - inter
+    inter = F.array_size(F.array_intersect(a, b)).cast("double")
+    union = F.array_size(a).cast("double") + F.array_size(b).cast("double") - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 

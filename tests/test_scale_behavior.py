@@ -12,25 +12,28 @@ from crocodile_spark.operators.blocking import (
     generate_pairs,
     mention_df_threshold,
 )
-from crocodile_spark.operators.clustering import connected_components
+from crocodile_spark.operators.clustering import _cc_star
 
 
 def test_cc_converges_on_long_chain_within_log_rounds(spark):
     """large-star/small-star converges in O(log n) alternations: a
-    2000-node path must finish well inside the 20-iteration bound."""
+    2000-node path must finish well inside the 20-iteration bound. Runs
+    the distributed loop directly, since connected_components resolves a
+    graph this small on the driver."""
     n = 2000
     edges = spark.range(n - 1).select(
         F.format_string("n%05d", F.col("id")).alias("u"),
         F.format_string("n%05d", F.col("id") + 1).alias("v"),
     )
-    assign = connected_components(edges, max_iterations=20)
+    assign = _cc_star(edges, max_iterations=20)
     roots = assign.select("cluster_id").distinct().collect()
     assert len(roots) == 1 and roots[0]["cluster_id"] == "n00000"
     assert assign.count() == n
 
 
 def test_cc_many_components(spark):
-    """500 disjoint triangles resolve to 500 clusters with min-id roots."""
+    """500 disjoint triangles resolve to 500 clusters with min-id roots
+    in the distributed loop."""
     base = spark.range(500)
     edges = None
     for a, b in [(0, 1), (1, 2), (0, 2)]:
@@ -39,7 +42,7 @@ def test_cc_many_components(spark):
             F.format_string("c%04d_%d", F.col("id"), F.lit(b)).alias("v"),
         )
         edges = e if edges is None else edges.union(e)
-    assign = connected_components(edges)
+    assign = _cc_star(edges, max_iterations=20)
     assert assign.select("cluster_id").distinct().count() == 500
     bad = assign.where(~F.col("cluster_id").endswith("_0")).select("cluster_id")
     assert bad.where(F.col("cluster_id") != F.col("cluster_id")).count() == 0
