@@ -65,9 +65,9 @@ def main() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
 
-    # the production ANN path (single-pass multi-table LSH, Arrow matmul
-    # buckets -- the driver query pins arrow=False for oracle parity, so
-    # time the scale path directly); timed in the total since r3
+    # the production ANN path (single-pass multi-table LSH, Arrow
+    # guarded-matmul buckets) timed on its own; the ann_lsh_cosine query
+    # runs the same default path. Timed in the total since r3
     from pyspark.sql import functions as F
 
     from crocodile_spark.operators.similarity_search import lsh_topk
@@ -81,9 +81,9 @@ def main() -> None:
     lsh_topk(qv, cv, k=5, arrow=True).write.format("noop").mode("overwrite").save()
     timings["ann_lsh_arrow"] = round(time.time() - t0, 3)
 
-    # r5: the production IVF path (Arrow matmul cell assignment/probes --
-    # the driver query pins arrow=False for oracle parity, so time the
-    # scale path directly, mirroring ann_lsh_arrow)
+    # r5: the production IVF path (Arrow guarded-matmul cell assignment
+    # and probes) timed on its own, mirroring ann_lsh_arrow; the
+    # ivf_ann_cosine query runs the same default path
     from crocodile_spark.operators.similarity_search import (
         ivf_topk,
         seeded_random_centroids,

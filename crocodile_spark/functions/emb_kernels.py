@@ -1,4 +1,4 @@
-"""Bit-exact Arrow twins of the native embedding HOF laws (r8).
+"""Bit-exact Arrow twins of the native embedding HOF laws.
 
 Spark higher-order functions (``aggregate``/``zip_with``) are
 CodegenFallback -- interpreted per row, per element -- which made the
@@ -7,9 +7,8 @@ queries (guide section 4.2: measured 4.4 s of 4.5 s for the sf0.1
 brute-force cosine sweep) and, for plan-literal centroid/hyperplane
 forms, a multi-second Catalyst/codegen cost per query on top.
 
-These kernels are NOT the usual "numerically close" numpy rewrite: every
-reduction is a LEFT FOLD over the array dimension, vectorized across the
-batch axis only::
+The reference law is a LEFT FOLD over the array dimension, vectorized
+across the batch axis only (``fold_dots``)::
 
     for j in range(dim):            # same element order as F.aggregate
         dot += A[:, j] * B[:, j]    # one rounded mul + one rounded add
@@ -21,17 +20,23 @@ same order, so results are bit-identical to the native expressions --
 and therefore to the DuckDB oracles that replay the sequential
 summation (``list_cosine_similarity`` / ``list_inner_product``). numpy
 elementwise ops are IEEE-correctly-rounded per element and do not
-contract mul+add into an FMA, so SIMD does not change the result. This
-is what lets the DRIVER-GATED queries use the fast path: no
-summation-order caveat exists, unlike the pairwise-summation matmul
-twins (``M @ C.T``) which remain the production default for top-k
-sweeps.
+contract mul+add into an FMA, so SIMD does not change the result.
+
+The fold is one to three orders of magnitude slower than one BLAS
+matmul at dim 32-768 (BENCH.md "Guarded-matmul embedding kernels"), so
+the hyperplane/centroid kernels use
+``exact_dots``: one ``M @ C.T`` plus a per-entry rounding bound, with the
+fold recomputing only the rows whose DECISION (a sign, an argmax order)
+the bound cannot settle. Decisions are then the fold's on every row, so
+one Arrow path serves production and the oracle-gated queries.
 
 Null/edge laws replicated from ``functions.similarity.cosine_similarity``:
 null array or null element -> 0.0; equal-width zero-norm -> 0.0; width
 mismatch with positive norms -> NULL (zip_with pads with nulls, nulling
 only the dot); NaN values propagate (Spark orders NaN above all numbers,
-so ``na > 0`` is true for NaN norms).
+so ``na > 0`` is true for NaN norms). Arrow hands a NULL element to
+pandas as NaN, so the null-element rows are flagged in the JVM
+(``has_null_element``) and passed alongside the arrays.
 """
 
 from __future__ import annotations
@@ -54,6 +59,85 @@ def fold_dots(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     return acc
 
 
+_EPS = np.finfo(np.float64).eps
+_TINY = np.finfo(np.float64).tiny
+
+
+def exact_dots(M: np.ndarray, C: np.ndarray, undecided) -> np.ndarray:
+    """``M @ C.T`` whose downstream decisions equal ``fold_dots``'s.
+
+    Any summation order -- the fold, a blocked/SIMD/FMA BLAS kernel --
+    lies within gamma_d * sum|m_i c_i| of the true dot (Higham eq. 3.5),
+    so the matmul and the fold differ by at most ~d*eps*(|M| @ |C|.T).
+    ``tol`` is four times that, plus a ``d * tiny`` floor for underflow.
+    ``undecided(D, tol)`` returns a per-row mask of rows whose decision a
+    ``tol`` move of any dot could change; those rows, and rows with a
+    non-finite dot or bound, are recomputed with the fold. Every other
+    row's decision is the fold's, so the native HOF's and DuckDB's."""
+    d = M.shape[1]
+    with np.errstate(invalid="ignore", over="ignore"):  # NaN/inf rows
+        D = M @ C.T
+        tol = 4 * d * _EPS * (np.abs(M) @ np.abs(C).T) + d * _TINY
+        redo = ~np.isfinite(D + tol).all(axis=1) | undecided(D, tol)
+        if redo.any():
+            D[redo] = fold_dots(M[redo], C)
+    return D
+
+
+def near_zero(D: np.ndarray, tol: np.ndarray) -> np.ndarray:
+    """``exact_dots`` rule for sign decisions (LSH hyperplane bits): some
+    dot of the row lies within its bound of 0."""
+    return (np.abs(D) <= tol).any(axis=1)
+
+
+def plane_signs(D: np.ndarray) -> np.ndarray:
+    """Native ``dot >= 0`` bits; Spark orders NaN above every double, so
+    a NaN dot signs 1."""
+    return (D >= 0) | np.isnan(D)
+
+
+def near_tie(take: int):
+    """``exact_dots`` rule for the order of a row's ``take`` largest dots
+    (IVF cells): two adjacent dots among its top ``take + 1`` lie within
+    twice the row's largest bound. Any other row keeps its top-``take``
+    order under every move of at most ``tol`` per dot."""
+
+    def rule(D: np.ndarray, tol: np.ndarray) -> np.ndarray:
+        top = -np.sort(-D, axis=1)[:, : take + 1]
+        gap = top[:, :-1] - top[:, 1:]
+        return (gap <= 2 * tol.max(axis=1, keepdims=True)).any(axis=1)
+
+    return rule
+
+
+def top_cells(D: np.ndarray, take: int) -> np.ndarray:
+    """(n, take) int32 column ids of each row's ``take`` largest dots in
+    the native IVF order: ``reverse(array_sort(struct<d, cell>))``, i.e.
+    dot descending with NaN above every number, equal dots to the larger
+    cell first. The columns are reversed before a stable argsort so equal
+    dots keep the larger cell first; NaN dots are then moved in front."""
+    rev = D[:, ::-1]
+    order = np.argsort(-rev, axis=1, kind="stable")
+    if np.isnan(rev).any():  # numpy sorts NaN last
+        nan = np.isnan(np.take_along_axis(rev, order, axis=1))
+        order = np.take_along_axis(
+            order, np.argsort(~nan, axis=1, kind="stable"), axis=1
+        )
+    return (D.shape[1] - 1 - order[:, :take]).astype(np.int32)
+
+
+def has_null_element(c):
+    """Boolean Column: the array has a NULL element (FALSE for a NULL
+    array). Arrow converts a NULL element to NaN, so the kernels take
+    this JVM-side flag to apply the native NULL law instead of NaN's."""
+    return F.coalesce(F.exists(c, lambda x: x.isNull()), F.lit(False))
+
+
+def _cosine_ok(na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    # Spark's `na > 0` is TRUE for NaN (NaN sorts above all doubles)
+    return ((na > 0) | np.isnan(na)) & ((nb > 0) | np.isnan(nb))
+
+
 def _fold_cosine_mat(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     n, d = A.shape
     dot = np.zeros(n, dtype=np.float64)
@@ -67,8 +151,7 @@ def _fold_cosine_mat(A: np.ndarray, B: np.ndarray) -> np.ndarray:
         nb += y * y
     na = np.sqrt(na)
     nb = np.sqrt(nb)
-    # Spark's `na > 0` is TRUE for NaN (NaN sorts above all doubles)
-    ok = ((na > 0) | np.isnan(na)) & ((nb > 0) | np.isnan(nb))
+    ok = _cosine_ok(na, nb)
     out = np.zeros(n, dtype=np.float64)
     if ok.any():
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -80,31 +163,14 @@ def _fold_cosine_row(x, y):
     """Scalar fallback replicating the full native null/width law."""
     if x is None or y is None:
         return 0.0
-    try:
-        if any(v is None for v in x) or any(v is None for v in y):
-            return 0.0  # null element nulls a norm -> cond never true -> 0.0
-        xv = np.asarray(x, dtype=np.float64)
-        yv = np.asarray(y, dtype=np.float64)
-    except (TypeError, ValueError):
-        return 0.0
-    na = 0.0
-    for v in xv:
-        na += float(v) * float(v)
-    nb = 0.0
-    for v in yv:
-        nb += float(v) * float(v)
-    na = np.sqrt(na)
-    nb = np.sqrt(nb)
-    ok = (na > 0 or np.isnan(na)) and (nb > 0 or np.isnan(nb))
-    if len(xv) != len(yv):
-        # zip_with pads with nulls -> dot is NULL; when(cond, NULL) is NULL
-        return None if ok else 0.0
-    if not ok:
-        return 0.0
-    dot = 0.0
-    for a, b in zip(xv, yv):
-        dot += float(a) * float(b)
-    return dot / (na * nb)
+    xv = np.asarray(x, dtype=np.float64)[None]
+    yv = np.asarray(y, dtype=np.float64)[None]
+    if xv.shape == yv.shape:
+        return _fold_cosine_mat(xv, yv)[0]
+    na = np.sqrt(fold_dots(xv, xv)[0])
+    nb = np.sqrt(fold_dots(yv, yv)[0])
+    # zip_with pads with nulls -> dot is NULL; when(cond, NULL) is NULL
+    return None if _cosine_ok(na, nb)[0] else 0.0
 
 
 _COS_STRUCT = T.StructType(
@@ -113,7 +179,9 @@ _COS_STRUCT = T.StructType(
 
 
 @F.pandas_udf(_COS_STRUCT)
-def _cosine_fold_struct(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+def _cosine_fold_struct(
+    a: pd.Series, b: pd.Series, null_elem: pd.Series
+) -> pd.DataFrame:
     """(value, isnan) pair: pandas->Arrow maps NaN floats to NULL, so a NaN
     cosine (NaN-poisoned input vectors) could not otherwise be told apart
     from the law's genuine NULL (width mismatch). The wrapper below
@@ -134,6 +202,9 @@ def _cosine_fold_struct(a: pd.Series, b: pd.Series) -> pd.DataFrame:
             pass
         if vals is None:
             vals = [_fold_cosine_row(x, y) for x, y in zip(a, b)]
+        # native law: a NULL element nulls a norm -> cond never true -> 0.0
+        for i in np.flatnonzero(null_elem.to_numpy(dtype=bool)):
+            vals[i] = 0.0
     isnan = [v is not None and np.isnan(v) for v in vals]
     return pd.DataFrame({"v": pd.Series(vals, dtype="float64"), "isnan": isnan})
 
@@ -141,7 +212,7 @@ def _cosine_fold_struct(a: pd.Series, b: pd.Series) -> pd.DataFrame:
 def cosine_fold(a, b):
     """Bit-exact Arrow twin of ``functions.similarity.cosine_similarity``
     (a Column expression; evaluates the fold kernel once per pair)."""
-    s = _cosine_fold_struct(a, b)
+    s = _cosine_fold_struct(a, b, has_null_element(a) | has_null_element(b))
     # the two references are the SAME UDF expression: ExtractPythonUDFs
     # dedups equal Python UDFs in a projection, so the kernel runs once
     return F.when(s["isnan"], F.lit(float("nan"))).otherwise(s["v"])

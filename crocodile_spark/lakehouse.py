@@ -31,6 +31,11 @@ class StageResult:
     recomputed_buckets: list[int] | None = None
 
 
+# missing buckets of run_stage_bucketed run as this many overlapped Spark
+# jobs: the scheduler interleaves their tasks, filling the stage tails a
+# serial loop leaves idle
+BUCKET_CONCURRENCY = 4
+
 # our stage names -> reference progress-phase names
 # (crocodile_api.py:1479-1516 reports PREDICTION/ML_PREDICTION/DONE; the
 # Spark pipeline's finer stages map onto the linkage phases below)
@@ -219,7 +224,6 @@ class Lakehouse:
         transform,
         bucket_col: str,
         n_buckets: int = 4,
-        concurrency: int = 4,
     ) -> StageResult:
         """Mid-stage resumable execution (SURVEY.md section 7.5, the Q1/Q2
         claim-queue analog): the input is bucketized ONCE by a hash of
@@ -229,10 +233,9 @@ class Lakehouse:
         anti-joining DONE buckets and recomputing ONLY the missing ones --
         without rescanning the input per bucket.
 
-        Missing buckets run overlapped (``concurrency`` Spark jobs -- the
-        scheduler interleaves their tasks, filling the stage tails that a
-        serial loop leaves idle); lineage rows are committed serially in
-        submission-safe order AFTER each bucket's data commit.
+        Missing buckets run overlapped (``BUCKET_CONCURRENCY`` Spark
+        jobs); lineage rows are committed serially, each AFTER its
+        bucket's data commit.
 
         Idempotence: a bucket directory is written with mode=overwrite and
         its lineage row only after the data commit, so a kill at any point
@@ -290,22 +293,13 @@ class Lakehouse:
             n = self.spark.read.parquet(f"{path}/part_bucket={b}").count()
             return b, n, time.time() - tb
 
-        if len(missing) > 1 and concurrency > 1:
-            from concurrent.futures import ThreadPoolExecutor, as_completed
+        from concurrent.futures import ThreadPoolExecutor, as_completed
 
-            with ThreadPoolExecutor(
-                max_workers=min(concurrency, len(missing))
-            ) as pool:
-                futs = [pool.submit(run_bucket, b) for b in missing]
-                for fut in as_completed(futs):
-                    b, n, wall_b = fut.result()
-                    part_counts = self.spark.createDataFrame(
-                        [(b, n)], "partition_id int, rows long"
-                    )
-                    self._write_lineage_rows(name, part_counts, wall_b)
-        else:
-            for b in missing:
-                b, n, wall_b = run_bucket(b)
+        workers = max(1, min(BUCKET_CONCURRENCY, len(missing)))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futs = [pool.submit(run_bucket, b) for b in missing]
+            for fut in as_completed(futs):
+                b, n, wall_b = fut.result()
                 part_counts = self.spark.createDataFrame(
                     [(b, n)], "partition_id int, rows long"
                 )

@@ -11,15 +11,22 @@ Five families, all returning DataFrames (ids/pairs/cluster assignments):
                         (pigeonhole: <=3 differing bits -> one of 4
                         16-bit segments is equal)
 - ngram_jaccard_pairs:  char-3-gram Jaccard over blocked pairs
-- embedding_pairs:      cosine near-dup over an embedding column via
+- embedding_near_dup_pairs: cosine near-dup over an embedding column via
                         random-hyperplane LSH bucketing
 
 Scale posture: every family is explode -> aggregate/join on a bounded key
 (block caps where a key can be hot); no driver-side loops. Hashing and set
-algebra are native expressions; the one Arrow pandas UDF (the SimHash
-bit-count fold, r8) is integer-exact, per-document-bounded, and exists
-because its native 60-aggregate twin costs seconds of driver-side
-plan/codegen time per query (guide section 4.2).
+algebra are native expressions. Two families run Arrow pandas UDFs by
+default (``arrow=True``), each bit-identical to its native twin:
+``simhash`` / ``simhash_pairs`` fold the per-document bit counts in one
+integer-exact UDF, because the native 60-aggregate form costs seconds of
+Catalyst plan/codegen time per query; and
+``embedding_near_dup_pairs`` uses the similarity_search bucket and cosine
+kernels. Pass ``arrow=False`` to ``simhash`` or
+``embedding_near_dup_pairs`` for a UDF-free plan.
+
+``minhash_lsh_pairs`` (when verifying) and ``ngram_jaccard_pairs`` return
+frames backed by a lazy ``localCheckpoint``: see their docstrings.
 """
 
 from __future__ import annotations
@@ -31,7 +38,7 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams, tokenize
-from crocodile_spark.functions.similarity import cosine_similarity, set_jaccard
+from crocodile_spark.functions.similarity import set_jaccard
 from crocodile_spark.operators.blocking import salted_count
 from crocodile_spark.operators.blocking import spread as _spread
 
@@ -147,6 +154,13 @@ def minhash_lsh_pairs(
     materializing is the standard MinHash shape at any scale; in a
     checkpointed production run the lakehouse stage write plays this role
     instead (localCheckpoint is executor-local and not kill-resumable).
+
+    With ``jaccard_threshold`` set, the returned frame is backed by a lazy
+    ``localCheckpoint`` of the verified (id_a, id_b, jaccard) rows (the
+    single-evaluation barrier below): its lineage is truncated, so a lost
+    executor fails later actions instead of recomputing them, its blocks
+    stay cached until the frame is garbage-collected, and the first action
+    materializes every candidate pair's score before the threshold filter.
     """
     sig = minhash_signature_agg(
         df, text_col, id_col, num_hashes, shingle_size, portable=portable
@@ -269,8 +283,9 @@ def simhash(
     the md5 60-bit hash law (callers should pass bits=60 with it) so a
     DuckDB oracle can reproduce fingerprints exactly.
 
-    ``arrow=True`` (default): tokens are hashed in the JVM, then the
-    per-document bit-count fold runs as one Arrow pandas UDF over
+    ``arrow=True`` is the DEFAULT, so the plan holds a pandas UDF unless
+    the caller passes ``arrow=False``: tokens are hashed in the JVM, then
+    the per-document bit-count fold runs as one Arrow pandas UDF over
     collect_list(h) -- integer-exact, bit-identical to the native form
     (see _simhash_fold_udf). The aggregation state is the document's own
     token hashes (bounded by the document's size, which already travels
@@ -365,7 +380,11 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
 ) -> DataFrame:
-    """Char-n-gram Jaccard near-dup pairs within explicit blocks."""
+    """Char-n-gram Jaccard near-dup pairs within explicit blocks.
+
+    The returned frame is backed by a lazy ``localCheckpoint`` of every
+    in-block pair's score (the single-evaluation barrier of
+    minhash_lsh_pairs, with the same truncated-lineage semantics)."""
     d = _spread(df).select(
         F.col(id_col).alias("id"),
         *block_cols,
@@ -394,7 +413,7 @@ def embedding_near_dup_pairs(
     num_tables: int = 4,
     seed: int = 42,
     max_bucket_size: int = 1024,
-    arrow: bool | str = True,
+    arrow: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup via banded random-hyperplane LSH.
@@ -408,12 +427,16 @@ def embedding_near_dup_pairs(
     tests/test_dedup.py). Buckets for every table come from one projection
     + one explode; ids only travel through the bucket join, vectors are
     re-joined after the pair dedup.
+
+    ``arrow=True`` (default) runs the Arrow bucket and cosine kernels
+    (similarity_search.lsh_buckets / pair_cosine), bit-identical to the
+    native HOF twins that ``arrow=False`` selects for UDF-free plans.
     """
     from crocodile_spark.operators.blocking import key_count
     from crocodile_spark.operators.similarity_search import (
         embedding_dim,
-        hyperplane_table_buckets,
-        hyperplane_table_buckets_udf,
+        lsh_buckets,
+        pair_cosine,
     )
 
     dim = embedding_dim(df, emb_col)
@@ -421,12 +444,7 @@ def embedding_near_dup_pairs(
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    if arrow:
-        buckets = hyperplane_table_buckets_udf(
-            dim, num_planes, num_tables, seed, exact=(arrow == "exact")
-        )(F.col(emb_col))
-    else:
-        buckets = hyperplane_table_buckets(emb_col, dim, num_planes, num_tables, seed)
+    buckets = lsh_buckets(emb_col, dim, num_planes, num_tables, seed, arrow)
     b = _spread(df).select(
         F.col(id_col).alias("id"), F.explode(buckets).alias("bucket")
     )
@@ -446,18 +464,10 @@ def embedding_near_dup_pairs(
         .distinct()
     )
     v = df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
-    if arrow:
-        # bit-exact Arrow fold twin of the HOF cosine (emb_kernels): same
-        # values, so the threshold filter admits the identical pair set
-        from crocodile_spark.functions.emb_kernels import cosine_fold
-
-        cos = cosine_fold(F.col("va"), F.col("vb"))
-    else:
-        cos = cosine_similarity(F.col("va"), F.col("vb"))
     return (
         pairs.join(v.withColumnsRenamed({"id": "id_a", "v": "va"}), "id_a")
         .join(v.withColumnsRenamed({"id": "id_b", "v": "vb"}), "id_b")
-        .withColumn("cosine", cos)
+        .withColumn("cosine", pair_cosine(F.col("va"), F.col("vb"), arrow))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

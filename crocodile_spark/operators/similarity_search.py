@@ -1,13 +1,21 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two strategies:
+Three strategies:
 - brute_force_topk: exact cosine top-k per query (the correctness
   baseline; a crossJoin, O(Q x N) -- use only for small query sets or as
   the oracle for the ANN path);
 - lsh_topk: random-hyperplane LSH with multi-probe bucketing -- the scale
   path: queries only compare against candidates sharing a hash bucket in
-  at least one of ``num_tables`` independent tables. All native
-  expressions; hyperplanes are seeded plan literals.
+  at least one of ``num_tables`` independent tables;
+- ivf_topk: coarse-quantizer cells, each query probing its ``n_probe``
+  best cells.
+
+The ANN paths take ``arrow: bool``. True (default) runs one Arrow kernel
+per law: the guarded matmul of ``functions.emb_kernels.exact_dots`` for
+hyperplane signs and centroid choices, and the left-fold cosine for the
+re-rank. Both are bit-identical to the native higher-order-function
+twins that ``arrow=False`` selects (UDF-free plans) on every valid row,
+and so to the DuckDB oracles. Hyperplanes and centroids are seeded.
 
 At 100 TB the brute-force path is a deliberate non-starter (quadratic);
 lsh_topk's cost is bounded by bucket sizes, which are capped.
@@ -120,38 +128,40 @@ def _batch_matrix(lists: list, dim: int):
             return np.ones(len(lists), dtype=bool), M
     except (TypeError, ValueError):
         pass
-    mask = np.zeros(len(lists), dtype=bool)
-    rows = []
-    for i, v in enumerate(lists):
-        try:
-            a = np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            continue
-        if a.ndim == 1 and a.shape[0] == dim:
-            mask[i] = True
-            rows.append(a)
-    M = np.vstack(rows) if rows else np.empty((0, dim), dtype=np.float64)
-    return mask, M
+    mask = np.array([v is not None and len(v) == dim for v in lists], dtype=bool)
+    rows = [v for v, ok in zip(lists, mask) if ok]
+    return mask, np.array(rows, dtype=np.float64).reshape(len(rows), dim)
+
+
+def _scatter_rows(mask, rows) -> pd.Series:
+    """Series of per-row arrays: ``rows`` at the ``mask`` positions of an
+    Arrow batch, NULL at the invalid ones."""
+    import numpy as np
+
+    out = np.full(len(mask), None, dtype=object)
+    valid = np.empty(len(rows), dtype=object)
+    valid[:] = list(rows)
+    out[mask] = valid
+    return pd.Series(list(out))
 
 
 def hyperplane_table_buckets_udf(
-    dim: int, planes_per_table: int, num_tables: int, seed: int,
-    exact: bool = False,
+    dim: int, planes_per_table: int, num_tables: int, seed: int
 ):
     """Arrow-vectorized twin of ``hyperplane_table_buckets``: one numpy
     matmul per Arrow batch instead of per-plane higher-order-function loops
-    (Spark HOFs are CodegenFallback, i.e. interpreted per row). Identical
-    keys up to fp summation order -- a sign can only differ when
-    |dot| ~ 1e-13, which seeded gaussian planes never produce in practice.
+    (Spark HOFs are CodegenFallback, i.e. interpreted per row). Returns a
+    Column -> Column function.
 
-    ``exact=True`` (r8) removes even that caveat: plane dots are computed
-    as a LEFT FOLD over the dimension axis (see functions.emb_kernels),
-    bit-identical to the sequential summation of the native form and the
-    DuckDB oracle, NaN dots sign as ``>= 0`` true (Spark's NaN ordering),
-    and invalid rows (null / wrong width) produce the all-zeros bit
-    pattern per table exactly as the native ``when(dot >= 0, ...)
-    .otherwise("0")`` law does when nulls null the dot. The oracle-gated
-    queries use this mode; the matmul stays the production default.
+    Keys are bit-identical to the native form: plane dots come from
+    ``emb_kernels.exact_dots``, whose matmul is recomputed as the
+    left fold on any row with a dot within its rounding bound of 0, so
+    every sign is the fold's (and DuckDB's). A NaN dot signs "1" (Spark
+    orders NaN above every double); a NULL element nulls every dot, so
+    the row gets the all-zeros pattern per table, as the native
+    ``when(dot >= 0, ...).otherwise("0")`` law gives. A NULL or
+    wrong-width array gets a NULL key array (no bucket), where the native
+    form gives all zeros.
 
     This is the hot path at scale (dim 768 x dozens of planes: a (batch x
     dim) @ (dim x planes) matmul); the native-expression twin remains for
@@ -160,7 +170,12 @@ def hyperplane_table_buckets_udf(
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from crocodile_spark.functions.emb_kernels import fold_dots
+    from crocodile_spark.functions.emb_kernels import (
+        exact_dots,
+        has_null_element,
+        near_zero,
+        plane_signs,
+    )
 
     mats = []
     luts = []
@@ -177,33 +192,47 @@ def hyperplane_table_buckets_udf(
     allplanes = np.vstack(mats)  # (num_tables * ppt, dim)
 
     @pandas_udf("array<string>")
-    def buckets(emb: pd.Series) -> pd.Series:
+    def buckets(emb: pd.Series, null_elem: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype=object)
         mask, M = _batch_matrix(emb.tolist(), dim)
-        if exact:
-            dots = fold_dots(M, allplanes)
-            signs = (dots >= 0) | np.isnan(dots)
-        else:
-            signs = (M @ allplanes.T) >= 0  # (n_valid, num_tables * ppt)
+        dots = exact_dots(M, allplanes, near_zero)  # (n_valid, num_tables * ppt)
+        # a NULL element nulls every dot natively, and NULL signs "0"
+        signs = plane_signs(dots) & ~null_elem.to_numpy(bool)[mask, None]
         cols = []
         for t in range(num_tables):
             seg = signs[:, t * planes_per_table : (t + 1) * planes_per_table]
             cols.append(luts[t][seg @ powers])
         stacked = np.stack(cols, axis=1) if len(M) else np.empty((0, num_tables))
-        out = np.full(len(mask), None, dtype=object)
-        valid = np.empty(len(stacked), dtype=object)
-        valid[:] = [row for row in stacked]
-        out[mask] = valid
-        if exact and not mask.all():
-            # native law: a null/width-mismatched row nulls every dot, and
-            # when(null >= 0).otherwise("0") yields the all-zeros pattern
-            zeros = [lut[0] for lut in luts]
-            for i in np.flatnonzero(~mask):
-                out[i] = list(zeros)
-        return pd.Series(list(out))
+        return _scatter_rows(mask, stacked)
 
-    return buckets
+    return lambda emb: buckets(emb, has_null_element(emb))
+
+
+def lsh_buckets(
+    emb: str, dim: int, num_planes: int, num_tables: int, seed: int, arrow: bool
+):
+    """The array<string> per-table bucket column: the Arrow kernel, or
+    the native HOF twin for UDF-free plans (``arrow=False``). Identical
+    keys on every valid row (see hyperplane_table_buckets_udf)."""
+    if arrow:
+        return hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)(
+            F.col(emb)
+        )
+    return hyperplane_table_buckets(emb, dim, num_planes, num_tables, seed)
+
+
+def pair_cosine(a, b, arrow: bool):
+    """The exact-cosine re-rank/verify column: the bit-exact Arrow fold
+    kernel whenever a Python stage is already in the plan (the
+    interpreted HOF was the dominant exec cost of the re-rank), the
+    native HOF twin for UDF-free plans (``arrow=False``). Identical
+    values either way (emb_kernels fold law)."""
+    if arrow:
+        from crocodile_spark.functions.emb_kernels import cosine_fold
+
+        return cosine_fold(a, b)
+    return cosine_similarity(a, b)
 
 
 def lsh_topk(
@@ -217,7 +246,7 @@ def lsh_topk(
     num_tables: int = 12,
     seed: int = 42,
     max_bucket_size: int = 4096,
-    arrow: bool | str = True,
+    arrow: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """ANN top-k: single-pass random-hyperplane LSH bucket join, exact
@@ -229,22 +258,17 @@ def lsh_topk(
     carries ids only, vectors are re-joined after the candidate-pair dedup
     so the per-table replication never shuffles the embedding payload.
     Recall grows with num_tables; cost is Sum(bucket pair volume), capped.
-    ``arrow=True`` computes buckets with the vectorized matmul UDF (the
-    scale path); ``arrow="exact"`` uses the bit-exact fold kernels
-    (oracle-parity Arrow path, r8); False uses the native-expression twin
-    end to end (UDF-free deployments).
+    ``arrow=True`` (default) computes buckets with the guarded-matmul
+    Arrow kernel and the re-rank with the fold kernel -- bit-identical to
+    the native form and the DuckDB oracle on every valid row; False uses
+    the native-expression twin end to end (UDF-free deployments).
     """
     from crocodile_spark.operators.blocking import key_count
 
     dim = embedding_dim(corpus, emb)
     if dim is None:
         raise ValueError("empty corpus")
-    if arrow:
-        buckets = hyperplane_table_buckets_udf(
-            dim, num_planes, num_tables, seed, exact=(arrow == "exact")
-        )(F.col(emb))
-    else:
-        buckets = hyperplane_table_buckets(emb, dim, num_planes, num_tables, seed)
+    buckets = lsh_buckets(emb, dim, num_planes, num_tables, seed, arrow)
 
     from crocodile_spark.operators.blocking import spread
 
@@ -266,24 +290,11 @@ def lsh_topk(
     sims = (
         pairs.join(queries.select(F.col(query_id), F.col(emb).alias("_qv")), query_id)
         .join(corpus.select(F.col(corpus_id), F.col(emb).alias("_cv")), corpus_id)
-        .withColumn("cosine", _exact_cosine(arrow))
+        .withColumn("cosine", pair_cosine(F.col("_qv"), F.col("_cv"), arrow))
         .drop("_qv", "_cv")
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def _exact_cosine(arrow):
-    """The in-bucket exact-cosine re-rank column: the bit-exact Arrow fold
-    kernel whenever a Python stage is already in the plan (arrow truthy --
-    the interpreted HOF was the dominant exec cost of the re-rank, guide
-    section 4.2), the native HOF twin for UDF-free plans (arrow=False).
-    Identical values either way (emb_kernels fold law)."""
-    if arrow:
-        from crocodile_spark.functions.emb_kernels import cosine_fold
-
-        return cosine_fold(F.col("_qv"), F.col("_cv"))
-    return cosine_similarity(F.col("_qv"), F.col("_cv"))
 
 
 def seeded_random_centroids(dim: int, n_centroids: int, seed: int):
@@ -370,7 +381,7 @@ def _ivf_cell(emb: str, centroids) -> "F.Column":
     return F.array_max(_ivf_dots_struct(emb, centroids))["cell"]
 
 
-def ivf_probe_cells_udf(centroids, n_probe: int, exact: bool = False):
+def ivf_probe_cells_udf(centroids, n_probe: int):
     """Arrow-vectorized twin of the native IVF cell law (VERDICT r4 #3):
     one numpy matmul per Arrow batch instead of n_centroids plan-literal
     higher-order-function dots (Spark HOFs are CodegenFallback --
@@ -378,48 +389,34 @@ def ivf_probe_cells_udf(centroids, n_probe: int, exact: bool = False):
     plan itself becomes megabytes). Returns the ``n_probe`` best cells,
     dot-descending; ``n_probe=1`` is corpus assignment (argmax).
 
-    Tie law mirrors the native form exactly: the native assignment is
-    ``array_max(struct<d, cell>)`` (ties -> larger cell) and the native
-    probe order is ``reverse(array_sort(...))`` (d desc, then cell desc).
-    Here the batch matmul's columns are reversed before a stable argsort
-    of -dot, so equal dots also resolve to the larger cell first. Dots
-    differ from the HOF form only in fp summation order -- a cell choice
-    can only flip when two |dot|s collide within ~1e-13, which seeded
-    gaussian centroids never produce in practice (same argument as
-    hyperplane_table_buckets_udf); the exact-cosine re-rank after the
-    bucket join is unaffected either way.
-
-    ``exact=True`` (r8) removes the caveat entirely: dots are computed as
-    a left fold over the dimension axis (functions.emb_kernels.fold_dots),
-    bit-identical to the plan-literal HOF dots and the DuckDB
-    ``list_inner_product`` replay -- the mode the oracle-gated query uses
-    (the HOF form cost ~2 s of plan time + ~3 s interpreted exec at
-    sf0.1; the fold kernel is plan-tiny and batch-vectorized).
+    Tie law mirrors the native form exactly (``emb_kernels.top_cells``):
+    the native assignment is ``array_max(struct<d, cell>)`` (ties ->
+    larger cell) and the native probe order is ``reverse(array_sort(...))``
+    (d desc with NaN above every number, then cell desc). Dots come from
+    ``emb_kernels.exact_dots``: a row is recomputed as the left fold when
+    two of its top ``n_probe + 1`` dots are within twice its rounding
+    bound, so every cell choice and order is the fold's -- bit-identical
+    to the plan-literal HOF form and the DuckDB ``list_inner_product``
+    replay. A NULL element makes every dot NaN here and NULL natively;
+    both sort as all-equal, so the larger cell comes first either way.
+    A NULL or wrong-width array gets NULL (no cell).
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from crocodile_spark.functions.emb_kernels import fold_dots
+    from crocodile_spark.functions.emb_kernels import exact_dots, near_tie, top_cells
 
     C = np.asarray(centroids, dtype=np.float64)
-    n_cells = len(C)
-    take = min(n_probe, n_cells)
+    take = min(n_probe, len(C))
+    rule = near_tie(take)
 
     @pandas_udf("array<int>")
     def probes(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype=object)
         mask, M = _batch_matrix(emb.tolist(), C.shape[1])
-        dots = fold_dots(M, C) if exact else M @ C.T  # (n_valid, n_cells)
-        # reverse columns so a stable argsort of -dot puts the LARGER
-        # original cell first among equal dots
-        order_rev = np.argsort(-dots[:, ::-1], axis=1, kind="stable")
-        cells = (n_cells - 1 - order_rev[:, :take]).astype(np.int32)
-        out = np.full(len(mask), None, dtype=object)
-        valid = np.empty(len(cells), dtype=object)
-        valid[:] = [row for row in cells]
-        out[mask] = valid
-        return pd.Series(list(out))
+        cells = top_cells(exact_dots(M, C, rule), take)  # (n_valid, take)
+        return _scatter_rows(mask, cells)
 
     return probes
 
@@ -433,26 +430,23 @@ def ivf_topk(
     query_id: str = "query_id",
     corpus_id: str = "cand_id",
     emb: str = "embedding",
-    arrow: bool | str = True,
+    arrow: bool = True,
 ) -> DataFrame:
     """IVF ANN top-k: corpus rows live in their argmax-dot centroid cell;
     each query probes its ``n_probe`` best cells; exact cosine ranks within
     the probed candidates. Complements lsh_topk as the brief's second
     scale path -- cost ~ n_probe/n_centroids of brute force.
 
-    ``arrow=True`` (default, the scale path) computes cell assignment and
-    probes with one batched numpy matmul (ivf_probe_cells_udf);
-    ``arrow="exact"`` uses the bit-exact fold kernels -- identical results
-    to the plan-literal HOF form at a fraction of its plan+exec cost, the
-    mode the driver gate query uses for DuckDB oracle replay (r8); False
-    keeps the fully native HOF form for UDF-free deployments -- same
-    split as lsh_topk."""
+    ``arrow=True`` (default) computes cell assignment and probes with the
+    guarded-matmul Arrow kernel (ivf_probe_cells_udf) and the re-rank with
+    the fold kernel -- identical results to the plan-literal HOF form at a
+    fraction of its plan+exec cost; False keeps the fully native HOF form
+    for UDF-free deployments -- same split as lsh_topk."""
     from crocodile_spark.operators.blocking import spread
 
     if arrow:
-        exact = arrow == "exact"
-        assign = ivf_probe_cells_udf(centroids, 1, exact=exact)
-        probe = ivf_probe_cells_udf(centroids, n_probe, exact=exact)
+        assign = ivf_probe_cells_udf(centroids, 1)
+        probe = ivf_probe_cells_udf(centroids, n_probe)
         cb = spread(corpus).select(
             F.col(corpus_id),
             F.element_at(assign(F.col(emb)), 1).cast("int").alias("cell"),
@@ -479,7 +473,7 @@ def ivf_topk(
     sims = (
         pairs.join(queries.select(F.col(query_id), F.col(emb).alias("_qv")), query_id)
         .join(corpus.select(F.col(corpus_id), F.col(emb).alias("_cv")), corpus_id)
-        .withColumn("cosine", _exact_cosine(arrow))
+        .withColumn("cosine", pair_cosine(F.col("_qv"), F.col("_cv"), arrow))
         .drop("_qv", "_cv")
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))

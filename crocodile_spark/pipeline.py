@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.lakehouse import Lakehouse
-from crocodile_spark.operators.blocking import block
+from crocodile_spark.operators.blocking import mention_signatures, pairs_from_signatures
 from crocodile_spark.operators.clustering import cluster_records
 from crocodile_spark.operators.normalize_stage import normalize_pages
 from crocodile_spark.operators.scoring import score
@@ -47,14 +47,9 @@ def run_pipeline(
 
         r = lake.run_stage("records", lambda: normalize_pages(web_pages, use_html))
         records = r.df
-        s = lake.run_stage("signatures", lambda: block(records, cfg)[0])
+        s = lake.run_stage("signatures", lambda: mention_signatures(records, cfg))
         sigs = s.df
-        p = lake.run_stage(
-            "pairs",
-            lambda: block(records, cfg)[1]
-            if not lake.is_done("signatures")
-            else _pairs_from_sigs(sigs, cfg),
-        )
+        p = lake.run_stage("pairs", lambda: pairs_from_signatures(sigs, cfg))
         pairs = p.df
         # scoring is pair-local -> bucketed by url_a for MID-stage resume
         # (a killed run recomputes only the buckets without lineage rows)
@@ -97,21 +92,13 @@ def run_pipeline(
         # is the dev/bench mode; production resilience is the Lakehouse
         # checkpoint branch above (stage-level resume + lineage), exactly
         # as the minhash signature materialization already documents.
-        from crocodile_spark.operators.blocking import mention_signatures
-
         records = normalize_pages(web_pages, use_html).localCheckpoint(eager=True)
         sigs = mention_signatures(records, cfg).localCheckpoint(eager=True)
-        pairs = _pairs_from_sigs(sigs, cfg).localCheckpoint(eager=True)
+        pairs = pairs_from_signatures(sigs, cfg).localCheckpoint(eager=True)
         scored = score(pairs, sigs, cfg).localCheckpoint(eager=True)
         clusters = cluster_records(records, scored, max_iterations=cfg.max_cc_iterations)
 
     return PipelineOutput(records, sigs, pairs, scored, clusters, stats)
-
-
-def _pairs_from_sigs(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    from crocodile_spark.operators.blocking import pairs_from_signatures
-
-    return pairs_from_signatures(sigs, cfg)
 
 
 def evaluate_pairwise_f1(

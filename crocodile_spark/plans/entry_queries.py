@@ -1521,12 +1521,11 @@ def q_ann_lsh_cosine(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.select(F.col("vec_id").alias("cand_id"), "embedding")
-    # arrow="exact" (r8): the bit-exact fold kernels reproduce the
-    # oracle's sequential dot-product summation bit-for-bit (same
-    # left-fold op order as the retired native-HOF path, emb_kernels),
-    # with none of the pairwise-vs-sequential sign-flip caveat of the
-    # matmul twin -- and none of the HOF form's interpreted per-row cost
-    return lsh_topk(q, c, k=5, arrow="exact").select(
+    # the default Arrow path: the guarded-matmul bucket kernel signs every
+    # plane dot as the oracle's sequential summation does (near-zero dots
+    # are recomputed as the left fold, emb_kernels.exact_dots) and the
+    # fold cosine re-rank replays list_cosine_similarity bit-for-bit
+    return lsh_topk(q, c, k=5).select(
         "query_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
 
@@ -1589,13 +1588,11 @@ def q_ivf_ann_cosine(spark, sf_dir):
     )
     c = e.select(F.col("vec_id").alias("cand_id"), "embedding")
     cents = seeded_random_centroids(64, 16, 7)
-    # arrow="exact" (r8): fold-kernel dots replay DuckDB's
-    # list_inner_product bit-for-bit (same left-fold summation order as
-    # the retired plan-literal HOF form, whose 16x64 literal tree cost
-    # ~2 s plan + ~3 s interpreted exec per run); the Arrow matmul twin
-    # is the production default and is timed separately in bench.py
-    # (ivf_ann_arrow), same split as ann_lsh_cosine / ann_lsh_arrow.
-    return ivf_topk(q, c, cents, k=5, n_probe=4, arrow="exact").select(
+    # the default Arrow path: guarded-matmul cell choices equal those of
+    # DuckDB's sequential list_inner_product (near-tied rows are
+    # recomputed as the left fold, emb_kernels.exact_dots) without the
+    # plan-literal HOF form's ~2 s plan + ~3 s interpreted exec per run
+    return ivf_topk(q, c, cents, k=5, n_probe=4).select(
         "query_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
 
@@ -1659,9 +1656,9 @@ def q_embedding_near_dup(spark, sf_dir):
         ),
     )
     corp = base.unionByName(pert)
-    # arrow="exact" (r8) keeps summation-order parity with the oracle
-    # (bit-exact fold kernels) without the interpreted-HOF cost
-    pairs = embedding_near_dup_pairs(corp, threshold=0.98, num_tables=6, arrow="exact")
+    # the default Arrow kernels keep summation-order parity with the
+    # oracle (emb_kernels) without the interpreted-HOF cost
+    pairs = embedding_near_dup_pairs(corp, threshold=0.98, num_tables=6)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 

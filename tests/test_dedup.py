@@ -53,6 +53,31 @@ def test_simhash_properties(spark, docs):
     assert fp[0] != fp[1]
 
 
+@pytest.mark.parametrize("portable", [False, True])
+def test_simhash_arrow_default_equals_native(spark, docs, portable):
+    """simhash defaults to the Arrow bit-count fold; its fingerprints must
+    equal the UDF-free native form's, for the xxhash64 law and the
+    portable md5 law (60 bits). Extra documents cover one token, many
+    tokens (bit 63 set or not) and text with no tokens."""
+    extra = spark.createDataFrame(
+        [
+            (10, "solo"),
+            (11, " ".join(f"tok{i}" for i in range(300))),
+            (12, "!!! ???"),
+            (13, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
+        ],
+        ["doc_id", "text"],
+    )
+    df = docs.unionByName(extra)
+    bits = 60 if portable else 64
+    default = simhash(df, "text", "doc_id", bits=bits, portable=portable)
+    native = simhash(df, "text", "doc_id", bits=bits, portable=portable, arrow=False)
+    got = {r["id"]: r["simhash"] for r in default.collect()}
+    want = {r["id"]: r["simhash"] for r in native.collect()}
+    assert len(got) >= 9
+    assert got == want
+
+
 def test_simhash_pairs(spark, docs):
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_pairs(docs).collect()}
     assert got.get((0, 2)) == 0

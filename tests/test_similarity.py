@@ -97,8 +97,11 @@ def test_cosine_fold_kernel_bit_exact_vs_hof(spark):
     """r8: the Arrow fold kernel (emb_kernels.cosine_fold) must be
     BIT-IDENTICAL to the interpreted HOF law on every input class --
     clean vectors (float32 and float64), null arrays, zero norms, width
-    mismatches (NULL law), and NaN poisoning (NaN law, reconstructed
-    natively from the isnan flag because pandas->Arrow maps NaN to null).
+    mismatches (NULL law), NaN poisoning (NaN law, reconstructed
+    natively from the isnan flag because pandas->Arrow maps NaN to null),
+    and NULL elements (0.0, even next to a NaN or a width mismatch:
+    Arrow hands a NULL element to pandas as NaN, so the kernel needs the
+    JVM-side null-element flag).
     """
     import math
     import random
@@ -122,6 +125,14 @@ def test_cosine_fold_kernel_bit_exact_vs_hof(spark):
             a = [float("nan")] + a[1:]
         elif k < 0.25:
             a = [0.0] * d
+        elif k < 0.30:
+            b[rng.randrange(d)] = None
+        elif k < 0.33:
+            a = [None] + a[1:]
+            b = [float("nan")] + b[1:]
+        elif k < 0.36:
+            a = [None] * d
+            b = b + [1.0]
         rows.append((i, a, b))
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
     got = df.select(

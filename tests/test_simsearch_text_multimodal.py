@@ -81,6 +81,89 @@ def test_arrow_ann_paths_tolerate_null_and_ragged_embeddings(spark, embeddings):
     assert ivf.where(F.col("cand_id") % 17 == 0).count() == 0
 
 
+def _dirty_embedding_rows(dim: int) -> list:
+    """(vec_id, embedding) rows for every input class of the embedding
+    laws: NaN, NULL and +-inf elements, zero and near-zero vectors, NULL
+    arrays and wrong widths."""
+    nan, inf = float("nan"), float("inf")
+    base = [float((j % 7) - 3) for j in range(dim)]
+    ortho = [1.0, -1.0] * (dim // 2)  # sums to 0: small dots
+    return [
+        (-1, [nan] + base[1:]),
+        (-2, [None] + base[1:]),
+        (-3, [None, nan] + base[2:]),
+        (-4, [inf] + base[1:]),
+        (-5, [inf, -inf] + base[2:]),
+        (-6, [0.0] * dim),
+        (-7, ortho),
+        (-8, [1e-30] * dim),
+        (-9, None),
+        (-10, base[:3]),
+        (-11, base + [1.0]),
+    ]
+
+
+def test_hyperplane_buckets_arrow_equal_native(spark, embeddings):
+    """The Arrow bucket kernel (guarded matmul) must give the native HOF
+    keys on the fixture embeddings and on every dirty input class: a NaN
+    dot signs 1, a NULL element signs all 0. A NULL or wrong-width array
+    gets NULL from the Arrow path (no bucket) where the native form gives
+    all zeros."""
+    from crocodile_spark.operators.similarity_search import (
+        hyperplane_table_buckets,
+        hyperplane_table_buckets_udf,
+    )
+
+    dirty = spark.createDataFrame(
+        _dirty_embedding_rows(64), "vec_id long, embedding array<float>"
+    )
+    df = embeddings.select("vec_id", "embedding").unionByName(dirty)
+    got = df.select(
+        "vec_id",
+        hyperplane_table_buckets_udf(64, 4, 12, 42)(F.col("embedding")).alias("a"),
+        hyperplane_table_buckets("embedding", 64, 4, 12, 42).alias("n"),
+    ).collect()
+    assert len(got) == embeddings.count() + 11
+    invalid = {-9, -10, -11}
+    for r in got:
+        if r["vec_id"] in invalid:
+            assert r["a"] is None
+        else:
+            assert r["a"] == r["n"], r["vec_id"]
+    by_id = {r["vec_id"]: r["a"] for r in got}
+    assert all(key.endswith("0000") for key in by_id[-2] + by_id[-3])
+    assert all(key.endswith("1111") for key in by_id[-1])
+
+
+def test_ivf_cells_arrow_equal_native_on_dirty_rows(spark):
+    """The Arrow IVF probe order equals the native
+    ``reverse(array_sort(struct<d, cell>))`` order on NaN, NULL-element,
+    +-inf, zero and tiny rows (NaN above every number, ties to the larger
+    cell); NULL and wrong-width arrays get NULL from the Arrow path."""
+    from crocodile_spark.operators.similarity_search import (
+        _ivf_dots_struct,
+        ivf_probe_cells_udf,
+        seeded_random_centroids,
+    )
+
+    cents = seeded_random_centroids(8, 6, 3)
+    df = spark.createDataFrame(
+        _dirty_embedding_rows(8), "vec_id long, embedding array<double>"
+    )
+    dots = _ivf_dots_struct("embedding", cents)
+    native = F.slice(F.reverse(F.array_sort(dots)), 1, 4)
+    got = df.select(
+        "vec_id",
+        ivf_probe_cells_udf(cents, 4)(F.col("embedding")).alias("a"),
+        F.transform(native, lambda s: s["cell"]).alias("n"),
+    ).collect()
+    for r in got:
+        if r["vec_id"] in (-9, -10, -11):
+            assert r["a"] is None
+        else:
+            assert r["a"] == r["n"], r["vec_id"]
+
+
 def test_identify_language(spark):
     rows = [
         (0, "the cat sat on the mat and looked at the dog"),
@@ -244,9 +327,10 @@ def test_ivf_topk_recall(spark, embeddings):
 
 
 def test_ivf_arrow_and_native_paths_agree(spark, embeddings):
-    """VERDICT r4 #3: the Arrow matmul cell law (ivf_probe_cells_udf) and
-    the native plan-literal HOF form must produce identical top-k results
-    -- same cells, same probes, same tie-breaks -- on real fixture data."""
+    """The Arrow guarded-matmul cell law (ivf_probe_cells_udf) and the
+    native plan-literal HOF form must produce identical top-k results --
+    same cells, same probes, same tie-breaks, bit-identical fold cosines
+    -- on real fixture data."""
     from crocodile_spark.operators.similarity_search import (
         ivf_topk,
         seeded_random_centroids,
@@ -263,19 +347,13 @@ def test_ivf_arrow_and_native_paths_agree(spark, embeddings):
     ):
         native = ivf_topk(q, c, cents, k=5, n_probe=4, arrow=False)
         arrow = ivf_topk(q, c, cents, k=5, n_probe=4, arrow=True)
-        cols = ["query_id", "cand_id", "rank"]
+        cols = ["query_id", "cand_id", "rank", "cosine"]
         n_rows = native.count()
         assert n_rows > 0
         assert arrow.count() == n_rows
-        # exact set equality both directions (rank included)
+        # exact set equality both directions (rank and cosine included)
         assert native.select(cols).exceptAll(arrow.select(cols)).count() == 0
         assert arrow.select(cols).exceptAll(native.select(cols)).count() == 0
-        # r8: the fold-kernel mode must match the native HOF form
-        # INCLUDING the cosine values, not just ranks (bit-exact law)
-        exact = ivf_topk(q, c, cents, k=5, n_probe=4, arrow="exact")
-        vcols = cols + ["cosine"]
-        assert native.select(vcols).exceptAll(exact.select(vcols)).count() == 0
-        assert exact.select(vcols).exceptAll(native.select(vcols)).count() == 0
 
 
 def test_media_header_parser_properties():
