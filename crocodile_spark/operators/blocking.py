@@ -11,6 +11,13 @@ records sharing at least one blocking key, where the key families are
   host:<host>       URL host (web-specific signal);
   mh<i>:<band>      MinHash LSH bands over char-3-gram shingles (F5 law).
 
+The signature stage computes every per-record input of these families
+once: ``block_tokens`` and ``mh_bands`` (the band keys, from one
+explode -> ``min`` aggregate over ``text_norm`` shingles) are columns of
+the signature table, so all key families come from one projection and one
+explode over it -- the cap count and both sides of the pair self-join read
+the same cheap projection instead of re-shingling.
+
 Exact duplicates (F3 row hash law, crocodile/processors.py:112) are not a
 key family: hash groups emit linear min-url star edges (exact_dup_pairs),
 immune to block caps and quadratic blowup.
@@ -59,46 +66,6 @@ def salted_count(df: DataFrame, key: str, salt_buckets: int = 8) -> DataFrame:
 def key_count(df: DataFrame, key: str) -> DataFrame:
     """Per-key count; partial aggregation makes this skew-immune."""
     return df.groupBy(key).agg(F.count(F.lit(1)).alias("count"))
-
-
-def minhash_signature(col, num_hashes: int, shingle_size: int = 3):
-    """MinHash signature as array<bigint> -- native expressions only.
-
-    Hash family: xxhash64 with per-slot integer seeds over the distinct
-    char-``shingle_size``-grams of the string. Empty shingle set -> nulls
-    (filtered out by the band keys).
-    """
-    shingles = char_ngrams(col, shingle_size)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def band_keys(sig_col, num_hashes: int, band_size: int):
-    """LSH band keys 'mh<i>:<hash(band)>' from a signature column."""
-    n_bands = num_hashes // band_size
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"mh{b}:"),
-                F.xxhash64(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.element_at(sig_col, b * band_size + j + 1).cast("string")
-                            for j in range(band_size)
-                        ],
-                    )
-                ).cast("string"),
-            )
-            for b in range(n_bands)
-        ]
-    )
 
 
 def mention_df_threshold(cfg: PipelineConfig, n_records: int) -> int:
@@ -161,6 +128,10 @@ def mention_signatures(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per-record mention signature: the ``sig_max_tokens`` RAREST
     distinctive tokens (sorted) + mention_norm.
 
+    Reads ``url``, ``tokens`` and ``text_norm`` from ``records``: the
+    signature table also carries ``mh_bands``, the record's MinHash band
+    keys over ``text_norm`` shingles (see :func:`signatures_from_distinctive`).
+
     This is the engine's analog of crocodile's normalized mention (F1 law,
     crocodile/processors.py:134): the string key under which candidate sets
     are shared (J5). Records with no distinctive token get an empty
@@ -195,6 +166,11 @@ def signatures_from_distinctive(
     records: DataFrame, dist: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """The signature aggregation law over prepared (url, token, df) rows.
+
+    Reads ``url``, ``text_norm`` and the columns the caller carries on
+    ``records``; adds ``sig_tokens``, ``block_tokens``, ``mh_bands`` (the
+    record's :func:`minhash_bands`, empty when its text has no shingle)
+    and ``mention_norm``.
 
     Factored out of :func:`mention_signatures` so the incremental path
     (incremental_er.incremental_signatures) applies the IDENTICAL law to
@@ -231,20 +207,26 @@ def signatures_from_distinctive(
     empty = F.array().cast("array<string>")
     return (
         records.join(sig, "url", "left")
+        .join(minhash_bands(records, cfg), "url", "left")
         .withColumn("sig_tokens", F.coalesce(F.col("sig_tokens"), empty))
         .withColumn("block_tokens", F.coalesce(F.col("block_tokens"), empty))
+        .withColumn("mh_bands", F.coalesce(F.col("mh_bands"), empty))
         .withColumn("mention_norm", F.concat_ws(" ", F.col("sig_tokens")))
     )
 
 
-def minhash_band_keys(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """MinHash LSH band keys via explode -> aggregate (the scalable form).
+def minhash_bands(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(url, mh_bands): the MinHash LSH band keys ``mh<b>:<hash(band)>``
+    over the char-``shingle_size``-grams of ``text_norm``, one array per
+    record. Records with no shingle get no row.
 
-    Shingles are exploded once and each of the k hash slots is a plain
-    ``min`` aggregate (map-side partial aggregation applies), so the plan
-    carries k tiny expressions instead of k inlined copies of the shingle
-    generator -- the inlined form falls out of whole-stage codegen under
-    ``explode`` and goes quadratic in interpreted mode.
+    Explode -> aggregate: shingles are exploded once and each of the k
+    hash slots is a plain ``min`` aggregate (map-side partial aggregation
+    applies), so the plan carries k tiny expressions instead of k inlined
+    copies of the shingle generator. The per-row form
+    ``array_min(transform(shingles, xxhash64))`` is an interpreted
+    higher-order function and was 2.8-4.9x slower on ~480-char texts
+    (BENCH.md, "One-pass blocking keys").
     """
     k, bsz = cfg.minhash_num_hashes, cfg.minhash_band_size
     sh = records.select(
@@ -264,7 +246,23 @@ def minhash_band_keys(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
         )
         for b in range(k // bsz)
     ]
-    return sig.select("url", F.explode(F.array(*bands)).alias("key"))
+    return sig.select("url", F.array(*bands).alias("mh_bands"))
+
+
+def _token_key_array():
+    return F.transform(F.col("block_tokens"), lambda t: F.concat(F.lit("tok:"), t))
+
+
+def _host_key_array():
+    host = F.col("host")
+    return F.when(
+        host.isNotNull() & (F.length(host) > 0),
+        F.array(F.concat(F.lit("host:"), host)),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _explode_keys(sigs: DataFrame, *families) -> DataFrame:
+    return sigs.select("url", F.explode(F.concat(*families)).alias("key"))
 
 
 def token_keys(sigs: DataFrame) -> DataFrame:
@@ -273,33 +271,27 @@ def token_keys(sigs: DataFrame) -> DataFrame:
     family whose keys change as the corpus grows (document frequencies
     move under the relative cutoff) -- incremental resolution must
     recompute it over the union, while :func:`static_keys` can be stored."""
-    return sigs.select(
-        "url",
-        F.explode(
-            F.transform(F.col("block_tokens"), lambda t: F.concat(F.lit("tok:"), t))
-        ).alias("key"),
-    )
+    return _explode_keys(sigs, _token_key_array())
 
 
 def static_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The per-record STATIC key families: host + MinHash bands. Neither
-    depends on any corpus-level statistic, so a record's static keys never
-    change once computed -- an incremental resolution stores them with the
-    resolution state and computes them only for the delta (the MinHash
-    shingling pass is the dominant linear cost of the blocking stage)."""
-    host = sigs.where(
-        F.col("host").isNotNull() & (F.length("host") > 0)
-    ).select("url", F.concat(F.lit("host:"), F.col("host")).alias("key"))
-    return host.union(minhash_band_keys(sigs, cfg))
+    """The per-record STATIC key families: host + MinHash bands (the
+    signature table's ``mh_bands``). Neither depends on any corpus-level
+    statistic, so a record's static keys never change once computed -- an
+    incremental resolution stores them with the resolution state."""
+    return _explode_keys(sigs, _host_key_array(), F.col("mh_bands"))
 
 
 def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Union of the four key families as (url, key) rows."""
+    """The tok/host/MinHash key families as (url, key) rows, from one
+    projection and one explode over the signature table."""
     # each family emits unique (url, key) rows by construction (block_tokens
-    # is a set; host is one row; band index is in the key prefix), so no
+    # is a set; host is one key; band index is in the key prefix), so no
     # dedup shuffle is needed here. Exact-duplicate groups (F3 row hash)
     # are NOT a key family: they are handled linearly by exact_dup_pairs.
-    return token_keys(sigs).union(static_keys(sigs, cfg))
+    return _explode_keys(
+        sigs, _token_key_array(), _host_key_array(), F.col("mh_bands")
+    )
 
 
 def cap_blocks(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -330,21 +330,23 @@ def delta_pairs(
     O(|delta| * avg_block_size), not O(corpus^2).
 
     With ``existing_static_keys`` (the stored (url, key) host+MinHash rows
-    of the already-resolved records), the MinHash shingling pass runs over
-    the DELTA only; the corpus-DF-dependent ``tok:`` family is still
-    recomputed over the union (a token-level aggregate, linear but far
-    cheaper than shingling). The resulting key set is BYTE-IDENTICAL to
-    the full recompute -- static keys are per-record constants -- so pair
-    generation and the final partition are unchanged.
+    of the already-resolved records), only the NEW records' static keys
+    are projected from ``sigs``; the corpus-DF-dependent ``tok:`` family
+    is still recomputed over the union. Shingling itself happens in the
+    signature stage (``mh_bands``), so on the stored-state path it runs
+    over the rebuilt signatures only -- the delta plus the old records
+    whose signature the DF merge rebuilt. The resulting key set is
+    BYTE-IDENTICAL to the full recompute -- static keys are per-record
+    constants -- so pair generation and the final partition are unchanged.
 
     ``seed_urls`` (r7, the re-crawl upsert path) decouples the two roles
     ``new_urls`` plays: ``new_urls`` stays "records with no stored static
-    keys" (fresh shingling), while the SEED -- which urls' keys anchor
-    pair generation, the delta-held-key restriction, and the dup-star
-    scope -- widens to ``seed_urls``. Old records whose signature was
-    rebuilt (or whose cluster was dissolved) then re-enter pairing with
-    their STORED static keys, no re-shingling. Default (None) keeps the
-    original law: seed == new_urls.
+    keys" (keys projected from ``sigs``), while the SEED -- which urls'
+    keys anchor pair generation, the delta-held-key restriction, and the
+    dup-star scope -- widens to ``seed_urls``. Old records whose signature
+    was rebuilt (or whose cluster was dissolved) then re-enter pairing
+    with their STORED static keys. Default (None) keeps the original law:
+    seed == new_urls.
     """
     seed = new_urls if seed_urls is None else seed_urls
     if existing_static_keys is None:
@@ -380,7 +382,7 @@ def delta_pairs(
         else:
             seed_sigs = sigs.join(seed, "url", "semi")
             # seeds that are old records pair through their STORED static
-            # keys; only content-new urls (new_urls) were re-shingled
+            # keys; only content-new urls (new_urls) take theirs from sigs
             seed_static = delta_static.union(
                 existing_static_keys.select("url", "key").join(
                     seed, "url", "semi"
@@ -520,8 +522,8 @@ def incremental_er(
     convention cluster_id = min member url. ``existing_static_keys``
     (optional): the stored host+MinHash (url, key) rows of the resolved
     corpus -- pass ``static_keys(base_signatures, cfg)`` persisted at base
-    resolution time to skip re-shingling the corpus; the key set (and
-    therefore the output) is identical either way.
+    resolution time to skip projecting the corpus' static keys; the key
+    set (and therefore the output) is identical either way.
 
     ``existing_signatures`` + ``existing_token_df`` +
     ``existing_n_records`` (r6, pass all three): the stored signature

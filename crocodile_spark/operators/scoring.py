@@ -27,6 +27,7 @@ from crocodile_spark.functions.similarity import (
     ngram_jaccard,
     set_jaccard,
 )
+from crocodile_spark.operators.blocking import spread
 
 # ed/jaccard/jaccardNgram/desc are the reference's X1 slots; me_score is the
 # token-set-aware edit similarity (Monge-Elkan, native Levenshtein inner
@@ -215,8 +216,13 @@ def score(pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     weights (logistic_weights_emb.json) with a literal fallback weight.
     Output schema gains the emb_cosine column only when the input has
     embeddings, so embedding-less corpora are byte-identical to r5.
+
+    ``pairs`` goes through the :func:`~blocking.spread` width guard first:
+    a deduplicated pair table is small in bytes, so AQE coalesces its
+    shuffle to one partition, and the per-pair feature projection would
+    then run as a single task.
     """
-    df = attach_pair_features(pairs, sigs)
+    df = attach_pair_features(spread(pairs, downstream_heavy=True), sigs)
     has_emb = EMB_FEATURE in df.columns
     features = PAIR_FEATURES + ((EMB_FEATURE,) if has_emb else ())
     df = heuristic_score(df, features=features)

@@ -149,7 +149,7 @@ def main() -> None:
     full_keys = token_keys(full.signatures).unionByName(
         static_keys(full.signatures, cfg)
     ).persist()
-    # MinHash band keys are formatted "mh<band>:<hash>" (blocking.band_keys
+    # MinHash band keys are formatted "mh<band>:<hash>" (blocking.minhash_bands
     # uses F.lit(f"mh{b}:")) -- match the numbered prefix (ADVICE r7: a
     # bare "mh:" prefix never matched, binning every band key as "other")
     fam = F.when(F.col("key").startswith("tok:"), "tok").otherwise(

@@ -10,7 +10,7 @@ from crocodile_spark.operators.blocking import (
     block,
     cap_blocks,
     generate_pairs,
-    minhash_signature,
+    minhash_bands,
     salted_count,
 )
 from crocodile_spark.operators.normalize_stage import normalize_pages
@@ -45,18 +45,15 @@ def test_generate_pairs_orientation_and_dedup(spark):
 
 
 def test_minhash_identical_strings_share_signature(spark):
-    df = spark.createDataFrame(
-        [("same text here", "same text here", "other wording entirely")],
-        ["a", "b", "c"],
+    records = spark.createDataFrame(
+        [("a", "same text here"), ("b", "same text here"), ("c", "other wording entirely")],
+        ["url", "text_norm"],
     )
-    row = df.select(
-        minhash_signature(F.col("a"), 8).alias("sa"),
-        minhash_signature(F.col("b"), 8).alias("sb"),
-        minhash_signature(F.col("c"), 8).alias("sc"),
-    ).collect()[0]
-    assert row["sa"] == row["sb"]
-    assert row["sa"] != row["sc"]
-    assert len(row["sa"]) == 8
+    cfg = PipelineConfig(minhash_num_hashes=8, minhash_band_size=1)
+    bands = {r["url"]: r["mh_bands"] for r in minhash_bands(records, cfg).collect()}
+    assert bands["a"] == bands["b"]
+    assert bands["a"] != bands["c"]
+    assert len(bands["a"]) == 8
 
 
 def test_block_stage_recall_on_corpus(spark, corpus_dfs):
@@ -208,3 +205,119 @@ def test_token_rich_records_keep_recall_under_sig_truncation(spark):
     sigs2, _ = block(records, tight)
     for r in sigs2.select("block_tokens").collect():
         assert len(r["block_tokens"]) == 5
+
+
+# ---- one-projection key families vs the per-family union law -------------
+
+
+def _union_law_keys(sigs, cfg):
+    """Reference key law: ``tok:`` rows, host rows and explode -> aggregate
+    MinHash band rows, each family from its own scan of ``sigs`` (bands
+    re-derived from ``text_norm``), unioned. Returns (all keys, static)."""
+    from crocodile_spark.functions.normalize import char_ngrams
+
+    tok = sigs.select(
+        "url",
+        F.explode(
+            F.transform(F.col("block_tokens"), lambda t: F.concat(F.lit("tok:"), t))
+        ).alias("key"),
+    )
+    host = sigs.where(F.col("host").isNotNull() & (F.length("host") > 0)).select(
+        "url", F.concat(F.lit("host:"), F.col("host")).alias("key")
+    )
+    k, bsz = cfg.minhash_num_hashes, cfg.minhash_band_size
+    sh = sigs.select(
+        "url", F.explode(char_ngrams(F.col("text_norm"), cfg.shingle_size)).alias("sh")
+    )
+    mins = sh.groupBy("url").agg(
+        *[F.min(F.xxhash64("sh", F.lit(i))).alias(f"mh{i}") for i in range(k)]
+    )
+    bands = mins.select(
+        "url",
+        F.explode(
+            F.array(
+                *[
+                    F.concat(
+                        F.lit(f"mh{b}:"),
+                        F.xxhash64(
+                            F.concat_ws(
+                                "_",
+                                *[
+                                    F.col(f"mh{b * bsz + j}").cast("string")
+                                    for j in range(bsz)
+                                ],
+                            )
+                        ).cast("string"),
+                    )
+                    for b in range(k // bsz)
+                ]
+            )
+        ).alias("key"),
+    )
+    static = host.union(bands)
+    return tok.union(static), static
+
+
+def _key_rows(keys):
+    return sorted((r["url"], r["key"]) for r in keys.collect())
+
+
+def _pair_digest(pairs):
+    r = pairs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("url_a", "url_b")).alias("h"),
+    ).first()
+    return int(r["n"]), int(r["h"] or 0)
+
+
+def test_one_projection_keys_equal_union_law(spark, corpus_dfs):
+    """blocking_keys / static_keys (one explode over the signature table's
+    block_tokens, host and mh_bands) emit exactly the (url, key) rows of
+    the per-family union law, and pairs_from_signatures yields the same
+    pair set, on the datagen corpus plus dirty rows: NULL and empty host,
+    NULL and empty text, text shorter than a shingle, exact duplicates."""
+    from crocodile_spark.functions.normalize import row_hash, tokenize
+    from crocodile_spark.operators.blocking import (
+        blocking_keys,
+        exact_dup_pairs,
+        mention_signatures,
+        pairs_from_signatures,
+        static_keys,
+    )
+
+    cols = ["url", "host", "text_norm", "tokens", "row_hash"]
+    corpus = normalize_pages(corpus_dfs[0], use_html=True).select(*cols)
+    dup_text = corpus.orderBy("url").first()["text_norm"]
+    dirty = spark.createDataFrame(
+        [
+            ("dirty://a/null-host", None, "acme widget works berlin"),
+            ("dirty://a/empty-host", "", "acme widget works berlin"),
+            ("dirty://a/null-text", "dirty.example", None),
+            ("dirty://a/empty-text", "dirty.example", ""),
+            ("dirty://a/short-text", "dirty.example", "ab"),
+            ("dirty://a/dup-1", "dup.example", dup_text),
+            ("dirty://a/dup-2", None, dup_text),
+        ],
+        "url string, host string, text_norm string",
+    ).select(
+        "url",
+        "host",
+        "text_norm",
+        tokenize(F.col("text_norm")).alias("tokens"),
+        row_hash(F.col("text_norm")).alias("row_hash"),
+    )
+    records = corpus.unionByName(dirty)
+    for cfg in (PipelineConfig(shuffle_partitions=4), PipelineConfig(max_block_size=8)):
+        sigs = mention_signatures(records, cfg).localCheckpoint(eager=True)
+        bands = {r["url"]: r["mh_bands"] for r in sigs.collect()}
+        for url in ("dirty://a/null-text", "dirty://a/empty-text", "dirty://a/short-text"):
+            assert bands[url] == []
+        ref_all, ref_static = _union_law_keys(sigs, cfg)
+        assert _key_rows(blocking_keys(sigs, cfg)) == _key_rows(ref_all)
+        assert _key_rows(static_keys(sigs, cfg)) == _key_rows(ref_static)
+        ref_pairs = (
+            generate_pairs(cap_blocks(ref_all, cfg), cfg, distinct=False)
+            .union(exact_dup_pairs(sigs))
+            .dropDuplicates(["url_a", "url_b"])
+        )
+        assert _pair_digest(pairs_from_signatures(sigs, cfg)) == _pair_digest(ref_pairs)

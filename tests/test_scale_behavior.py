@@ -83,8 +83,10 @@ def test_signature_survives_tokens_hotter_than_block_cap(spark):
     rows = []
     for i in range(n):
         tok = "zqxname" if i < hot_df else f"fill{i:05d}"
-        rows.append((f"https://h.x/p{i}", [tok, f"uniq{i:05d}"]))
-    records = spark.createDataFrame(rows, "url string, tokens array<string>")
+        rows.append((f"https://h.x/p{i}", f"{tok} uniq{i:05d}", [tok, f"uniq{i:05d}"]))
+    records = spark.createDataFrame(
+        rows, "url string, text_norm string, tokens array<string>"
+    )
     cfg = PipelineConfig(max_block_size=64)
     sigs = mention_signatures(records, cfg)
     hot = sigs.where(F.array_contains("tokens", "zqxname"))
@@ -107,7 +109,10 @@ def test_signature_k_rarest_truncation(spark):
     # 'common' appears in 5 records, each rare token in 1
     rows = [("u0", ["common"] + [f"r{j}" for j in range(10)])]
     rows += [(f"u{i}", ["common"]) for i in range(1, 5)]
-    records = spark.createDataFrame(rows, "url string, tokens array<string>")
+    rows = [(u, " ".join(toks), toks) for u, toks in rows]
+    records = spark.createDataFrame(
+        rows, "url string, text_norm string, tokens array<string>"
+    )
     cfg = PipelineConfig(sig_max_tokens=3, mention_df_floor=5)
     sigs = {r["url"]: r["sig_tokens"] for r in mention_signatures(records, cfg).collect()}
     # u0 keeps the 3 rarest (df=1 tokens, token-text tie-break), not 'common' (df=5)
