@@ -8,17 +8,44 @@ machinery (status/ml_status claims at crocodile/crocodile.py:158-173 and
 crocodile/ml.py:110-128): one lineage row per (stage, partition) with row
 counts and wall time; a restarted run skips stages whose lineage says DONE
 (the anti-join resume of SURVEY.md section 7).
+
+Spark writes the stage data; the lineage bookkeeping runs on the driver
+with pyarrow and launches no Spark job. ``_lineage/`` holds one small
+parquet file per stage piece, columns ``partition_id int, rows long,
+stage, wall_s, status, ts``:
+
+- ``<stage>.parts.parquet``: one DONE row per part file of a ``run_stage``
+  output; ``partition_id`` is the file's index in name order and ``rows``
+  its parquet-footer row count;
+- ``<stage>.bucket-<b>.parquet``: the DONE row of bucket ``b`` of a
+  ``run_stage_bucketed`` stage (``partition_id`` = ``b``);
+- ``<stage>.STAGE_DONE.parquet``: the completion sentinel
+  (``partition_id`` -1, ``rows`` 0).
+
+A piece is written to a dot-prefixed temp name and renamed into place, so
+writing it again replaces it and forgetting it deletes it: no lineage write
+touches another stage's file, and a kill mid-write leaves only a temp file
+that Spark, DuckDB (``_lineage/*.parquet``) and this module all skip.
+Roots written before this layout hold Spark-written lineage part files that
+cannot be replaced by name; rebuild them.
 """
 
 from __future__ import annotations
 
+import contextlib
+import datetime
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -47,6 +74,36 @@ STAGE_PHASES = {
     "clusters": "CLUSTER",
 }
 
+LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("rows", pa.int64()),
+    ("stage", pa.string()),
+    ("wall_s", pa.float64()),
+    ("status", pa.string()),
+    ("ts", pa.timestamp("us", tz="UTC")),
+])
+
+
+def _parquet_files(d: str) -> list[str]:
+    """Committed parquet files of a directory in name order; Spark and
+    DuckDB likewise skip ``_``/``.``-prefixed (metadata, temp) files."""
+    return sorted(
+        os.path.join(d, f)
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _file_rows(d: str) -> list[int]:
+    """Row count of each part file of a written directory, from footers."""
+    return [pq.read_metadata(f).num_rows for f in _parquet_files(d)]
+
+
+def _remove(*paths: str) -> None:
+    for p in paths:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(p)
+
 
 class Lakehouse:
     """Parquet-backed stage store with lineage rows and stage-level resume."""
@@ -54,7 +111,7 @@ class Lakehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        os.makedirs(self._lineage_path(), exist_ok=True)
 
     # -- paths -------------------------------------------------------------
     def _stage_path(self, name: str) -> str:
@@ -62,6 +119,9 @@ class Lakehouse:
 
     def _lineage_path(self) -> str:
         return os.path.join(self.root, "_lineage")
+
+    def _lineage_file(self, name: str, piece: str) -> str:
+        return os.path.join(self._lineage_path(), f"{name}.{piece}.parquet")
 
     def _marker(self, name: str) -> str:
         return os.path.join(self.root, f"_{name}.DONE.json")
@@ -74,107 +134,85 @@ class Lakehouse:
         return os.path.exists(self._marker(name))
 
     def lineage(self) -> DataFrame | None:
-        p = self._lineage_path()
-        if not os.path.exists(p):
-            return None
-        return self.spark.read.parquet(p)
+        files = _parquet_files(self._lineage_path())
+        return self.spark.read.parquet(*files) if files else None
 
-    def _write_lineage_rows(
-        self, name: str, part_counts: DataFrame, wall_s: float
+    def _lineage_rows(self) -> list[dict]:
+        return [
+            r for f in _parquet_files(self._lineage_path())
+            for r in pq.read_table(f).to_pylist()
+        ]
+
+    def _write_lineage(
+        self,
+        name: str,
+        piece: str,
+        parts: list[tuple[int, int]],
+        wall_s: float,
+        status: str = "DONE",
     ) -> None:
-        """Plain append of per-partition lineage rows (bucketed mode: each
-        bucket commits exactly one new row, stale rows were removed by
-        invalidate_buckets)."""
-        (
-            part_counts.withColumn("stage", F.lit(name))
-            .withColumn("wall_s", F.lit(wall_s))
-            .withColumn("status", F.lit("DONE"))
-            .withColumn("ts", F.current_timestamp())
-            .write.mode("append")
-            .parquet(self._lineage_path())
+        """Commit one lineage piece: a row per (partition_id, rows) pair."""
+        ts = datetime.datetime.now(datetime.timezone.utc)
+        table = pa.Table.from_pylist(
+            [
+                {"partition_id": p, "rows": n, "stage": name, "wall_s": wall_s,
+                 "status": status, "ts": ts}
+                for p, n in parts
+            ],
+            schema=LINEAGE_SCHEMA,
         )
+        tmp = os.path.join(self._lineage_path(), f".{name}.{piece}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, self._lineage_file(name, piece))
 
-    def _write_stage_done_row(self, name: str, wall_s: float) -> None:
-        """Sentinel lineage row (partition_id=-1, rows=0, STAGE_DONE):
-        stage COMPLETION is thereby lineage-expressible. Bucketed stages
-        write per-bucket DONE rows while still incomplete, so 'any DONE row
-        exists' must not be read as stage completion."""
-        row = self.spark.createDataFrame([(-1, 0)], "partition_id int, rows long")
-        (
-            row.withColumn("stage", F.lit(name))
-            .withColumn("wall_s", F.lit(wall_s))
-            .withColumn("status", F.lit("STAGE_DONE"))
-            .withColumn("ts", F.current_timestamp())
-            .write.mode("append")
-            .parquet(self._lineage_path())
-        )
+    def _complete(self, name: str, out: DataFrame, rows: int, wall: float) -> None:
+        """STAGE_DONE sentinel row, then the marker: stage COMPLETION is
+        thereby lineage-expressible. Bucketed stages write per-bucket DONE
+        rows while still incomplete, so 'any DONE row exists' must not be
+        read as stage completion. The marker keeps the output schema so a
+        resume reads the stage without a schema-inference job."""
+        self._write_lineage(name, "STAGE_DONE", [(-1, 0)], wall, status="STAGE_DONE")
+        with open(self._marker(name), "w") as f:
+            json.dump({"stage": name, "rows": rows, "wall_s": wall,
+                       "schema": out.schema.jsonValue()}, f)
 
-    def _write_lineage(self, name: str, part_counts: DataFrame, wall_s: float) -> None:
-        p = self._lineage_path()
-        existing = self.lineage()
-        if (
-            existing is not None
-            and existing.where(F.col("stage") == name).limit(1).count() > 0
-        ):
-            # stage re-execution after a kill/invalidate: replace this
-            # stage's lineage rows instead of appending a duplicate set
-            # (lineage totals would double-count otherwise). Materialize the
-            # kept rows before overwriting the directory they were read from.
-            new = (
-                part_counts.withColumn("stage", F.lit(name))
-                .withColumn("wall_s", F.lit(wall_s))
-                .withColumn("status", F.lit("DONE"))
-                .withColumn("ts", F.current_timestamp())
-            )
-            kept = existing.where(F.col("stage") != name).localCheckpoint(eager=True)
-            kept.unionByName(new).write.mode("overwrite").parquet(p)
-        else:
-            self._write_lineage_rows(name, part_counts, wall_s)
+    def _resumed(self, name: str) -> tuple[DataFrame, int]:
+        with open(self._marker(name)) as f:
+            meta = json.load(f)
+        schema = StructType.fromJson(meta["schema"])
+        return self.spark.read.schema(schema).parquet(self._stage_path(name)), meta["rows"]
 
     # -- stage execution with resume ---------------------------------------
     def run_stage(self, name: str, build) -> StageResult:
         """Run ``build() -> DataFrame`` unless this stage is already DONE.
 
-        On completion the stage output is written to parquet, per-partition
+        On completion the stage output is written to parquet, per-file
         row counts go to ``_lineage``, and a DONE marker (with totals) makes
         the stage skippable on restart.
         """
-        path = self._stage_path(name)
         if self.is_done(name):
-            df = self.spark.read.parquet(path)
-            with open(self._marker(name)) as f:
-                meta = json.load(f)
-            return StageResult(name, df, meta["rows"], 0.0, resumed=True)
+            df, rows = self._resumed(name)
+            return StageResult(name, df, rows, 0.0, resumed=True)
 
+        path = self._stage_path(name)
         t0 = time.time()
-        df = build()
-        df.write.mode("overwrite").parquet(path)
+        build().write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
-        # per-partition lineage of the materialized output
-        part_counts = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-        )
+        counts = _file_rows(path)
+        rows = sum(counts)
         wall = time.time() - t0
-        self._write_lineage(name, part_counts, wall)
-        self._write_stage_done_row(name, wall)
-        rows = out.count()
-        with open(self._marker(name), "w") as f:
-            json.dump({"stage": name, "rows": rows, "wall_s": wall}, f)
+        self._write_lineage(name, "parts", list(enumerate(counts)), wall)
+        self._complete(name, out, rows, wall)
         return StageResult(name, out, rows, wall, resumed=False)
 
     # -- bucketed stage execution: mid-stage (per-partition) resume ---------
-    def _done_buckets(self, name: str) -> set[int]:
-        lin = self.lineage()
-        if lin is None:
-            return set()
-        rows = (
-            lin.where((F.col("stage") == name) & (F.col("status") == "DONE"))
-            .select("partition_id")
-            .collect()
-        )
-        return {int(r["partition_id"]) for r in rows}
+    def _done_buckets(self, name: str) -> dict[int, int]:
+        """Committed buckets of a stage -> their row counts."""
+        return {
+            r["partition_id"]: r["rows"]
+            for r in self._lineage_rows()
+            if r["stage"] == name and r["status"] == "DONE"
+        }
 
     def _staging_path(self, name: str) -> str:
         return os.path.join(self.root, f"_{name}__staged_input")
@@ -210,12 +248,8 @@ class Lakehouse:
             return input_df.withColumn("part_bucket", bucket_expr)
 
     def _drop_staging(self, name: str) -> None:
-        import shutil
-
         shutil.rmtree(self._staging_path(name), ignore_errors=True)
-        m = self._staging_marker(name)
-        if os.path.exists(m):
-            os.remove(m)
+        _remove(self._staging_marker(name))
 
     def run_stage_bucketed(
         self,
@@ -244,14 +278,12 @@ class Lakehouse:
         bucket-local (applied independently per input slice), like the
         reference's row-batch processor.
         """
-        path = self._stage_path(name)
         if self.is_done(name):
-            df = self.spark.read.parquet(path).drop("part_bucket")
-            with open(self._marker(name)) as f:
-                meta = json.load(f)
-            return StageResult(name, df, meta["rows"], 0.0, resumed=True,
-                               recomputed_buckets=[])
+            df, rows = self._resumed(name)
+            return StageResult(name, df.drop("part_bucket"), rows, 0.0,
+                               resumed=True, recomputed_buckets=[])
 
+        path = self._stage_path(name)
         t0 = time.time()
         # a resume with a DIFFERENT bucket count would replay stale pmod-K
         # dirs against a pmod-N range (silently losing or duplicating rows):
@@ -259,18 +291,11 @@ class Lakehouse:
         meta_path = self._bucket_meta(name)
         if os.path.exists(meta_path):
             with open(meta_path) as f:
-                recorded = json.load(f).get("n_buckets")
+                recorded = json.load(f)["n_buckets"]
             if recorded != n_buckets:
-                import shutil
-
                 shutil.rmtree(path, ignore_errors=True)
                 self._drop_staging(name)
-                lin = self.lineage()
-                if lin is not None:
-                    kept = lin.where(F.col("stage") != name).localCheckpoint(
-                        eager=True
-                    )
-                    kept.write.mode("overwrite").parquet(self._lineage_path())
+                _remove(*(self._lineage_file(name, f"bucket-{b}") for b in range(recorded)))
         with open(meta_path, "w") as f:
             json.dump({"stage": name, "n_buckets": n_buckets}, f)
 
@@ -287,48 +312,32 @@ class Lakehouse:
         def run_bucket(b: int) -> tuple[int, int, float]:
             tb = time.time()
             slice_b = staged.where(F.col("part_bucket") == b).drop("part_bucket")
-            transform(slice_b).write.mode("overwrite").parquet(
-                f"{path}/part_bucket={b}"
-            )
-            n = self.spark.read.parquet(f"{path}/part_bucket={b}").count()
-            return b, n, time.time() - tb
-
-        from concurrent.futures import ThreadPoolExecutor, as_completed
+            bucket_path = f"{path}/part_bucket={b}"
+            transform(slice_b).write.mode("overwrite").parquet(bucket_path)
+            return b, sum(_file_rows(bucket_path)), time.time() - tb
 
         workers = max(1, min(BUCKET_CONCURRENCY, len(missing)))
         with ThreadPoolExecutor(max_workers=workers) as pool:
             futs = [pool.submit(run_bucket, b) for b in missing]
             for fut in as_completed(futs):
                 b, n, wall_b = fut.result()
-                part_counts = self.spark.createDataFrame(
-                    [(b, n)], "partition_id int, rows long"
-                )
-                self._write_lineage_rows(name, part_counts, wall_b)
+                self._write_lineage(name, f"bucket-{b}", [(b, n)], wall_b)
+                done[b] = n
         wall = time.time() - t0
-        out = self.spark.read.parquet(path).drop("part_bucket")
-        rows = out.count()
-        self._write_stage_done_row(name, wall)
-        with open(self._marker(name), "w") as f:
-            json.dump({"stage": name, "rows": rows, "wall_s": wall}, f)
+        out = self.spark.read.parquet(path)
+        rows = sum(done.values())
+        self._complete(name, out, rows, wall)
         self._drop_staging(name)
-        return StageResult(name, out, rows, wall, resumed=False,
-                           recomputed_buckets=missing)
+        return StageResult(name, out.drop("part_bucket"), rows, wall,
+                           resumed=False, recomputed_buckets=missing)
 
     def invalidate_buckets(self, name: str, buckets: list[int]) -> None:
         """Simulate a mid-stage kill: forget specific buckets of a stage
         (drop their data dirs + lineage rows + the stage DONE marker)."""
-        import shutil
-
         self.invalidate(name)
         for b in buckets:
             shutil.rmtree(f"{self._stage_path(name)}/part_bucket={b}", ignore_errors=True)
-        lin = self.lineage()
-        if lin is None:
-            return
-        kept = lin.where(
-            ~((F.col("stage") == name) & F.col("partition_id").isin(buckets))
-        ).localCheckpoint(eager=True)
-        kept.write.mode("overwrite").parquet(self._lineage_path())
+            _remove(self._lineage_file(name, f"bucket-{b}"))
 
     # -- progress surface (Q7 SSE analog) -----------------------------------
     def progress_phases(
@@ -380,43 +389,19 @@ class Lakehouse:
         incomplete, no lineage progress for ``timeout_s`` seconds marks the
         remaining stages STUCK. Before anything has run there is no
         progress signal yet -> PENDING, not stuck."""
-        import datetime
-
-        lin = self.lineage()
-        if lin is None:
+        rows = self._lineage_rows()
+        if not rows:
             return []
-        done = {
-            r["stage"]
-            for r in lin.where(F.col("status") == "STAGE_DONE")
-            .select("stage").distinct().collect()
-        }
+        done = {r["stage"] for r in rows if r["status"] == "STAGE_DONE"}
         missing = [s for s in expected_stages if s not in done]
         if not missing:
             return []
-        last = lin.agg(F.max("ts").alias("t")).collect()[0]["t"]
-        if last is None:
-            return []
-        age = (datetime.datetime.now() - last).total_seconds()
+        last = max(r["ts"] for r in rows)
+        age = (datetime.datetime.now(datetime.timezone.utc) - last).total_seconds()
         return missing if age > timeout_s else []
 
     def invalidate(self, name: str) -> None:
         """Simulate a mid-run kill: forget that a stage completed (marker
         plus the STAGE_DONE sentinel lineage row -- per-bucket rows stay,
         they are the resume state)."""
-        m = self._marker(name)
-        if os.path.exists(m):
-            os.remove(m)
-        lin = self.lineage()
-        if lin is None:
-            return
-        has_sentinel = (
-            lin.where(
-                (F.col("stage") == name) & (F.col("status") == "STAGE_DONE")
-            ).limit(1).count()
-            > 0
-        )
-        if has_sentinel:
-            kept = lin.where(
-                ~((F.col("stage") == name) & (F.col("status") == "STAGE_DONE"))
-            ).localCheckpoint(eager=True)
-            kept.write.mode("overwrite").parquet(self._lineage_path())
+        _remove(self._marker(name), self._lineage_file(name, "STAGE_DONE"))

@@ -14,7 +14,13 @@ Cluster usage:
 Local sandbox: python jobs/run_pipeline.py --input ... --output ... --master local[32]
 
 Resume: re-running with the same --output skips stages whose lineage says
-DONE (per-partition lineage rows live under <output>/_lineage).
+DONE. <output>/_lineage holds one small parquet file per stage piece,
+written on the driver: per-file rows of a stage output (partition_id = the
+part file's index), one row per bucket of the bucketed scored stage
+(partition_id = the bucket), and a STAGE_DONE sentinel per stage. A killed
+run recomputes only the buckets without a lineage file. Roots written
+before this layout hold Spark-written lineage part files and must be
+rebuilt.
 """
 
 from __future__ import annotations

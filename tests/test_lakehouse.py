@@ -207,3 +207,127 @@ def test_progress_reports_in_progress_for_partial_bucketed_stage(spark, tmp_path
     st = {r["stage"]: r["status"] for r in lake.progress_phases().collect()}
     assert st["scored"] == "IN_PROGRESS"
     assert "scored" in lake.stuck_stages(timeout_s=-1.0)
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches from this thread."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lakehouse-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lakehouse bookkeeping probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    time.sleep(0.5)  # the status tracker learns of jobs from the listener bus
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bookkeeping_runs_no_spark_job(spark, tmp_path):
+    """Lineage reads, writes and deletes run on the driver: forgetting a
+    stage or bucket, the STUCK check and a resume launch no Spark job, and
+    a fresh stage costs no more than writing and re-reading its output."""
+    lake = Lakehouse(spark, str(tmp_path / "lake9"))
+    df = spark.range(200).selectExpr("CAST(id AS STRING) AS url", "id AS v").repartition(3)
+    tf = lambda b: b.selectExpr("url", "v * 2 AS v2")  # noqa: E731
+
+    bare = str(tmp_path / "bare")
+    n_bare = _jobs_in_group(
+        spark, lambda: (df.write.parquet(bare), spark.read.parquet(bare))
+    )
+    assert _jobs_in_group(spark, lambda: lake.run_stage("a", lambda: df)) <= n_bare
+    lake.run_stage_bucketed("b", df, tf, "url", n_buckets=4)
+
+    assert _jobs_in_group(spark, lambda: lake.run_stage("a", lambda: df)) == 0
+    resumed = []
+    assert _jobs_in_group(
+        spark, lambda: resumed.append(lake.run_stage_bucketed("b", df, tf, "url", n_buckets=4))
+    ) == 0
+    assert resumed[0].resumed and resumed[0].df.count() == 200
+    assert _jobs_in_group(spark, lambda: lake.stuck_stages(timeout_s=-1.0)) == 0
+    assert _jobs_in_group(spark, lambda: lake.invalidate_buckets("b", [1])) == 0
+    assert _jobs_in_group(spark, lambda: lake.invalidate("a")) == 0
+
+
+def _lineage_snapshot(root: str) -> dict:
+    """lineage file name -> (sha256 of its bytes, stages it holds)."""
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = os.path.join(root, "_lineage")
+    snap = {}
+    for f in os.listdir(d):
+        if f.endswith(".parquet"):
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                digest = hashlib.sha256(fh.read()).hexdigest()
+            snap[f] = (digest, frozenset(pq.read_table(p).column("stage").to_pylist()))
+    return snap
+
+
+def test_lineage_writes_isolated_and_crash_safe(spark, tmp_path):
+    """Re-running forgotten buckets rewrites only that stage's lineage
+    files, byte for byte leaving every other stage's; a leftover temp file
+    from a killed lineage write is invisible to every lineage reader and
+    to resume."""
+    import datetime
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "lake10")
+    lake = Lakehouse(spark, root)
+    df = spark.range(300).selectExpr("CAST(id AS STRING) AS url", "id AS v")
+    tf = lambda b: b.selectExpr("url", "v * 2 AS v2")  # noqa: E731
+
+    def run():
+        lake.run_stage("records", lambda: df)
+        sc = lake.run_stage_bucketed("scored", df, tf, "url", n_buckets=4)
+        lake.run_stage("clusters", lambda: sc.df.selectExpr("url", "v2 % 7 AS c"))
+        return sc
+
+    run()
+    before = _lineage_snapshot(root)
+    lake.invalidate_buckets("scored", [1])
+    assert run().recomputed_buckets == [1]
+    after = _lineage_snapshot(root)
+    touched = set()
+    for f in before.keys() | after.keys():
+        if before.get(f) != after.get(f):
+            touched |= before.get(f, (None, frozenset()))[1]
+            touched |= after.get(f, (None, frozenset()))[1]
+    assert touched == {"scored"}
+
+    # a kill during a lineage write leaves a dot-prefixed temp file behind;
+    # this one holds a DONE row for the bucket forgotten below
+    lake.invalidate_buckets("scored", [1])
+    lin_dir = os.path.join(root, "_lineage")
+    planted = pa.table({
+        "partition_id": pa.array([1], pa.int32()),
+        "rows": pa.array([75], pa.int64()),
+        "stage": ["scored"],
+        "wall_s": [0.0],
+        "status": ["DONE"],
+        "ts": pa.array([datetime.datetime.now(datetime.timezone.utc)],
+                       pa.timestamp("us", tz="UTC")),
+    })
+    pq.write_table(planted, os.path.join(lin_dir, "._x.tmp"))
+
+    lin = lake.lineage()
+    assert lin.where(F.col("stage") == "scored").count() == 3
+    st = {r["stage"]: r for r in lake.progress_phases(("records", "scored")).collect()}
+    assert st["scored"]["status"] == "IN_PROGRESS" and st["scored"]["parts_done"] == 3
+    n_duck = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{lin_dir}/*.parquet')"
+    ).fetchone()[0]
+    assert n_duck == lin.count()
+
+    sc = run()
+    assert sc.recomputed_buckets == [1]
+    assert sc.rows == 300 and sc.df.count() == 300
