@@ -43,7 +43,8 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -56,6 +57,31 @@ class StageResult:
     wall_s: float
     resumed: bool
     recomputed_buckets: list[int] | None = None
+
+    def stats(self) -> dict:
+        """The ``stage_stats`` entry of this stage."""
+        s = {"rows": self.rows, "wall_s": self.wall_s, "resumed": self.resumed}
+        if self.recomputed_buckets is not None:
+            s["recomputed_buckets"] = self.recomputed_buckets
+        return s
+
+
+def materialize(name: str, build) -> StageResult:
+    """Run ``build() -> DataFrame`` as an in-memory stage: one eager
+    ``localCheckpoint``, with the row count observed on that same job.
+
+    Stage outputs feed several consumers (pair generation scans the
+    signatures once per key family; scoring joins them twice), and
+    consumers of a lazy cache race to populate it, each recomputing the
+    whole lineage. The checkpoint stores the rows once and cuts the
+    logical plan to a scan leaf, so later planning does not re-walk every
+    upstream stage. A checkpointed partition lost with its executor
+    cannot be recomputed; the Lakehouse stages are the resumable mode.
+    """
+    t0 = time.time()
+    obs = Observation()
+    df = build().observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return StageResult(name, df, obs.get["rows"], time.time() - t0, resumed=False)
 
 
 # missing buckets of run_stage_bucketed run as this many overlapped Spark
@@ -316,6 +342,8 @@ class Lakehouse:
             transform(slice_b).write.mode("overwrite").parquet(bucket_path)
             return b, sum(_file_rows(bucket_path)), time.time() - tb
 
+        # pool threads start with no job group; carry the caller's over
+        run_bucket = inheritable_thread_target(self.spark)(run_bucket)
         workers = max(1, min(BUCKET_CONCURRENCY, len(missing)))
         with ThreadPoolExecutor(max_workers=workers) as pool:
             futs = [pool.submit(run_bucket, b) for b in missing]

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
+from crocodile_spark.lakehouse import StageResult, materialize
 from crocodile_spark.operators.blocking import (
     blocking_keys,
     cap_blocks,
@@ -76,30 +77,15 @@ class IncrementalOutput:
     pairs: DataFrame          # delta-touching candidate pairs only
     scored: DataFrame         # scored delta-touching pairs
     clusters: DataFrame       # FULL updated assignment (url, cluster_id)
-    signatures: DataFrame | None = None  # union signature table (persisted)
+    signatures: DataFrame | None = None  # union signature table
     stage_stats: dict = field(default_factory=dict)
 
     def unpersist(self) -> None:
-        """Release the frames :func:`incremental_er` persisted (delta,
-        signatures). Lifetime contract (ADVICE r5): the persists live
-        until the caller either calls this or stops the session -- a
-        long-lived session invoking the operator repeatedly (gate +
-        bench in one SparkSession) must call it after the clusters frame
-        is materialized, or cached union-signature blocks accumulate
-        across invocations. ``pairs``/``scored`` are localCheckpointed
-        (r6, plan-depth control), so unpersist() is a no-op on them;
-        their blocks are freed by the ContextCleaner once the output
-        object is garbage-collected."""
-        frames = [self.delta_records, self.signatures, self.pairs, self.scored]
-        # state-path aux frames (incremental_signatures persists the
-        # affected-url set + rebuilt slice and rides them on the union)
-        frames.extend(getattr(self.signatures, "_inc_persisted", ()))
-        for df in frames:
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        """Nothing to release: every frame :func:`incremental_er`
+        materializes is a ``localCheckpoint``
+        (:func:`~crocodile_spark.lakehouse.materialize`), not a cache, and
+        its blocks are freed by the ContextCleaner once the output object
+        is garbage-collected. Kept so per-batch loops may call it."""
 
 
 def broadcast_if_small(
@@ -275,15 +261,12 @@ def incremental_signatures(
             .select("url")
         )
     )
-    affected_urls = flip_urls.union(rank_urls).distinct()
+    affected = flip_urls.union(rank_urls)
     if removed_records is not None:
         # removed urls leave the kept side entirely; they are NOT in the
         # rebuild union (existing_records is the survivor base)
-        affected_urls = affected_urls.union(
-            removed_records.select("url")
-        ).distinct()
-    affected_urls = affected_urls.persist()
-    affected_urls.count()
+        affected = affected.union(removed_records.select("url"))
+    affected_urls = materialize("affected_urls", lambda: affected.distinct()).df
     affected_old = existing_records.select(*delta.columns).join(
         affected_urls, "url", "semi"
     )
@@ -293,24 +276,56 @@ def incremental_signatures(
     )
     rare = merged.where(F.col("df") <= F.lit(c_new)).select("token", "df")
     dist = tok.join(rare, "token", "inner").select("url", "token", "df")
-    rebuilt = signatures_from_distinctive(rebuild, dist, cfg).persist()
-    rebuilt.count()
+    rebuilt = materialize(
+        "rebuilt", lambda: signatures_from_distinctive(rebuild, dist, cfg)
+    ).df
 
     sig_cols = rebuilt.columns
     kept = existing_signatures.select(*sig_cols).join(
         affected_urls, "url", "left_anti"
     )
     # Only the DELTA-SCALE pieces are materialized (affected_urls: a tiny
-    # url set; rebuilt: delta + affected rows). The union is returned
-    # LAZY: every downstream consumer then re-derives it as (cached
-    # stored-signature scan, broadcast anti-join on affected_urls) plus a
-    # cached rebuilt scan -- re-materializing all N union rows into a new
-    # cache block (the r6-draft behavior) cost ~22 s at 529k for data
-    # that already sits in the stored cache. The persisted pieces ride on
-    # the returned frame for IncrementalOutput.unpersist().
+    # url set; rebuilt: delta + affected rows); the union is returned lazy
+    # for the caller to materialize once. The rebuilt old urls ride on it
+    # for the re-crawl seed.
     out = kept.unionByName(rebuilt)
-    out._inc_persisted = (affected_urls, rebuilt)
+    out._rebuilt_urls = affected_urls
     return out
+
+
+def union_signatures(
+    base_records: DataFrame,
+    delta: DataFrame,
+    n_delta: int,
+    cfg: PipelineConfig,
+    existing_signatures: DataFrame | None,
+    existing_token_df: DataFrame | None,
+    existing_n_records: int | None,
+    removed_records: DataFrame | None = None,
+    n_removed: int = 0,
+) -> DataFrame:
+    """Signature table of ``base_records`` plus ``delta``: the
+    stored-state merge law of :func:`incremental_signatures` when all
+    three state tables are given and its flip set fits, else
+    ``mention_signatures`` over the union."""
+    state = (existing_signatures, existing_token_df, existing_n_records)
+    if all(x is not None for x in state):
+        sigs = incremental_signatures(
+            base_records,
+            existing_signatures,
+            existing_token_df,
+            existing_n_records,
+            delta,
+            n_delta,
+            cfg,
+            removed_records=removed_records,
+            n_removed=n_removed,
+        )
+        if sigs is not None:
+            return sigs
+    return mention_signatures(
+        base_records.select(*delta.columns).unionByName(delta), cfg
+    )
 
 
 def delta_pairs(
@@ -370,13 +385,12 @@ def delta_pairs(
         # (An r6-draft A/B under heavy host noise was inconclusive; the
         # quiet per-phase probes showed the unrestricted cap shuffle at
         # ~15 s of a 40 s pairs stage at 529k/5% -- see BENCH.md r6.)
-        # localCheckpoint (eager): the key list is delta-scale, but its
-        # PLAN embeds the MinHash band-key expression forest; the cap and
-        # pair joins below replicate their input subtree 4x during
-        # planning, and with the un-truncated delta_keys tree inside, the
-        # duplicated expression forest OOMed the driver while merely
-        # FORMATTING the plan string. Checkpointing collapses it to a
-        # scan leaf (the same trick clustering.py uses per CC round).
+        # Materialized: the key list is delta-scale, but its PLAN embeds
+        # the MinHash band-key expression forest; the cap and pair joins
+        # below replicate their input subtree 4x during planning, and with
+        # the un-truncated delta_keys tree inside, the duplicated
+        # expression forest OOMed the driver while merely FORMATTING the
+        # plan string. The checkpoint collapses it to a scan leaf.
         if seed_urls is None:
             seed_sigs, seed_static = delta_sigs, delta_static
         else:
@@ -388,25 +402,22 @@ def delta_pairs(
                     seed, "url", "semi"
                 )
             )
-        delta_keys = (
-            token_keys(seed_sigs)
+        dk = materialize(
+            "delta_keys",
+            lambda: token_keys(seed_sigs)
             .select("key")
             .union(seed_static.select("key"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
         )
-        # Broadcast the (checkpointed, already-materialized) key set when
-        # it is hash-table-sized: the semi join then FILTERS the key
-        # universe during the scan with no shuffle at all, which is the
-        # whole point -- a sort-merge semi would shuffle the full
-        # O(N x keys/record) universe once more and cost more than the
-        # cap shuffle it saves (measured: pairs stage 40 s unrestricted
-        # vs 96 s restricted-SMJ at 529k/5%). Past the byte gate (huge
-        # deltas), fall back to the shuffle semi, where the cap saving
-        # still applies. count() on the checkpointed frame is metadata
-        # cheap.
-        delta_keys = broadcast_if_small(delta_keys, "key", delta_keys.count(), cfg)
-        keys = keys.join(delta_keys, "key", "semi")
+        # Broadcast the materialized key set when it is hash-table-sized:
+        # the semi join then FILTERS the key universe during the scan with
+        # no shuffle at all, which is the whole point -- a sort-merge semi
+        # would shuffle the full O(N x keys/record) universe once more and
+        # cost more than the cap shuffle it saves (measured: pairs stage
+        # 40 s unrestricted vs 96 s restricted-SMJ at 529k/5%). Past the
+        # byte gate (huge deltas), fall back to the shuffle semi, where
+        # the cap saving still applies.
+        keys = keys.join(broadcast_if_small(dk.df, "key", dk.rows, cfg), "key", "semi")
     capped = cap_blocks(keys, cfg)
     new_keys = capped.join(seed, "url", "semi")
     cand = (
@@ -437,6 +448,40 @@ def delta_pairs(
         )
     )
     return cand.union(dup).dropDuplicates(["url_a", "url_b"])
+
+
+def score_delta_pairs(
+    sigs: DataFrame,
+    new_urls: DataFrame,
+    cfg: PipelineConfig,
+    existing_static_keys: DataFrame | None = None,
+    seed_urls: DataFrame | None = None,
+) -> tuple[StageResult, StageResult]:
+    """The ``pairs`` and ``scored`` stages of the delta paths:
+    :func:`delta_pairs`, then ``score`` over them."""
+    p = materialize(
+        "pairs",
+        lambda: delta_pairs(sigs, new_urls, cfg, existing_static_keys, seed_urls),
+    )
+
+    def scored() -> DataFrame:
+        # Restrict the feature-join signature side to PAIR-TOUCHED urls:
+        # the two per-side joins in attach_pair_features are inner, so
+        # rows for untouched urls never contribute and the output is
+        # identical -- but the join now shuffles the touched subset
+        # (pair-fraction scale, ~1/3 of rows at 529k/5%) instead of the
+        # full signature table twice. Same gated broadcast as the
+        # delta-key restriction: scan-filter the signature table.
+        touched = materialize(
+            "touched_urls",
+            lambda: p.df.select(F.col("url_a").alias("url"))
+            .union(p.df.select(F.col("url_b").alias("url")))
+            .distinct(),
+        )
+        touched_b = broadcast_if_small(touched.df, "url", touched.rows, cfg)
+        return score(p.df, sigs.join(touched_b, "url", "semi"), cfg)
+
+    return p, materialize("scored", scored)
 
 
 def merge_clusters(
@@ -536,99 +581,45 @@ def incremental_er(
     Output is byte-identical with or without state.
     """
     cfg = cfg or PipelineConfig()
-    delta = normalize_pages(new_pages, use_html)
-    # re-crawl guard: a url already in the corpus must not enter the union
-    # twice (duplicate rows would merge both versions' tokens under the
-    # signature groupBy, fan out every scored pair touching the url, and
-    # emit the url from both the old and new assignment below). First
-    # version wins -- re-crawl UPDATES are an upsert into the records
-    # table (J2 merge law), out of this operator's scope.
-    # The anti-join build side is CORPUS-scale, so broadcast only under a
-    # known byte budget (state path passes existing_n_records; the avg-url
-    # probe scans the cached records); past it, the shuffle anti-join
-    # stands in for what a 10^12-doc deployment would do with a
-    # bloom-filter pre-pass + exact check on hits.
-    guard = existing_records.select("url")
-    if existing_n_records is not None:
-        guard = broadcast_if_small(guard, "url", existing_n_records, cfg)
-    delta = delta.join(guard, "url", "left_anti").persist()
-    n_delta = delta.count()
-    new_urls = delta.select("url")
 
-    sigs = None
-    if (
-        existing_signatures is not None
-        and existing_token_df is not None
-        and existing_n_records is not None
-    ):
-        sigs = incremental_signatures(
-            existing_records,
-            existing_signatures,
-            existing_token_df,
-            existing_n_records,
-            delta,
-            n_delta,
-            cfg,
-        )
-    if sigs is None:
-        union_records = existing_records.select(*delta.columns).unionByName(delta)
-        sigs = mention_signatures(union_records, cfg)
-    # eager (BOTH paths): delta_pairs + score scan sigs ~7x between them
-    # (key families, dup stars, two feature joins); populating the cache
-    # first prevents per-branch lineage recompute (see pipeline.py
-    # non-checkpoint path, r6). Measured at 529k/5%: leaving the
-    # state-path union LAZY (each consumer re-deriving the kept-side
-    # anti-join from the stored cache) costs 220 s vs 98 s with one
-    # eager 22 s materialization -- consumer count beats per-scan cost.
-    sigs = sigs.persist()
-    sigs.count()
+    def records() -> DataFrame:
+        # re-crawl guard: a url already in the corpus must not enter the
+        # union twice (duplicate rows would merge both versions' tokens
+        # under the signature groupBy, fan out every scored pair touching
+        # the url, and emit the url from both the old and new assignment
+        # below). First version wins -- re-crawl UPDATES are
+        # :func:`~crocodile_spark.operators.recrawl.recrawl_upsert`.
+        # The anti-join build side is CORPUS-scale, so broadcast only
+        # under a known byte budget (state path passes
+        # existing_n_records); past it, the shuffle anti-join stands in
+        # for what a 10^12-doc deployment would do with a bloom-filter
+        # pre-pass + exact check on hits.
+        guard = existing_records.select("url")
+        if existing_n_records is not None:
+            guard = broadcast_if_small(guard, "url", existing_n_records, cfg)
+        return normalize_pages(new_pages, use_html).join(guard, "url", "left_anti")
 
-    # localCheckpoint (eager), NOT persist+count: the touched-url
-    # restriction below and the scored consumers (endpoint set + two rep
-    # joins in merge_clusters) reference these frames several times each.
-    # A persist only swaps the subtree at PHYSICAL planning -- Catalyst
-    # still re-ANALYZES every duplicated copy of the logical tree on each
-    # action, and the pair tree embeds the MinHash band-key expression
-    # forest 4-6x (cap + pair self-join planning), so the multiplied
-    # analysis alone cost ~50 s per call at ANY data scale. Checkpointing
-    # collapses the logical plan to a scan leaf. The blocks live until
-    # the ContextCleaner GCs the RDD (unpersist() is a no-op on them);
-    # pairs/scored are thin rows, so losing columnar-cache column
-    # pruning costs nothing.
-    # Execute WITH AQE via persist+count (checkpointing the raw plan
-    # would materialize through the RDD path, losing runtime broadcast
-    # conversion and skew splitting on the pair-generation join --
-    # measured ~2x slower at 529k), then collapse the logical plan to a
-    # leaf by checkpointing the CACHED rows (a cheap cache scan), and
-    # release the interim cache.
-    pairs_cached = delta_pairs(sigs, new_urls, cfg, existing_static_keys).persist()
-    pairs_cached.count()
-    pairs = pairs_cached.localCheckpoint(eager=True)
-    pairs_cached.unpersist()
-    # Restrict the feature-join signature side to PAIR-TOUCHED urls: the
-    # two per-side joins in attach_pair_features are inner, so rows for
-    # untouched urls never contribute and the output is identical -- but
-    # the join now shuffles the touched subset (pair-fraction scale, ~1/3
-    # of rows at 529k/5%) instead of the full signature table twice,
-    # which the quiet per-phase probes showed dominating the score stage.
-    touched_urls = (
-        pairs.select(F.col("url_a").alias("url"))
-        .union(pairs.select(F.col("url_b").alias("url")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    rec = materialize("records", records)
+    new_urls = rec.df.select("url")
+    sig = materialize(
+        "signatures",
+        lambda: union_signatures(
+            existing_records, rec.df, rec.rows, cfg, existing_signatures,
+            existing_token_df, existing_n_records,
+        ),
     )
-    # same gated broadcast as the delta-key restriction: scan-filter the
-    # cached signature table instead of shuffling it
-    touched_urls = broadcast_if_small(
-        touched_urls, "url", touched_urls.count(), cfg
+    p, sc = score_delta_pairs(sig.df, new_urls, cfg, existing_static_keys)
+    cl = materialize(
+        "clusters",
+        lambda: merge_clusters(
+            existing_clusters,
+            new_urls,
+            sc.df.where(F.col("is_edge")).select("url_a", "url_b"),
+            cfg.max_cc_iterations,
+        ),
     )
-    scored_cached = score(pairs, sigs.join(touched_urls, "url", "semi"), cfg).persist()
-    scored_cached.count()
-    scored = scored_cached.localCheckpoint(eager=True)
-    scored_cached.unpersist()
-    new_edges = scored.where(F.col("is_edge")).select("url_a", "url_b")
-
-    clusters = merge_clusters(
-        existing_clusters, new_urls, new_edges, cfg.max_cc_iterations
+    stages = (rec, sig, p, sc, cl)
+    return IncrementalOutput(
+        rec.df, p.df, sc.df, cl.df, signatures=sig.df,
+        stage_stats={st.name: st.stats() for st in stages},
     )
-    return IncrementalOutput(delta, pairs, scored, clusters, signatures=sigs)

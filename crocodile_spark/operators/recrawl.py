@@ -67,15 +67,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crocodile_spark.config import PipelineConfig
-from crocodile_spark.operators.blocking import mention_signatures
+from crocodile_spark.lakehouse import materialize
 from crocodile_spark.operators.incremental_er import (
     broadcast_if_small,
-    delta_pairs,
-    incremental_signatures,
     merge_clusters,
+    score_delta_pairs,
+    union_signatures,
 )
 from crocodile_spark.operators.normalize_stage import normalize_pages
-from crocodile_spark.operators.scoring import score
 
 
 @dataclass
@@ -90,25 +89,11 @@ class RecrawlOutput:
     n_records: int | None = None  # corpus size after the upsert
     edges: DataFrame | None = None  # updated accepted-edge state (when existing_edges given)
     stage_stats: dict = field(default_factory=dict)
-    # internal batch-scale frames persisted by recrawl_upsert (norm,
-    # stored_hits) that no output field exposes -- tracked so unpersist()
-    # releases them (r8, ADVICE: a per-batch loop otherwise accumulates
-    # cached blocks across invocations)
-    aux_persisted: tuple = ()
 
     def unpersist(self) -> None:
-        """Release persisted frames (same lifetime contract as
-        :class:`IncrementalOutput`); checkpointed frames are freed by the
-        ContextCleaner."""
-        frames = [self.delta_records, self.updated_urls, self.signatures]
-        frames.extend(self.aux_persisted)
-        frames.extend(getattr(self.signatures, "_inc_persisted", ()))
-        for df in frames:
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        """Nothing to release (same contract as
+        :meth:`IncrementalOutput.unpersist`): every materialized frame is
+        a ``localCheckpoint`` freed by the ContextCleaner."""
 
 
 def recrawl_upsert(
@@ -148,55 +133,47 @@ def recrawl_upsert(
     newly accepted -- maintain it exactly like signatures/token_df.
     """
     cfg = cfg or PipelineConfig()
-    norm = normalize_pages(pages, use_html)
     # one row per url per batch, deterministic winner (max row_hash):
     # a crawl batch can legitimately fetch a url twice
     w = Window.partitionBy("url").orderBy(F.col("row_hash").desc())
-    norm = (
-        norm.withColumn("_rn", F.row_number().over(w))
+    batch = materialize(
+        "batch",
+        lambda: normalize_pages(pages, use_html)
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
+        .drop("_rn"),
     )
-    n_batch = norm.count()
 
     # -- classify: one scan of the stored records, batch side broadcast --
-    batch_urls = broadcast_if_small(norm.select("url"), "url", n_batch, cfg)
-    stored_hits = (
-        existing_records.select("url", F.col("row_hash").alias("old_hash"))
-        .join(batch_urls, "url", "semi")
-        .persist()
+    batch_urls = broadcast_if_small(batch.df.select("url"), "url", batch.rows, cfg)
+    stored_hits = materialize(
+        "stored_hits",
+        lambda: existing_records.select("url", F.col("row_hash").alias("old_hash"))
+        .join(batch_urls, "url", "semi"),
     )
-    stored_hits.count()
-    cls = norm.join(stored_hits, "url", "left")
+    cls = batch.df.join(stored_hits.df, "url", "left")
+    changed = F.col("old_hash") != F.col("row_hash")
     unchanged_urls = cls.where(F.col("old_hash") == F.col("row_hash")).select("url")
-    delta = (
-        cls.where(F.col("old_hash").isNull() | (F.col("old_hash") != F.col("row_hash")))
-        .drop("old_hash")
-        .persist()
+    rec = materialize(
+        "records",
+        lambda: cls.where(F.col("old_hash").isNull() | changed).drop("old_hash"),
     )
-    n_delta = delta.count()
-    updated_urls = (
-        cls.where(F.col("old_hash").isNotNull() & (F.col("old_hash") != F.col("row_hash")))
-        .select("url")
-        .persist()
-    )
-    n_updated = updated_urls.count()
+    delta = rec.df
+    updated = materialize("updated_urls", lambda: cls.where(changed).select("url"))
+    updated_urls, n_updated = updated.df, updated.rows
 
     # -- remove old versions + dissolve their clusters -------------------
     if n_updated:
         upd = broadcast_if_small(updated_urls, "url", n_updated, cfg)
         removed = existing_records.join(upd, "url", "semi")
         base_records = existing_records.join(upd, "url", "left_anti")
-        affected_cids = (
-            existing_clusters.join(upd, "url", "semi")
+        affected = materialize(
+            "affected_cids",
+            lambda: existing_clusters.join(upd, "url", "semi")
             .select("cluster_id")
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
         )
-        cid = broadcast_if_small(
-            affected_cids, "cluster_id", affected_cids.count(), cfg
-        )
+        cid = broadcast_if_small(affected.df, "cluster_id", affected.rows, cfg)
         members = (
             existing_clusters.join(cid, "cluster_id", "semi")
             .select("url")
@@ -216,91 +193,52 @@ def recrawl_upsert(
         stored_keys = existing_static_keys
 
     # -- signatures: merge law with removal support ----------------------
-    sigs = None
-    if (
-        existing_signatures is not None
-        and existing_token_df is not None
-        and existing_n_records is not None
-    ):
-        sigs = incremental_signatures(
-            base_records,
-            existing_signatures,
-            existing_token_df,
-            existing_n_records,
-            delta,
-            n_delta,
-            cfg,
-            removed_records=removed,
+    rebuilt: list[DataFrame] = []  # old urls the merge law re-signed
+
+    def signatures() -> DataFrame:
+        sigs = union_signatures(
+            base_records, delta, rec.rows, cfg, existing_signatures,
+            existing_token_df, existing_n_records, removed_records=removed,
             n_removed=n_updated,
         )
-    if sigs is None:
-        union_records = base_records.select(*delta.columns).unionByName(delta)
-        sigs = mention_signatures(union_records, cfg)
-    # Collapse the signature LOGICAL plan to a scan leaf (the r6
-    # plan-depth idiom, see incremental_er.py): delta_pairs + score below
-    # embed the sigs subtree 5-7x (key families, seed joins, dup stars,
-    # feature joins), and here that subtree nests the removal-aware DF
-    # merge + the dissolution anti-joins ON TOP of the caller's stored
-    # plans -- deep enough that merely FORMATTING the plan string for the
-    # SQL-UI event OOMed a loaded driver heap (seen in-suite after 14
-    # modules of cached state; passes alone). Execute WITH AQE via
-    # persist+count, checkpoint the cached rows (a cheap cache scan),
-    # release the interim cache.
-    aux = getattr(sigs, "_inc_persisted", None)
-    sigs_cached = sigs.persist()
-    sigs_cached.count()
-    sigs = sigs_cached.localCheckpoint(eager=True)
-    sigs_cached.unpersist()
-    if aux is not None:
-        # re-attach the merge-law persisted frames to the checkpointed
-        # frame so RecrawlOutput.unpersist() still releases them
-        sigs._inc_persisted = aux
+        if hasattr(sigs, "_rebuilt_urls"):
+            rebuilt.append(sigs._rebuilt_urls)
+        return sigs
+
+    sig = materialize("signatures", signatures)
 
     # -- seeds: fresh-assignment urls + signature-rebuilt old records ----
     new_urls = delta.select("url")
-    fresh_urls = new_urls.unionByName(members).distinct().localCheckpoint(eager=True)
-    # Edge-retaining repair needs the merge law's rebuilt-record set (aux)
-    # to know exactly which old records' decisions are stale; without it
+    fresh_urls = materialize(
+        "fresh_urls", lambda: new_urls.unionByName(members).distinct()
+    ).df
+    # Edge-retaining repair needs the merge law's rebuilt-record set to
+    # know exactly which old records' decisions are stale; without it
     # (linear sig fallback) dissolve-and-rescore stays the safe path.
-    retain = existing_edges is not None and n_updated > 0 and aux is not None
+    retain = existing_edges is not None and n_updated > 0 and bool(rebuilt)
     # the SEED is every url whose pair decisions are re-derived this run:
     # retaining mode excludes untouched dissolved members (their old
     # edges stand in for re-scoring), dissolve mode includes them
     seed = new_urls if retain else fresh_urls
-    if aux is not None:
+    if rebuilt:
         # affected_urls from the signature merge (includes removed urls,
         # harmless: they have no signature row, so they key nothing)
-        seed = seed.unionByName(aux[0].select("url")).distinct()
-    seed = seed.localCheckpoint(eager=True)
+        seed = seed.unionByName(rebuilt[0]).distinct()
+    seed_stage = materialize("seed", lambda: seed)
 
-    pairs_cached = delta_pairs(
-        sigs, new_urls, cfg, stored_keys, seed_urls=seed
-    ).persist()
-    pairs_cached.count()
-    pairs = pairs_cached.localCheckpoint(eager=True)
-    pairs_cached.unpersist()
-
-    touched_urls = (
-        pairs.select(F.col("url_a").alias("url"))
-        .union(pairs.select(F.col("url_b").alias("url")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    p, sc = score_delta_pairs(
+        sig.df, new_urls, cfg, stored_keys, seed_urls=seed_stage.df
     )
-    touched_urls = broadcast_if_small(touched_urls, "url", touched_urls.count(), cfg)
-    scored_cached = score(pairs, sigs.join(touched_urls, "url", "semi"), cfg).persist()
-    scored_cached.count()
-    scored = scored_cached.localCheckpoint(eager=True)
-    scored_cached.unpersist()
-    new_edges = scored.where(F.col("is_edge")).select("url_a", "url_b")
+    new_edges = sc.df.where(F.col("is_edge")).select("url_a", "url_b")
 
     out_edges = None
     if existing_edges is not None:
         # every pair touching a seed url was scored fresh this run, so old
         # edges incident to the seed are superseded (updated urls are in
         # the delta, hence in the seed); both orientations covered. The
-        # seed is delta-scale and checkpointed -- gate it onto the
+        # seed is delta-scale and materialized -- gate it onto the
         # broadcast path so the anti joins FILTER the edge scan.
-        seed_b = broadcast_if_small(seed, "url", seed.count(), cfg)
+        seed_b = broadcast_if_small(seed_stage.df, "url", seed_stage.rows, cfg)
         kept_edges = existing_edges.join(
             seed_b.withColumnRenamed("url", "url_a"), "url_a", "left_anti"
         ).join(seed_b.withColumnRenamed("url", "url_b"), "url_b", "left_anti")
@@ -317,28 +255,32 @@ def recrawl_upsert(
             ).select("url_a", "url_b")
             new_edges = new_edges.unionByName(surviving)
 
-    clusters = merge_clusters(
-        base_clusters, fresh_urls, new_edges, cfg.max_cc_iterations
+    cl = materialize(
+        "clusters",
+        lambda: merge_clusters(
+            base_clusters, fresh_urls, new_edges, cfg.max_cc_iterations
+        ),
     )
     n_after = (
-        existing_n_records - n_updated + n_delta
+        existing_n_records - n_updated + rec.rows
         if existing_n_records is not None
         else None
     )
+    stages = (rec, sig, p, sc, cl)
     return RecrawlOutput(
         delta_records=delta,
         updated_urls=updated_urls,
         unchanged_urls=unchanged_urls,
-        pairs=pairs,
-        scored=scored,
-        clusters=clusters,
-        signatures=sigs,
+        pairs=p.df,
+        scored=sc.df,
+        clusters=cl.df,
+        signatures=sig.df,
         n_records=n_after,
         edges=out_edges,
-        aux_persisted=(norm, stored_hits),
         stage_stats={
-            "n_batch": n_batch,
-            "n_new_or_updated": n_delta,
+            **{st.name: st.stats() for st in stages},
+            "n_batch": batch.rows,
+            "n_new_or_updated": rec.rows,
             "n_updated": n_updated,
             "edge_retaining": bool(retain),
         },

@@ -1,10 +1,11 @@
 """End-to-end record-linkage pipeline: normalize -> block -> score -> cluster.
 
-One linear DAG of four stages (SURVEY.md section 3.4), each a
+One linear DAG of five stages (SURVEY.md section 3.4), each a
 read -> transform -> write against the Lakehouse when a checkpoint root is
-configured (stage-level resume + per-partition lineage), or kept as pure
-DataFrames when not. The evaluation operator computes pairwise F1 against
-gold labels restricted to pairs sharing a blocking key -- the metric law of
+configured (stage-level resume + per-partition lineage), or an in-memory
+``materialize`` when not; both modes fill ``stage_stats`` with the same
+keys. The evaluation operator computes pairwise F1 against gold labels
+restricted to pairs sharing a blocking key -- the metric law of
 BASELINE.json (north_rule).
 """
 
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
-from crocodile_spark.lakehouse import Lakehouse
+from crocodile_spark.lakehouse import Lakehouse, materialize
 from crocodile_spark.operators.blocking import mention_signatures, pairs_from_signatures
 from crocodile_spark.operators.clustering import cluster_records
 from crocodile_spark.operators.normalize_stage import normalize_pages
@@ -40,65 +41,30 @@ def run_pipeline(
     use_html: bool = True,
 ) -> PipelineOutput:
     cfg = cfg or PipelineConfig()
-    stats: dict = {}
+    lake = Lakehouse(spark, cfg.checkpoint_dir) if cfg.checkpoint_dir else None
+    stage = lake.run_stage if lake else materialize
 
-    if cfg.checkpoint_dir:
-        lake = Lakehouse(spark, cfg.checkpoint_dir)
-
-        r = lake.run_stage("records", lambda: normalize_pages(web_pages, use_html))
-        records = r.df
-        s = lake.run_stage("signatures", lambda: mention_signatures(records, cfg))
-        sigs = s.df
-        p = lake.run_stage("pairs", lambda: pairs_from_signatures(sigs, cfg))
-        pairs = p.df
+    r = stage("records", lambda: normalize_pages(web_pages, use_html))
+    s = stage("signatures", lambda: mention_signatures(r.df, cfg))
+    p = stage("pairs", lambda: pairs_from_signatures(s.df, cfg))
+    if lake:
         # scoring is pair-local -> bucketed by url_a for MID-stage resume
         # (a killed run recomputes only the buckets without lineage rows)
         sc = lake.run_stage_bucketed(
             "scored",
-            pairs,
-            lambda bucket: score(bucket, sigs, cfg),
+            p.df,
+            lambda bucket: score(bucket, s.df, cfg),
             bucket_col="url_a",
             n_buckets=cfg.resume_buckets,
         )
-        scored = sc.df
-        cl = lake.run_stage(
-            "clusters",
-            lambda: cluster_records(records, scored, max_iterations=cfg.max_cc_iterations),
-        )
-        clusters = cl.df
-        for st in (r, s, p, sc, cl):
-            stats[st.name] = {"rows": st.rows, "wall_s": st.wall_s, "resumed": st.resumed}
-            if st.recomputed_buckets is not None:
-                stats[st.name]["recomputed_buckets"] = st.recomputed_buckets
     else:
-        # every intermediate feeds >=2 downstream consumers: materialize
-        # each EAGERLY before its fan-out consumers run -- the
-        # pair-generation job scans sigs ~4x (token/host/minhash key
-        # families + exact-dup stars) and the signature job scans records
-        # ~3x (token explode, DF join-back, final re-join); lazy caching
-        # lets those same-job scans race on the unpopulated cache and
-        # recompute the full lineage per branch (r6 A/B: this, not the r5
-        # signature law itself, was the er_pipeline 9->12.5 s regression).
-        #
-        # r8: the eager materialization is localCheckpoint(eager=True)
-        # rather than persist()+count(): same race-free cache, and it also
-        # TRUNCATES the logical plan, so AQE's per-stage re-optimization of
-        # every downstream query (and each CC round) no longer re-walks the
-        # whole normalize->block->score lineage -- two ~2.5 s driver-side
-        # planning gaps measured at sf0.1 came from exactly that
-        # (matched-pair A/B: ~2-4 s faster cold, clusters byte-identical).
-        # Trade-off, documented: a checkpointed partition lost with its
-        # executor cannot be recomputed from lineage -- this ephemeral path
-        # is the dev/bench mode; production resilience is the Lakehouse
-        # checkpoint branch above (stage-level resume + lineage), exactly
-        # as the minhash signature materialization already documents.
-        records = normalize_pages(web_pages, use_html).localCheckpoint(eager=True)
-        sigs = mention_signatures(records, cfg).localCheckpoint(eager=True)
-        pairs = pairs_from_signatures(sigs, cfg).localCheckpoint(eager=True)
-        scored = score(pairs, sigs, cfg).localCheckpoint(eager=True)
-        clusters = cluster_records(records, scored, max_iterations=cfg.max_cc_iterations)
-
-    return PipelineOutput(records, sigs, pairs, scored, clusters, stats)
+        sc = materialize("scored", lambda: score(p.df, s.df, cfg))
+    cl = stage(
+        "clusters",
+        lambda: cluster_records(r.df, sc.df, max_iterations=cfg.max_cc_iterations),
+    )
+    stages = (r, s, p, sc, cl)
+    return PipelineOutput(*(st.df for st in stages), {st.name: st.stats() for st in stages})
 
 
 def evaluate_pairwise_f1(

@@ -2487,7 +2487,7 @@ def q_incremental_er(spark, sf_dir, oracle_dir: str = _INC_ORACLE_DIR):
                          existing_signatures=base.signatures,
                          existing_token_df=token_document_frequencies(
                              base.records, cfg),
-                         existing_n_records=base.records.count())
+                         existing_n_records=base.stage_stats["records"]["rows"])
 
     base.clusters.select("url", "cluster_id").write.mode("overwrite").parquet(
         f"{oracle_dir}/old_assign.parquet"
@@ -2621,7 +2621,7 @@ def q_recrawl_upsert(spark, sf_dir, oracle_dir: str = _RECRAWL_ORACLE_DIR):
         existing_static_keys=static_keys(base.signatures, cfg),
         existing_signatures=base.signatures,
         existing_token_df=token_document_frequencies(base.records, cfg),
-        existing_n_records=base.records.count(),
+        existing_n_records=base.stage_stats["records"]["rows"],
     )
 
     base.clusters.select("url", "cluster_id").write.mode("overwrite").parquet(

@@ -252,7 +252,7 @@ class StreamingEntityResolution:
             return
         if meta is None:
             out = run_pipeline(spark, batch_df, cfg, use_html=self.use_html)
-            n = out.records.count()
+            n = out.stage_stats["records"]["rows"]
             out.records.write.mode("overwrite").parquet(
                 self._p(f"records/batch_{batch_id}")
             )
@@ -293,7 +293,7 @@ class StreamingEntityResolution:
             existing_token_df=token_df,
             existing_n_records=meta["n_records"],
         )
-        n_delta = inc.delta_records.count()
+        n_delta = inc.stage_stats["records"]["rows"]
 
         # merged (token, df) for the new snapshot: the stored table outer-
         # joined with delta counts -- vocab-scale, the same merge law the
@@ -337,7 +337,6 @@ class StreamingEntityResolution:
         }
         self._commit_meta(new_meta)
         self._prune_snapshots(new_meta)
-        inc.unpersist()
 
     def clusters(self) -> DataFrame:
         """Current (url, cluster_id) snapshot."""

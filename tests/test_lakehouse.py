@@ -331,3 +331,30 @@ def test_lineage_writes_isolated_and_crash_safe(spark, tmp_path):
     sc = run()
     assert sc.recomputed_buckets == [1]
     assert sc.rows == 300 and sc.df.count() == 300
+
+
+def test_bucket_writes_stay_in_caller_job_group(spark, tmp_path):
+    """Bucket writes run on pool threads; every job a fresh bucketed stage
+    launches must still belong to the caller's job group, or a
+    ``cancelJobGroup`` (and any per-group job count) misses them."""
+    sc = spark.sparkContext
+
+    def last_job_id(group: str) -> int:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    df = spark.range(200).selectExpr("CAST(id AS STRING) AS url", "id AS v")
+    lake = Lakehouse(spark, str(tmp_path / "lake_jg"))
+    try:
+        first = last_job_id("bucket-jg-before")
+        sc.setJobGroup("bucket-jg", "bucketed stage")
+        lake.run_stage_bucketed(
+            "s", df, lambda b: b.selectExpr("url", "v * 2 AS v2"), "url", n_buckets=4
+        )
+        last = last_job_id("bucket-jg-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup("bucket-jg"))
+    assert len(in_group) >= 4  # at least one write per bucket
+    assert set(range(first + 1, last)) == in_group
