@@ -126,11 +126,26 @@ def top_cells(D: np.ndarray, take: int) -> np.ndarray:
     return (D.shape[1] - 1 - order[:, :take]).astype(np.int32)
 
 
+# A float32-exact value no embedding holds: the array_contains probe of
+# has_null_element. An array that does hold it is scanned by exists().
+_ABSENT = -(2.0**127)
+
+
 def has_null_element(c):
     """Boolean Column: the array has a NULL element (FALSE for a NULL
     array). Arrow converts a NULL element to NaN, so the kernels take
-    this JVM-side flag to apply the native NULL law instead of NaN's."""
-    return F.coalesce(F.exists(c, lambda x: x.isNull()), F.lit(False))
+    this JVM-side flag to apply the native NULL law instead of NaN's.
+
+    ``array_contains`` of a value the array lacks is NULL exactly when
+    the array has a NULL element (three-valued IN), and it is a compiled
+    loop, where ``exists`` is an interpreted lambda (CodegenFallback)
+    costing 20-30% of an Arrow kernel's stage at dim 768 (BENCH.md
+    "Python worker per-task cost"). The float literal keeps an
+    ``array<float>`` column uncast."""
+    hit = F.array_contains(c, F.lit(_ABSENT).cast("float"))
+    return F.when(hit, F.exists(c, lambda x: x.isNull())).otherwise(
+        hit.isNull() & c.isNotNull()
+    )
 
 
 def _cosine_ok(na: np.ndarray, nb: np.ndarray) -> np.ndarray:

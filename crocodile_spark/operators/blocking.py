@@ -1,4 +1,4 @@
-"""Stage 2 -- salted multi-key blocking (SURVEY.md section 7.1 step 3).
+"""Stage 2 -- multi-key blocking (SURVEY.md section 7.1 step 3).
 
 Replaces the reference's LamAPI candidate retrieval (crocodile/fetchers.py:
 51-121, operator S6) with self-contained blocking: candidate *pairs* are
@@ -23,10 +23,12 @@ key family: hash groups emit linear min-url star edges (exact_dup_pairs),
 immune to block caps and quadratic blowup.
 
 Scale design (10^12-doc posture):
-  * token document frequency is a single hash aggregation -- map-side
-    partial counts make COUNT skew-immune (a reducer receives at most one
-    partial row per map task per key); explicit salting (salted_count) is
-    reserved for non-constant-size aggregation state and skewed join keys;
+  * token document frequency and every bucket size is a single hash
+    aggregation (key_count) -- map-side partial counts make COUNT
+    skew-immune (a reducer receives at most one partial row per map task
+    per key), so no count needs salting; salting is for aggregation state
+    that is not constant-size (collect_list of a hot key) and skewed join
+    keys;
   * every key family is capped at ``max_block_size`` members -- an
     oversized block both explodes pair count quadratically and marks a
     non-discriminative key (a token with DF > cap cannot identify an
@@ -43,24 +45,6 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams
-
-
-def salted_count(df: DataFrame, key: str, salt_buckets: int = 8) -> DataFrame:
-    """Two-phase salted count: groupBy(key, salt) -> groupBy(key).
-
-    NOTE on when to use: for plain COUNT aggregations Spark's map-side
-    partial aggregation already bounds reduce-side width (each reducer
-    receives at most one partial row per map task per key), so the hot
-    path below uses a direct groupBy().count() -- one shuffle, skew-immune.
-    Salting is the tool for skewed aggregations whose partial state is
-    NOT constant-size (collect_list/set of a hot key) and for skewed join
-    keys; it is kept here, tested, for those cases.
-    """
-    salted = df.withColumn(
-        "_salt", (F.xxhash64(F.monotonically_increasing_id()) % salt_buckets)
-    )
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(key).agg(F.sum("_partial").alias("count"))
 
 
 def key_count(df: DataFrame, key: str) -> DataFrame:

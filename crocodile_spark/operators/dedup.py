@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams, tokenize
 from crocodile_spark.functions.similarity import set_jaccard
-from crocodile_spark.operators.blocking import salted_count
-from crocodile_spark.operators.blocking import spread as _spread
+from crocodile_spark.operators.blocking import key_count, spread as _spread
 
 
 def exact_duplicates(
@@ -191,7 +190,7 @@ def minhash_lsh_pairs(
         ]
     )
     buckets = sig.select("id", F.explode(bands).alias("bucket"))
-    sizes = salted_count(buckets, "bucket")
+    sizes = key_count(buckets, "bucket")
     ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
     buckets = buckets.join(ok, "bucket", "inner")
     pairs = (
@@ -351,7 +350,7 @@ def simhash_pairs(
         ]
     )
     buckets = fp.select("id", "simhash", F.explode(segs).alias("bucket"))
-    sizes = salted_count(buckets.select("id", "bucket"), "bucket")
+    sizes = key_count(buckets, "bucket")
     ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
     buckets = buckets.join(ok, "bucket", "inner")
     a = buckets.select(
@@ -432,7 +431,6 @@ def embedding_near_dup_pairs(
     (similarity_search.lsh_buckets / pair_cosine), bit-identical to the
     native HOF twins that ``arrow=False`` selects for UDF-free plans.
     """
-    from crocodile_spark.operators.blocking import key_count
     from crocodile_spark.operators.similarity_search import (
         embedding_dim,
         lsh_buckets,

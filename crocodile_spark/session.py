@@ -4,6 +4,15 @@ Local-mode defaults follow the public Spark tuning guidance: shuffle
 partitions ~ cores, AQE on (runtime coalesce + skew-join), Arrow enabled for
 pandas-UDF batches, UTC session timezone so DuckDB oracle comparisons are
 stable.
+
+Python workers fork from ``crocodile_spark.worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. PySpark's
+worker calls ``importlib.invalidate_caches()`` at every task start, and on
+CPython 3.11 that re-reads the central directory of every zip archive on
+the worker path (``pyspark.zip``, py4j, the Spark jar): 160-250 ms per
+task before the UDF runs, on the critical path of every Arrow kernel. The
+daemon re-reads an archive only when its mtime or size changed, so a
+rewritten ``--py-files`` zip still re-imports.
 """
 
 from __future__ import annotations
@@ -60,6 +69,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "crocodile_spark.worker_daemon")
     )
     # Shuffle files on tmpfs when available: local-mode shuffles are
     # disk-bound on the default /tmp block device. (On a real cluster the
@@ -83,7 +93,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     build, so the FIRST pandas-UDF query does not pay the fork/import cost
     (pyarrow+pandas import is ~1-2 s across a 32-slot local master). The
     production analog is executor warmup; workers are reused afterwards
-    (spark.python.worker.reuse default). Guarded by
+    (spark.python.worker.reuse default). Starting the daemon here also
+    stamps its zip importers once (``worker_daemon.main``), so no task of
+    a forked worker re-reads an unchanged archive. Guarded by
     ``spark.croco.prewarmPython`` (default true); failures are benign --
     the first real UDF job simply pays the fork as before."""
     try:

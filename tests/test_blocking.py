@@ -1,5 +1,5 @@
-"""Blocking stage tests: salted DF counts, block cap, key families, pair
-generation determinism."""
+"""Blocking stage tests: block cap, key families, pair generation
+determinism."""
 
 from __future__ import annotations
 
@@ -11,17 +11,8 @@ from crocodile_spark.operators.blocking import (
     cap_blocks,
     generate_pairs,
     minhash_bands,
-    salted_count,
 )
 from crocodile_spark.operators.normalize_stage import normalize_pages
-
-
-def test_salted_count_matches_plain_count(spark):
-    df = spark.createDataFrame(
-        [("k1",)] * 100 + [("k2",)] * 3 + [("k3",)] * 1, ["key"]
-    )
-    got = {r["key"]: r["count"] for r in salted_count(df, "key").collect()}
-    assert got == {"k1": 100, "k2": 3, "k3": 1}
 
 
 def test_cap_blocks_drops_oversized(spark):

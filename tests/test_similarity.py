@@ -93,6 +93,26 @@ def test_cosine_similarity(spark):
     z = F.array(F.lit(0.0), F.lit(0.0))
     assert _one(spark, cosine_similarity(a, z)) == 0.0
 
+def test_has_null_element_matches_exists_law(spark):
+    """The NULL-element flag equals ``exists(x IS NULL)`` (FALSE for a NULL
+    array) on every input class, in both element types, including arrays
+    that hold the ``array_contains`` probe value itself."""
+    from crocodile_spark.functions.emb_kernels import _ABSENT, has_null_element
+
+    nan = float("nan")
+    rows = [
+        None, [], [None], [1.0, None], [None, None], [nan], [nan, None],
+        [1.0, 2.0], [_ABSENT], [_ABSENT, None], [None, _ABSENT], [-0.0],
+    ]
+    for ty in ("double", "float"):
+        df = spark.createDataFrame([(r,) for r in rows], f"c array<{ty}>")
+        got = df.select(
+            has_null_element(F.col("c")).alias("fast"),
+            F.coalesce(F.exists("c", lambda x: x.isNull()), F.lit(False)).alias("law"),
+        ).collect()
+        assert [r["fast"] for r in got] == [r["law"] for r in got], ty
+
+
 def test_cosine_fold_kernel_bit_exact_vs_hof(spark):
     """r8: the Arrow fold kernel (emb_kernels.cosine_fold) must be
     BIT-IDENTICAL to the interpreted HOF law on every input class --
