@@ -25,7 +25,6 @@ class PipelineConfig:
     minhash_band_size: int = 4              # rows per LSH band -> 4 bands
     shingle_size: int = 3                   # char n-gram size (F5 law, n=3)
     max_block_size: int = 64                # cap pairs per block: drop oversized keys
-    salt_buckets: int = 8                   # salt fan-out for hot blocking keys
     min_token_length: int = 2               # drop 1-char tokens from blocking keys
     # mention-signature token selection: a token is "distinctive" when its
     # document frequency <= max(floor, ceil(frac * N)) -- a RELATIVE law
@@ -65,7 +64,6 @@ class PipelineConfig:
                                             # sits mid-gap between observed
                                             # same-entity minima (~0.48) and
                                             # cross-entity maxima (~0.26)
-    logistic_threshold: float = 0.5         # logistic-scorer edge threshold (M1)
 
     # ---- clustering (stage 4) ----
     max_cc_iterations: int = 20             # large-star/small-star bound

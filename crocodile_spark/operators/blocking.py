@@ -108,9 +108,15 @@ def distinctive_tokens(
     return tok.join(rare, "token", "inner").select("url", "token", "df")
 
 
-def mention_signatures(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def mention_signatures(
+    records: DataFrame, cfg: PipelineConfig, n_records: int | None = None
+) -> DataFrame:
     """Per-record mention signature: the ``sig_max_tokens`` RAREST
     distinctive tokens (sorted) + mention_norm.
+
+    ``n_records`` is the row count of ``records`` when the caller already
+    holds it (``run_pipeline`` takes it from the records stage); given, it
+    spares :func:`distinctive_tokens` its count job. ``None`` counts.
 
     Reads ``url``, ``tokens`` and ``text_norm`` from ``records``: the
     signature table also carries ``mh_bands``, the record's MinHash band
@@ -143,7 +149,9 @@ def mention_signatures(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
     which caps on block MEMBERSHIP. Scoring still sees the full
     ``sig_tokens`` (the 529k F1 lesson: the block cap must never silence
     scoring evidence)."""
-    return signatures_from_distinctive(records, distinctive_tokens(records, cfg), cfg)
+    return signatures_from_distinctive(
+        records, distinctive_tokens(records, cfg, n_records), cfg
+    )
 
 
 def signatures_from_distinctive(

@@ -45,7 +45,7 @@ def run_pipeline(
     stage = lake.run_stage if lake else materialize
 
     r = stage("records", lambda: normalize_pages(web_pages, use_html))
-    s = stage("signatures", lambda: mention_signatures(r.df, cfg))
+    s = stage("signatures", lambda: mention_signatures(r.df, cfg, r.rows))
     p = stage("pairs", lambda: pairs_from_signatures(s.df, cfg))
     if lake:
         # scoring is pair-local -> bucketed by url_a for MID-stage resume

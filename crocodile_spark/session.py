@@ -13,6 +13,33 @@ the worker path (``pyspark.zip``, py4j, the Spark jar): 160-250 ms per
 task before the UDF runs, on the critical path of every Arrow kernel. The
 daemon re-reads an archive only when its mtime or size changed, so a
 rewritten ``--py-files`` zip still re-imports.
+
+The engine runs as many small Catalyst plans (the pipeline stages, dedup,
+ANN, Lakehouse and incremental operators), so at benchmark sizes their
+cost is orchestration, and Janino compiling generated classes is a large
+share of it. Spark caches the compiled classes by source text, but the
+cache (``spark.sql.codegen.cache.maxEntries``) defaults to 100 entries,
+while one session of a benchmark workload generates 117-280 distinct
+classes: each class was evicted before its next use, and every
+steady-state iteration recompiled 53-159 of them. With
+``CODEGEN_CACHE_MAX_ENTRIES`` a second call of any operator in a session
+compiles nothing. The first call still compiles. The setting is a static
+SQL conf: it applies only when ``get_spark`` creates the first session in
+the JVM. Generated class names also leave out the whole-stage codegen
+stage id (``spark.sql.codegen.useIdInClassName``). The id is part of the
+cached source text, and a query's stages do not always get the same ids
+(two ``er_batch`` stages swapped theirs in a later iteration), so with the
+id in the name a renumbered stage compiles again, and equal stages of
+different queries each compile a class of their own.
+
+PySpark's per-call origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on,
+every Column builder (``F.col``, ``F.when``, ...) records its Python call
+site in the JVM over py4j: ``F.col`` took 1.2-1.5 ms instead of
+0.24-0.30 ms, and building the signature or score stage's plan took
+0.35-0.42 s instead of 0.21-0.28 s. The trade-off: an error raised from a
+plan built in Python no longer names the Python line in its DataFrame
+query context.
 """
 
 from __future__ import annotations
@@ -22,6 +49,20 @@ import os
 import pandas as pd  # module-level so pandas_udf type hints resolve
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's generated-class cache (static
+# ``spark.sql.codegen.cache.maxEntries``, default 100). Sized by measurement
+# (BENCH.md "Generated-code cache"): distinct classes one session compiles
+# from its start through one warm iteration, local[4] on a 4-vCPU host,
+# Spark 4.1.2, stage ids left out of class names:
+#   perfbench er_batch         117
+#   perfbench near_dup_ann     179
+#   bench.py pass at sf0.01    280
+# Guava splits the bound over 4 segments and evicts per segment, so the
+# 100-entry default thrashes at any of these sizes. 1,000 gives each
+# segment about 3.5x the largest count's share; Metaspace stayed at
+# 166-174 MB with either size.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def _package_parent() -> str:
@@ -70,6 +111,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.python.daemon.module", "crocodile_spark.worker_daemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle files on tmpfs when available: local-mode shuffles are
     # disk-bound on the default /tmp block device. (On a real cluster the

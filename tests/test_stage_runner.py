@@ -10,8 +10,13 @@ from pyspark.sql import functions as F
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.datagen import corpus_to_spark, make_corpus
 from crocodile_spark.lakehouse import materialize
-from crocodile_spark.operators.blocking import static_keys, token_document_frequencies
+from crocodile_spark.operators.blocking import (
+    mention_signatures,
+    static_keys,
+    token_document_frequencies,
+)
 from crocodile_spark.operators.incremental_er import incremental_er
+from crocodile_spark.operators.normalize_stage import normalize_pages
 from crocodile_spark.operators.recrawl import recrawl_upsert
 from crocodile_spark.pipeline import run_pipeline
 
@@ -113,3 +118,24 @@ def test_materialize_adds_no_job(spark):
     assert res.rows == 37 and res.df.count() == 37
     assert 1 <= n_mat <= n_bare
 
+
+def test_known_record_count_spares_the_signature_count(spark):
+    """Given the records stage's row count, ``mention_signatures`` builds
+    its plan without a job and yields the signatures it gets by counting."""
+    wp, _, _ = corpus_to_spark(
+        spark, make_corpus(n_entities=20, pages_per_entity=5, seed=29)
+    )
+    cfg = PipelineConfig(shuffle_partitions=4)
+    r = materialize("records", lambda: normalize_pages(wp, use_html=False))
+    known, n_known = _jobs(
+        spark, "runner-sigs-known", lambda: mention_signatures(r.df, cfg, r.rows)
+    )
+    counted, n_counted = _jobs(
+        spark, "runner-sigs-counted", lambda: mention_signatures(r.df, cfg)
+    )
+    assert n_known == 0 and n_counted >= 1
+
+    def rows(df):
+        return sorted(tuple(x) for x in df.collect())
+
+    assert rows(known) == rows(counted)
