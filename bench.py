@@ -100,7 +100,7 @@ def main() -> None:
     wp = documents_as_web_pages(spark, sf_dir)
     n_records = wp.count()
     t0 = time.time()
-    out = run_pipeline(spark, wp, PipelineConfig(shuffle_partitions=cpus), use_html=False)
+    out = run_pipeline(spark, wp, PipelineConfig(), use_html=False)
     n_pairs = out.pairs.count()
     out.clusters.write.format("noop").mode("overwrite").save()
     er_wall = time.time() - t0

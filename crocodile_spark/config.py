@@ -69,7 +69,6 @@ class PipelineConfig:
     max_cc_iterations: int = 20             # large-star/small-star bound
 
     # ---- execution ----
-    shuffle_partitions: int = 32
     # byte budget for FORCED broadcasts on the incremental delta path
     # (r6 ADVICE): row-count gates say nothing about bytes -- a 2M-row
     # url set at 300B/url is ~600MB in the driver. Gates estimate

@@ -142,40 +142,15 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-def monge_elkan(tokens_a, tokens_b) -> float:
-    """Symmetric Monge-Elkan over Jaro-Winkler: mean over tokens of one set
-    of the best JW match in the other, symmetrized by max of both
-    directions. The token-level analog of the reference's fuzzy candidate
-    retry (T5, crocodile/processors.py:177-202): robust to one-char typos
-    and token reordering where whole-string edit distance is not."""
-    ta = [] if tokens_a is None else [t for t in tokens_a if t]
-    tb = [] if tokens_b is None else [t for t in tokens_b if t]
-    if not ta or not tb:
-        return 0.0
-
-    def one_way(src, dst):
-        return sum(max(jaro_winkler(s, d) for d in dst) for s in src) / len(src)
-
-    return max(one_way(ta, tb), one_way(tb, ta))
-
-
-@F.pandas_udf(T.DoubleType())
-def monge_elkan_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched Monge-Elkan over two array<string> token columns."""
-    return pd.Series(
-        [monge_elkan(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
 def monge_elkan_lev(a: Column | str, b: Column | str) -> Column:
     """Native Monge-Elkan over Levenshtein similarity: for each token of
     one set, the best edit-similarity match in the other, averaged;
     symmetrized by max of both directions. 0.0 when either side is empty.
 
     100% JVM expressions (nested higher-order functions around the native
-    ``levenshtein``): no Python in the hot path, unlike the Jaro-Winkler
-    variant. Token arrays are small (mention signatures), so the
-    |A| x |B| inner loop is cheap and codegen-friendly.
+    ``levenshtein``): no Python in the hot path. Token arrays are small
+    (mention signatures), so the |A| x |B| inner loop is cheap and
+    codegen-friendly.
 
     r8: the |A| x |B| similarity matrix is built ONCE and both directions
     read it -- lev_sim is exactly symmetric (levenshtein and greatest of

@@ -43,9 +43,10 @@ Cost: O(|batch| + |affected cluster members| + |rebuilt signatures|) on
 top of scan-only passes over the stored tables -- no corpus-scale
 shuffle, the same posture as the delta path it extends.
 
-Equivalence boundary, measured (scripts/recrawl_drift_diag.py at 210k
-and 529k; BENCH.md r7): the upsert generates EVERY edge the full re-run
-accepts (zero missed, all key families, both modes). Where partitions
+Equivalence boundary, measured at 210k and 529k (BENCH.md "529k: the
+wall-clock evidence, and where the exactness boundary is"): the upsert
+generates EVERY edge the full re-run accepts (zero missed, all key
+families, both modes). Where partitions
 diverge at scale (~1.7% of urls at 529k/21%-batch), it is the full
 re-run that drops base-validated old-old edges -- corpus growth pushes
 their blocks over the cap, so it never regenerates pairs the base had

@@ -3,8 +3,7 @@
 ``readStream`` over a web_pages directory -> the same frozen normalization
 laws as the batch stage (the transformation is stateless, row-local) ->
 ``writeStream`` appending to the records table with exactly-once file-sink
-semantics (checkpointLocation). Event-time windowed counts over warc_ts
-(with a watermark for late crawls) feed the ingest-rate metrics table.
+semantics (checkpointLocation).
 """
 
 from __future__ import annotations
@@ -36,15 +35,6 @@ def normalize_stream(
         .parquet(input_dir)
     )
     return normalize_pages(stream, use_html=use_html)
-
-
-def ingest_rate(stream_records: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Event-time ingest counts with a 2-hour watermark for late crawls."""
-    return (
-        stream_records.withWatermark("warc_ts", "2 hours")
-        .groupBy(F.window("warc_ts", window), "lang")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-    )
 
 
 def dedup_stream(stream_records: DataFrame, within: str = "24 hours") -> DataFrame:

@@ -61,7 +61,6 @@ def main() -> None:
         checkpoint_dir=args.output,
         max_block_size=args.max_block_size,
         score_threshold=args.threshold,
-        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
         resume_buckets=args.resume_buckets,
     )
     web_pages = spark.read.parquet(args.input)

@@ -58,7 +58,7 @@ def main() -> None:
         embedding_dim=16 if with_emb else 0,
     )
     wp, _, gold = corpus_to_spark(spark, corpus)
-    out = run_pipeline(spark, wp, PipelineConfig(shuffle_partitions=8), use_html=True)
+    out = run_pipeline(spark, wp, PipelineConfig(), use_html=True)
 
     # label every blocked pair from the planted entity ids (the gold table
     # only covers a sample of negatives; this gives balanced hard negatives

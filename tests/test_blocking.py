@@ -24,7 +24,7 @@ def test_cap_blocks_drops_oversized(spark):
 
 
 def test_generate_pairs_orientation_and_dedup(spark):
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     keys = spark.createDataFrame(
         [("k", "b"), ("k", "a"), ("k", "c"), ("j", "a"), ("j", "b")],
         ["key", "url"],
@@ -51,7 +51,7 @@ def test_block_stage_recall_on_corpus(spark, corpus_dfs):
     """Every same-entity page pair should share at least one block key
     (recall of the blocking stage on the planted clusters)."""
     wp, _, gold = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=True)
     sigs, pairs = block(records, cfg)
     pos = gold.where(F.col("label") == 1)
@@ -159,7 +159,7 @@ def test_token_rich_records_keep_recall_under_sig_truncation(spark):
                 (f"http://h{e}x{p}.example.com/p{p}", f"{ent} {fillers}")
             )
     wp = spark.createDataFrame(rows, ["url", "text"])
-    cfg = PipelineConfig(sig_max_tokens=4, shuffle_partitions=4)
+    cfg = PipelineConfig(sig_max_tokens=4)
     records = normalize_pages(wp, use_html=False)
     sigs, pairs = block(records, cfg)
 
@@ -190,9 +190,7 @@ def test_token_rich_records_keep_recall_under_sig_truncation(spark):
     assert want <= got, want - got
     # and the budget really truncates: past block_max_tokens eligible
     # tokens the rarest win
-    tight = PipelineConfig(
-        sig_max_tokens=4, block_max_tokens=5, shuffle_partitions=4
-    )
+    tight = PipelineConfig(sig_max_tokens=4, block_max_tokens=5)
     sigs2, _ = block(records, tight)
     for r in sigs2.select("block_tokens").collect():
         assert len(r["block_tokens"]) == 5
@@ -298,7 +296,7 @@ def test_one_projection_keys_equal_union_law(spark, corpus_dfs):
         row_hash(F.col("text_norm")).alias("row_hash"),
     )
     records = corpus.unionByName(dirty)
-    for cfg in (PipelineConfig(shuffle_partitions=4), PipelineConfig(max_block_size=8)):
+    for cfg in (PipelineConfig(), PipelineConfig(max_block_size=8)):
         sigs = mention_signatures(records, cfg).localCheckpoint(eager=True)
         bands = {r["url"]: r["mh_bands"] for r in sigs.collect()}
         for url in ("dirty://a/null-text", "dirty://a/empty-text", "dirty://a/short-text"):

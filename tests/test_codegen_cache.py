@@ -21,7 +21,7 @@ def _compilations(spark) -> int:
 
 def _round(spark, wp) -> tuple:
     """The pipeline, MinHash dedup and LSH top-k once; their sorted rows."""
-    out = run_pipeline(spark, wp, PipelineConfig(shuffle_partitions=4), use_html=False)
+    out = run_pipeline(spark, wp, PipelineConfig(), use_html=False)
     corpus = wp.select(F.col("url").alias("cand_id"), "embedding")
     queries = corpus.select(F.col("cand_id").alias("query_id"), "embedding")
     return tuple(

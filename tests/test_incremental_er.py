@@ -52,7 +52,7 @@ def test_incremental_matches_batch_partition(spark, split_corpus):
     """Full-batch on the union == batch on 80% + incremental 20%: the
     cluster PARTITIONS (and the min-member roots) must be identical."""
     wp, old, new, gold = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
 
     full = run_pipeline(spark, wp, cfg)
     base = run_pipeline(spark, old, cfg)
@@ -75,7 +75,7 @@ def test_incremental_with_stored_static_keys_is_identical(spark, split_corpus):
     from crocodile_spark.operators.blocking import static_keys
 
     _, old, new, _ = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     stored = static_keys(base.signatures, cfg)
 
@@ -94,7 +94,7 @@ def test_incremental_pairs_all_touch_delta(spark, split_corpus):
     """No old-old pair is ever generated: the quadratic stage is
     delta-scoped by construction."""
     _, old, new, _ = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     inc = incremental_er(spark, base.records, base.clusters, new, cfg)
 
@@ -106,7 +106,7 @@ def test_incremental_pairs_all_touch_delta(spark, split_corpus):
 def test_incremental_empty_delta_is_identity(spark, split_corpus):
     """An empty delta returns the existing assignment unchanged."""
     _, old, new, _ = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     inc = incremental_er(spark, base.records, base.clusters, new.limit(0), cfg)
     assert inc.pairs.count() == 0
@@ -118,7 +118,7 @@ def test_incremental_recrawl_urls_are_ignored(spark, split_corpus):
     produce duplicate assignment rows: first version wins, re-crawled
     rows are dropped before the union."""
     _, old, new, _ = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     # poison the delta with 10 pages the base corpus already resolved
     recrawl = new.unionByName(old.limit(10))
@@ -157,7 +157,7 @@ def test_incremental_new_entity_forms_own_cluster(spark, split_corpus):
     """Entities whose every page is in the delta cluster among themselves,
     never absorbing old records."""
     _, old, new, _ = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     inc = incremental_er(spark, base.records, base.clusters, new, cfg)
 
@@ -209,7 +209,6 @@ def _state_fixture(spark):
         mention_df_fraction=0.15,
         sig_max_tokens=2,
         max_block_size=2,
-        shuffle_partitions=4,
     )
     base_rows = [
         ("http://h0.ex/b0", "lost aa0"),
@@ -313,7 +312,7 @@ def test_incremental_er_with_state_identical_partition(spark, split_corpus):
     )
 
     wp, old, new, gold = split_corpus
-    cfg = PipelineConfig(shuffle_partitions=8)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
     base.records.cache().count()
     base.signatures.cache().count()

@@ -30,7 +30,7 @@ spark = get_spark(app_name="kill-victim", master="local[4]", shuffle_partitions=
 corpus = make_corpus(n_entities={n}, pages_per_entity={p}, seed=42,
                      filler_range=(20, 60))
 wp, _, _ = corpus_to_spark(spark, corpus)
-cfg = PipelineConfig(shuffle_partitions=8, checkpoint_dir={root!r}, resume_buckets=4)
+cfg = PipelineConfig(checkpoint_dir={root!r}, resume_buckets=4)
 run_pipeline(spark, wp, cfg, use_html=True)
 print("WORKER-FINISHED")
 """
@@ -93,7 +93,7 @@ def test_sigkill_mid_scored_stage_then_resume(spark, tmp_path):
     corpus = make_corpus(n_entities=N_ENTITIES, pages_per_entity=PAGES, seed=42,
                          filler_range=(20, 60))
     wp, _, _ = corpus_to_spark(spark, corpus)
-    cfg = PipelineConfig(shuffle_partitions=8, checkpoint_dir=root, resume_buckets=4)
+    cfg = PipelineConfig(checkpoint_dir=root, resume_buckets=4)
     out = run_pipeline(spark, wp, cfg, use_html=True)
 
     # upstream stages resumed from the dead process's checkpoints; scored
@@ -108,7 +108,7 @@ def test_sigkill_mid_scored_stage_then_resume(spark, tmp_path):
 
     # and the result is IDENTICAL to an untouched fresh run
     fresh = run_pipeline(
-        spark, wp, PipelineConfig(shuffle_partitions=8, resume_buckets=4),
+        spark, wp, PipelineConfig(resume_buckets=4),
         use_html=True,
     )
     got = {(r["url"], r["cluster_id"]) for r in out.clusters.collect()}

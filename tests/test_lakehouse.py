@@ -14,7 +14,7 @@ from crocodile_spark.pipeline import run_pipeline
 def test_stage_resume_and_kill_recovery(spark, corpus_dfs, tmp_path):
     wp, _, _ = corpus_dfs
     root = str(tmp_path / "lake")
-    cfg = PipelineConfig(shuffle_partitions=4, checkpoint_dir=root)
+    cfg = PipelineConfig(checkpoint_dir=root)
 
     out1 = run_pipeline(spark, wp, cfg, use_html=True)
     assert all(not s["resumed"] for s in out1.stage_stats.values())
@@ -54,7 +54,7 @@ def test_stage_resume_and_kill_recovery(spark, corpus_dfs, tmp_path):
 def test_lineage_rows_written(spark, corpus_dfs, tmp_path):
     wp, _, _ = corpus_dfs
     root = str(tmp_path / "lake2")
-    cfg = PipelineConfig(shuffle_partitions=4, checkpoint_dir=root)
+    cfg = PipelineConfig(checkpoint_dir=root)
     run_pipeline(spark, wp, cfg, use_html=True)
     lin = Lakehouse(spark, root).lineage()
     assert lin is not None
@@ -79,7 +79,7 @@ def test_mid_stage_bucket_resume(spark, corpus_dfs, tmp_path):
     resumes by recomputing only the missing buckets, to identical output."""
     wp, _, _ = corpus_dfs
     root = str(tmp_path / "lake3")
-    cfg = PipelineConfig(shuffle_partitions=4, checkpoint_dir=root, resume_buckets=4)
+    cfg = PipelineConfig(checkpoint_dir=root, resume_buckets=4)
 
     out1 = run_pipeline(spark, wp, cfg, use_html=True)
     scored1 = {
@@ -123,7 +123,7 @@ def test_progress_phases_surface(spark, corpus_dfs, tmp_path):
     assert all(r["status"] == "PENDING" and r["rows_total"] == 0 for r in pre.values())
     assert pre["scored"]["phase"] == "SCORE"
 
-    cfg = PipelineConfig(shuffle_partitions=4, checkpoint_dir=root, resume_buckets=2)
+    cfg = PipelineConfig(checkpoint_dir=root, resume_buckets=2)
     out = run_pipeline(spark, wp, cfg, use_html=True)
     post = {r["stage"]: r for r in lake.progress_phases().collect()}
     assert all(r["status"] == "DONE" for r in post.values())
@@ -150,7 +150,7 @@ def test_stuck_detection(spark, corpus_dfs, tmp_path):
     assert stuck == ["signatures", "pairs", "scored", "clusters"]
 
     # completing everything clears STUCK regardless of timeout
-    cfg = PipelineConfig(shuffle_partitions=4, checkpoint_dir=root, resume_buckets=2)
+    cfg = PipelineConfig(checkpoint_dir=root, resume_buckets=2)
     run_pipeline(spark, wp, cfg, use_html=True)
     assert lake.stuck_stages(timeout_s=-1.0) == []
 

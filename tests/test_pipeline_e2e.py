@@ -13,7 +13,7 @@ from crocodile_spark.pipeline import evaluate_pairwise_f1, run_pipeline
 
 def test_pipeline_f1_gate(spark, corpus_dfs):
     wp, _, gold = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     out = run_pipeline(spark, wp, cfg, use_html=True)
     metrics = evaluate_pairwise_f1(out.clusters, gold, out.pairs)
     assert metrics["n_scoped_pairs"] > 100, metrics
@@ -24,7 +24,7 @@ def test_pipeline_clusters_match_planted_entities(spark, corpus_dfs):
     """Cluster purity: records of different entities must not co-cluster,
     and most entities must land in a single cluster."""
     wp, _, gold = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     out = run_pipeline(spark, wp, cfg, use_html=True)
     joined = out.clusters.join(wp.select("url", "entity_id"), "url")
     # purity: each cluster maps to exactly one entity
@@ -47,7 +47,7 @@ def test_pipeline_clusters_match_planted_entities(spark, corpus_dfs):
 
 def test_pipeline_deterministic(spark, corpus_dfs):
     wp, _, _ = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     a = run_pipeline(spark, wp, cfg, use_html=True).clusters
     b = run_pipeline(spark, wp, cfg, use_html=True).clusters
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -69,7 +69,7 @@ def test_pipeline_tolerates_malformed_html(spark):
     wp = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    out = run_pipeline(spark, wp, PipelineConfig(shuffle_partitions=4), use_html=True)
+    out = run_pipeline(spark, wp, PipelineConfig(), use_html=True)
     assert out.clusters.count() == 4
     assert out.clusters.where("cluster_id IS NULL").count() == 0
 
@@ -94,7 +94,7 @@ def test_pipeline_f1_with_embedding_feature(spark):
         spark,
         make_corpus(n_entities=40, pages_per_entity=6, seed=123, embedding_dim=16),
     )
-    out = run_pipeline(spark, wp, PipelineConfig(shuffle_partitions=8))
+    out = run_pipeline(spark, wp, PipelineConfig())
     assert "emb_cosine" in out.scored.columns
     m = evaluate_pairwise_f1(out.clusters, gold, out.pairs)
     assert m["f1"] >= 0.9998, m
@@ -102,7 +102,7 @@ def test_pipeline_f1_with_embedding_feature(spark):
     wp2, _, _ = corpus_to_spark(
         spark, make_corpus(n_entities=5, pages_per_entity=3, seed=123)
     )
-    out2 = run_pipeline(spark, wp2, PipelineConfig(shuffle_partitions=4))
+    out2 = run_pipeline(spark, wp2, PipelineConfig())
     assert "emb_cosine" not in out2.scored.columns
 
 

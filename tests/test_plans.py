@@ -66,7 +66,7 @@ def test_scoring_has_no_python_udf_in_plan(spark, corpus_dfs):
     from crocodile_spark.operators.scoring import score
 
     wp, _, _ = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=False)  # html UDF excluded here
     sigs, pairs = block(records, cfg)
     scored = score(pairs, sigs, cfg)
@@ -120,7 +120,7 @@ def test_pipeline_plans_have_no_cartesian_or_forced_broadcast(spark, corpus_dfs)
     from crocodile_spark.operators.scoring import score
 
     wp, _, _ = corpus_dfs
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=False)
     sigs, pairs = block(records, cfg)
     scored = score(pairs, sigs, cfg)

@@ -19,7 +19,6 @@ from crocodile_spark.functions.normalize import (
 )
 from crocodile_spark.functions.similarity import (
     levenshtein_similarity,
-    monge_elkan,
     monge_elkan_lev,
     ngram_jaccard,
     token_jaccard,
@@ -132,16 +131,6 @@ def test_monge_elkan_native_matches_python_lev_variant(spark):
     for r in rows:
         exp = py_me_lev(list(r["ta"]), list(r["tb"]))
         assert math.isclose(r["me"], exp, abs_tol=1e-9), (r["a"], r["b"])
-
-
-def test_monge_elkan_jw_symmetry_and_bounds():
-    rng = random.Random(3)
-    for _ in range(200):
-        ta = [w for w in _rand_strings(rng.randrange(0, 4), rng.randrange(10**6))]
-        tb = [w for w in _rand_strings(rng.randrange(0, 4), rng.randrange(10**6))]
-        v = monge_elkan(ta, tb)
-        assert 0.0 <= v <= 1.0
-        assert math.isclose(v, monge_elkan(tb, ta), abs_tol=1e-12)
 
 
 def test_portable_hash_law_matches_duckdb(spark):

@@ -108,7 +108,7 @@ def recrawl_fixture(spark):
         .cache()
     )
 
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, base_pages.select(*PAGE_COLS), cfg, use_html=False)
     base.clusters.cache().count()
     full = run_pipeline(spark, mutated_full, cfg, use_html=False)
@@ -237,7 +237,7 @@ def test_recrawl_bridge_update_dissolves_and_splits(spark):
         ("http://s12.ex/l", "frank fox gardening guide part one"),
     ]
     wp = spark.createDataFrame(rows, ["url", "text"])
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, wp, cfg, use_html=False)
 
     batch = spark.createDataFrame(
@@ -293,7 +293,6 @@ def test_incremental_signatures_removal_byte_identical(spark):
         mention_df_fraction=0.15,
         sig_max_tokens=2,
         max_block_size=2,
-        shuffle_partitions=4,
     )
     base_rows = [
         ("http://h0.ex/u0", "pp qq rr"),
@@ -452,7 +451,7 @@ def test_recrawl_bridge_update_splits_with_edge_retention(spark):
         ("http://s12.ex/l", "frank fox gardening guide part one"),
     ]
     wp = spark.createDataFrame(rows, ["url", "text"])
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     base = run_pipeline(spark, wp, cfg, use_html=False)
 
     batch = spark.createDataFrame(

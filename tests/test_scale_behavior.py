@@ -130,7 +130,7 @@ def test_pipeline_handles_pathological_corpus(spark):
     )
     from crocodile_spark.pipeline import run_pipeline
 
-    cfg = PipelineConfig(shuffle_partitions=4, max_block_size=16)
+    cfg = PipelineConfig(max_block_size=16)
     out = run_pipeline(spark, wp, cfg, use_html=False)
     assert out.pairs.count() == 119  # linear, not C(120,2)=7140
     assert out.clusters.count() == 120

@@ -12,7 +12,7 @@ def test_score_runs_on_every_core_with_identical_rows(spark, corpus_dfs):
     """A one-partition pair table (what AQE leaves after coalescing the
     small deduplicated pairs shuffle) is scored at defaultParallelism
     width, and the scored rows equal those of a 4-partition pair table."""
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     records = normalize_pages(corpus_dfs[0], use_html=True)
     sigs = mention_signatures(records, cfg).localCheckpoint(eager=True)
     pairs = pairs_from_signatures(sigs, cfg)

@@ -43,7 +43,7 @@ def paths(spark, tmp_path_factory):
         spark, make_corpus(n_entities=20, pages_per_entity=5, seed=29)
     )
     wp = wp.localCheckpoint(eager=True)
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     is_new = F.pmod(F.xxhash64("url"), F.lit(5)) == 0
     base_wp, new_wp = wp.where(~is_new), wp.where(is_new)
 
@@ -52,7 +52,6 @@ def paths(spark, tmp_path_factory):
 
     mem = run_pipeline(spark, wp, cfg, use_html=False)
     durable_cfg = PipelineConfig(
-        shuffle_partitions=4,
         checkpoint_dir=str(tmp_path_factory.mktemp("runner") / "lake"),
     )
     dur = run_pipeline(spark, wp, durable_cfg, use_html=False)
@@ -125,7 +124,7 @@ def test_known_record_count_spares_the_signature_count(spark):
     wp, _, _ = corpus_to_spark(
         spark, make_corpus(n_entities=20, pages_per_entity=5, seed=29)
     )
-    cfg = PipelineConfig(shuffle_partitions=4)
+    cfg = PipelineConfig()
     r = materialize("records", lambda: normalize_pages(wp, use_html=False))
     known, n_known = _jobs(
         spark, "runner-sigs-known", lambda: mention_signatures(r.df, cfg, r.rows)

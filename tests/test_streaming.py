@@ -153,7 +153,7 @@ def test_streaming_incremental_er_matches_batch(spark, tmp_path):
     for i, cond in enumerate([bucket <= 2, bucket == 3, bucket == 4]):
         wp.where(cond).coalesce(1).write.mode("append").parquet(src)
 
-    cfg = PipelineConfig(shuffle_partitions=8)
+    cfg = PipelineConfig()
     res = StreamingEntityResolution(
         spark, str(tmp_path / "state"), cfg, use_html=True
     )
@@ -200,7 +200,7 @@ def test_streaming_er_commit_is_idempotent(spark, tmp_path):
     base_df = wp.where(bucket <= 3)
     delta_df = wp.where(bucket == 4).cache()
 
-    cfg = PipelineConfig(shuffle_partitions=8)
+    cfg = PipelineConfig()
     res = StreamingEntityResolution(
         spark, str(tmp_path / "state"), cfg, use_html=True
     )
@@ -281,7 +281,7 @@ def test_streaming_er_snapshot_retention(spark, tmp_path):
     wp = wp.select("url", "warc_ts", "html", "text", "lang").cache()
     bucket = F.pmod(F.xxhash64("url"), F.lit(5))
 
-    cfg = PipelineConfig(shuffle_partitions=8)
+    cfg = PipelineConfig()
     state = str(tmp_path / "state")
     res = StreamingEntityResolution(
         spark, state, cfg, use_html=True, snapshot_retention=1
