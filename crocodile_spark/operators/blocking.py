@@ -357,6 +357,10 @@ _SHUFFLE_NODE_NAMES = frozenset(
      "DeduplicateWithinWatermark", "Intersect", "Except"}
 )
 
+# spread() leaves scans estimated below this many bytes narrow: widening
+# them only buys mostly-empty tasks
+SPREAD_MIN_BYTES = 64 << 10
+
 
 def _plan_probe(df: DataFrame) -> tuple[bool, int]:
     """(has_shuffle_node, estimated_size_bytes) from the OPTIMIZED logical
@@ -392,11 +396,7 @@ def _plan_probe(df: DataFrame) -> tuple[bool, int]:
     return found, size
 
 
-def spread(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    downstream_heavy: bool = False,
-) -> DataFrame:
+def spread(df: DataFrame, downstream_heavy: bool = False) -> DataFrame:
     """Width guard for per-row-heavy stages (hash signatures, HOF dot
     products, array Jaccard, Arrow UDF projections): a single-file local
     scan arrives as 1 partition and AQE coalesces small-BYTES/heavy-CPU
@@ -413,34 +413,28 @@ def spread(
     shuffle anyway; only scan-shaped inputs need the guard.
 
     r4 hardening (VERDICT #7 / ADVICE): the probe walks plan node TYPES
-    (no substring matching), ``spark.croco.spread.enabled=false`` disables
-    the guard entirely, frames whose estimated plan size is below
-    ``spark.croco.spread.minBytes`` (default 64 KiB; unknown sizes pass)
-    are left alone, and the repartition target is capped by the cluster's
-    defaultParallelism so a 200-partition shuffle default cannot fan a
-    tiny scan into mostly-empty tasks.
+    (no substring matching), frames whose estimated plan size is below
+    :data:`SPREAD_MIN_BYTES` (unknown sizes pass) are left alone, and the
+    repartition target is capped by the cluster's defaultParallelism so a
+    200-partition shuffle default cannot fan a tiny scan into mostly-empty
+    tasks.
 
     r5 (ADVICE r4): the byte floor reasons about INPUT size, but for
     super-linear downstream work (a crossJoin sweep: O(rows_left x
     rows_right) cosines) a sub-64KiB single-partition scan is exactly
     where quadratic work serializes on one core. Callers feeding such
     plans pass ``downstream_heavy=True`` to skip the floor -- the caller,
-    not the input bytes, knows the downstream cost shape. The
-    ``spark.croco.spread.minBytes=0`` escape hatch remains for config-only
-    control."""
+    not the input bytes, knows the downstream cost shape."""
     sess = df.sparkSession
-    if str(sess.conf.get("spark.croco.spread.enabled", "true")).lower() != "true":
-        return df
     try:
         has_shuffle, size_bytes = _plan_probe(df)
     except Exception:
         return df  # benign fallback: private-API drift must not break callers
     if has_shuffle:
         return df
-    min_bytes = int(sess.conf.get("spark.croco.spread.minBytes", "65536"))
-    if not downstream_heavy and 0 <= size_bytes < min_bytes:
+    if not downstream_heavy and 0 <= size_bytes < SPREAD_MIN_BYTES:
         return df
-    target = min_partitions or min(
+    target = min(
         int(sess.conf.get("spark.sql.shuffle.partitions")),
         sess.sparkContext.defaultParallelism,
     )

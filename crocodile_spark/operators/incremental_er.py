@@ -7,16 +7,19 @@ involve at least one NEW record, and clustering must not rebuild the
 whole component graph. This module provides exactly that asymmetry:
 
 - **normalize**: only the delta is normalized (row-local, linear in delta).
-- **signatures**: with stored token-DF state (``existing_token_df`` +
-  ``existing_n_records`` + ``existing_signatures``), document frequencies
-  are MERGED (a vocab-scale outer join of the stored (token, df) table
-  with delta counts) instead of re-aggregated over the union, and
-  signatures are rebuilt ONLY for the delta plus the old records holding a
-  token whose distinctive/rank status changed under the new counts (a
-  narrow ``arrays_overlap`` scan -- no full-union explode, no corpus-wide
-  groupBy). Byte-identical to the full recompute by the classification
-  law in :func:`incremental_signatures`. Without state, falls back to
-  recomputing over the union (linear, the r5 behavior).
+- **state**: the stored resolution is one :class:`ResolutionState`
+  (records, clusters, signatures, static keys, token document
+  frequencies, record count, optionally accepted edges), built from a
+  batch run by :meth:`ResolutionState.from_pipeline`; every delta
+  operator takes one and hands the next one back.
+- **signatures**: document frequencies are MERGED (:func:`merge_token_df`,
+  a vocab-scale outer join of the stored (token, df) table with delta
+  counts) instead of re-aggregated over the union, and signatures are
+  rebuilt ONLY for the delta plus the old records holding a token whose
+  distinctive/rank status changed under the new counts (a narrow semi
+  join -- no full-union explode, no corpus-wide groupBy). Byte-identical
+  to the full recompute by the classification law in
+  :func:`incremental_signatures`.
 - **pairs**: an asymmetric key join -- capped blocking keys of NEW records
   against capped keys of ALL records -- yields exactly the pairs touching
   the delta. Old-old pairs are never generated (they were scored when the
@@ -56,7 +59,6 @@ from pyspark.sql import functions as F
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.lakehouse import StageResult, materialize
 from crocodile_spark.operators.blocking import (
-    blocking_keys,
     cap_blocks,
     exact_dup_pairs,
     mention_df_threshold,
@@ -69,6 +71,86 @@ from crocodile_spark.operators.blocking import (
 from crocodile_spark.operators.clustering import connected_components
 from crocodile_spark.operators.normalize_stage import normalize_pages
 from crocodile_spark.operators.scoring import score
+from crocodile_spark.pipeline import PipelineOutput
+
+
+@dataclass
+class ResolutionState:
+    """A stored resolution: what a delta is resolved against, and what
+    :func:`incremental_er` and
+    :func:`~crocodile_spark.operators.recrawl.recrawl_upsert` hand back
+    for the next batch.
+
+    ``token_df`` is ``token_document_frequencies(records)`` and
+    ``static_keys`` is ``static_keys(signatures)``, kept so a delta never
+    re-aggregates or re-projects the corpus. ``edges`` (the accepted
+    (url_a, url_b) edges) is optional: with it a re-crawl repairs
+    dissolved clusters from their surviving edges instead of re-scoring
+    them."""
+
+    records: DataFrame      # normalized records
+    clusters: DataFrame     # (url, cluster_id), cluster_id = min member url
+    signatures: DataFrame   # signature table
+    static_keys: DataFrame  # host + MinHash (url, key) rows
+    token_df: DataFrame     # (token, df) over records
+    n_records: int
+    edges: DataFrame | None = None
+
+    @classmethod
+    def from_pipeline(
+        cls,
+        out: PipelineOutput,
+        cfg: PipelineConfig | None = None,
+        edges: bool = False,
+    ) -> ResolutionState:
+        """The state of a ``run_pipeline`` output: lazy frames over its
+        stage tables, ``n_records`` from its ``stage_stats`` (no count
+        job); ``edges=True`` keeps its accepted edges."""
+        cfg = cfg or PipelineConfig()
+        return cls(
+            records=out.records,
+            clusters=out.clusters,
+            signatures=out.signatures,
+            static_keys=static_keys(out.signatures, cfg),
+            token_df=token_document_frequencies(out.records, cfg),
+            n_records=out.stage_stats["records"]["rows"],
+            edges=(
+                out.scored.where(F.col("is_edge")).select("url_a", "url_b")
+                if edges
+                else None
+            ),
+        )
+
+    def advance(
+        self,
+        survivors: DataFrame,
+        survivor_keys: DataFrame,
+        delta: StageResult,
+        signatures: DataFrame,
+        clusters: DataFrame,
+        edges: DataFrame | None,
+        cfg: PipelineConfig,
+        removed: DataFrame | None = None,
+        n_removed: int = 0,
+    ) -> ResolutionState:
+        """The state after ``delta`` entered this one and ``removed``
+        (whose records and keys are already gone from ``survivors`` and
+        ``survivor_keys``) left it: ``signatures``, ``clusters`` and
+        ``edges`` are the delta operator's, the token DF is merged by
+        :func:`merge_token_df`, and only the delta's static keys are
+        projected."""
+        delta_sigs = signatures.join(delta.df.select("url"), "url", "semi")
+        return ResolutionState(
+            records=survivors.select(*delta.df.columns).unionByName(delta.df),
+            clusters=clusters,
+            signatures=signatures,
+            static_keys=survivor_keys.unionByName(static_keys(delta_sigs, cfg)),
+            token_df=merge_token_df(self.token_df, delta.df, cfg, removed).select(
+                "token", "df"
+            ),
+            n_records=self.n_records - n_removed + delta.rows,
+            edges=edges,
+        )
 
 
 @dataclass
@@ -77,15 +159,8 @@ class IncrementalOutput:
     pairs: DataFrame          # delta-touching candidate pairs only
     scored: DataFrame         # scored delta-touching pairs
     clusters: DataFrame       # FULL updated assignment (url, cluster_id)
-    signatures: DataFrame | None = None  # union signature table
+    state: ResolutionState    # the resolution after the delta
     stage_stats: dict = field(default_factory=dict)
-
-    def unpersist(self) -> None:
-        """Nothing to release: every frame :func:`incremental_er`
-        materializes is a ``localCheckpoint``
-        (:func:`~crocodile_spark.lakehouse.materialize`), not a cache, and
-        its blocks are freed by the ContextCleaner once the output object
-        is garbage-collected. Kept so per-batch loops may call it."""
 
 
 def broadcast_if_small(
@@ -106,6 +181,37 @@ def broadcast_if_small(
     row = df.limit(10_000).select(F.avg(F.length(F.col(col))).alias("l")).first()
     est = n_rows * (2.0 * float(row["l"] or 0.0) + 48.0)
     return F.broadcast(df) if est <= cfg.broadcast_bytes_cap else df
+
+
+def merge_token_df(
+    token_df: DataFrame,
+    delta: DataFrame,
+    cfg: PipelineConfig,
+    removed: DataFrame | None = None,
+) -> DataFrame:
+    """(token, df, df_old): the stored (token, df) table with ``delta``'s
+    document frequencies added and ``removed``'s subtracted -- the union's
+    ``token_document_frequencies`` from vocab-scale outer joins, without
+    re-aggregating the corpus. ``df_old`` is the stored count (NULL for a
+    token new to the corpus); tokens left with no holder drop out."""
+    merged = token_df.select("token", F.col("df").alias("df_old")).join(
+        token_document_frequencies(delta, cfg).select(
+            "token", F.col("df").alias("df_delta")
+        ),
+        "token",
+        "full_outer",
+    )
+    df = F.coalesce("df_old", F.lit(0)) + F.coalesce("df_delta", F.lit(0))
+    if removed is not None:
+        merged = merged.join(
+            token_document_frequencies(removed, cfg).select(
+                "token", F.col("df").alias("df_removed")
+            ),
+            "token",
+            "full_outer",
+        )
+        df = df - F.coalesce("df_removed", F.lit(0))
+    return merged.select("token", df.alias("df"), "df_old").where(F.col("df") > 0)
 
 
 def incremental_signatures(
@@ -181,30 +287,7 @@ def incremental_signatures(
         cfg, existing_n_records - n_removed + n_delta
     )
     B = cfg.max_block_size
-    delta_df = token_document_frequencies(delta, cfg)
-    merged = existing_token_df.select("token", F.col("df").alias("df_old")).join(
-        delta_df.select("token", F.col("df").alias("df_delta")),
-        "token",
-        "full_outer",
-    )
-    if removed_records is not None:
-        removed_df = token_document_frequencies(removed_records, cfg)
-        merged = merged.join(
-            removed_df.select("token", F.col("df").alias("df_removed")),
-            "token",
-            "full_outer",
-        )
-    else:
-        merged = merged.withColumn("df_removed", F.lit(None).cast("long"))
-    merged = merged.select(
-        "token",
-        (
-            F.coalesce("df_old", F.lit(0))
-            + F.coalesce("df_delta", F.lit(0))
-            - F.coalesce("df_removed", F.lit(0))
-        ).alias("df"),
-        "df_old",
-    ).where(F.col("df") > 0)
+    merged = merge_token_df(existing_token_df, delta, cfg, removed_records)
     old_distinct = F.col("df_old") <= F.lit(c_old)
     new_distinct = F.col("df") <= F.lit(c_new)
     base_changed = merged.where(
@@ -294,35 +377,31 @@ def incremental_signatures(
 
 
 def union_signatures(
+    state: ResolutionState,
     base_records: DataFrame,
     delta: DataFrame,
     n_delta: int,
     cfg: PipelineConfig,
-    existing_signatures: DataFrame | None,
-    existing_token_df: DataFrame | None,
-    existing_n_records: int | None,
     removed_records: DataFrame | None = None,
     n_removed: int = 0,
 ) -> DataFrame:
     """Signature table of ``base_records`` plus ``delta``: the
-    stored-state merge law of :func:`incremental_signatures` when all
-    three state tables are given and its flip set fits, else
-    ``mention_signatures`` over the union."""
-    state = (existing_signatures, existing_token_df, existing_n_records)
-    if all(x is not None for x in state):
-        sigs = incremental_signatures(
-            base_records,
-            existing_signatures,
-            existing_token_df,
-            existing_n_records,
-            delta,
-            n_delta,
-            cfg,
-            removed_records=removed_records,
-            n_removed=n_removed,
-        )
-        if sigs is not None:
-            return sigs
+    stored-state merge law of :func:`incremental_signatures`, or
+    ``mention_signatures`` over the union when its flip set outgrows the
+    collect cap."""
+    sigs = incremental_signatures(
+        base_records,
+        state.signatures,
+        state.token_df,
+        state.n_records,
+        delta,
+        n_delta,
+        cfg,
+        removed_records=removed_records,
+        n_removed=n_removed,
+    )
+    if sigs is not None:
+        return sigs
     return mention_signatures(
         base_records.select(*delta.columns).unionByName(delta), cfg
     )
@@ -332,7 +411,7 @@ def delta_pairs(
     sigs: DataFrame,
     new_urls: DataFrame,
     cfg: PipelineConfig,
-    existing_static_keys: DataFrame | None = None,
+    existing_static_keys: DataFrame,
     seed_urls: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs touching at least one new record.
@@ -344,15 +423,15 @@ def delta_pairs(
     The join is delta_keys x block members, so work is
     O(|delta| * avg_block_size), not O(corpus^2).
 
-    With ``existing_static_keys`` (the stored (url, key) host+MinHash rows
-    of the already-resolved records), only the NEW records' static keys
+    ``existing_static_keys`` are the stored (url, key) host+MinHash rows
+    of the already-resolved records, so only the NEW records' static keys
     are projected from ``sigs``; the corpus-DF-dependent ``tok:`` family
-    is still recomputed over the union. Shingling itself happens in the
-    signature stage (``mh_bands``), so on the stored-state path it runs
-    over the rebuilt signatures only -- the delta plus the old records
-    whose signature the DF merge rebuilt. The resulting key set is
-    BYTE-IDENTICAL to the full recompute -- static keys are per-record
-    constants -- so pair generation and the final partition are unchanged.
+    is recomputed over the union. Shingling itself happens in the
+    signature stage (``mh_bands``), so it runs over the rebuilt
+    signatures only -- the delta plus the old records whose signature the
+    DF merge rebuilt. The resulting key set is BYTE-IDENTICAL to the full
+    recompute -- static keys are per-record constants -- so the pairs are
+    exactly the full run's candidate pairs that touch a new record.
 
     ``seed_urls`` (r7, the re-crawl upsert path) decouples the two roles
     ``new_urls`` plays: ``new_urls`` stays "records with no stored static
@@ -364,60 +443,57 @@ def delta_pairs(
     seed == new_urls.
     """
     seed = new_urls if seed_urls is None else seed_urls
-    if existing_static_keys is None:
-        keys = blocking_keys(sigs, cfg)
+    delta_sigs = sigs.join(new_urls, "url", "semi")
+    delta_static = static_keys(delta_sigs, cfg)
+    keys = (
+        token_keys(sigs)
+        .union(existing_static_keys.select("url", "key"))
+        .union(delta_static)
+    )
+    # Restrict the key universe to DELTA-HELD keys before capping.
+    # Equivalent law: a pair requires a key held by a new record
+    # (new_keys below), and the semi join keeps every member row of
+    # each kept key, so per-key cap counts are identical -- the only
+    # rows dropped belong to keys that could never produce a pair.
+    # The cap groupBy then shuffles members of delta-held keys
+    # (pair-fraction scale) instead of the full O(N x keys/record)
+    # universe. The delta key set is delta-scale and broadcasts.
+    # (An r6-draft A/B under heavy host noise was inconclusive; the
+    # quiet per-phase probes showed the unrestricted cap shuffle at
+    # ~15 s of a 40 s pairs stage at 529k/5% -- see BENCH.md r6.)
+    # Materialized: the key list is delta-scale, but its PLAN embeds
+    # the MinHash band-key expression forest; the cap and pair joins
+    # below replicate their input subtree 4x during planning, and with
+    # the un-truncated delta_keys tree inside, the duplicated
+    # expression forest OOMed the driver while merely FORMATTING the
+    # plan string. The checkpoint collapses it to a scan leaf.
+    if seed_urls is None:
+        seed_sigs, seed_static = delta_sigs, delta_static
     else:
-        delta_sigs = sigs.join(new_urls, "url", "semi")
-        delta_static = static_keys(delta_sigs, cfg)
-        keys = (
-            token_keys(sigs)
-            .union(existing_static_keys.select("url", "key"))
-            .union(delta_static)
-        )
-        # Restrict the key universe to DELTA-HELD keys before capping.
-        # Equivalent law: a pair requires a key held by a new record
-        # (new_keys below), and the semi join keeps every member row of
-        # each kept key, so per-key cap counts are identical -- the only
-        # rows dropped belong to keys that could never produce a pair.
-        # The cap groupBy then shuffles members of delta-held keys
-        # (pair-fraction scale) instead of the full O(N x keys/record)
-        # universe. The delta key set is delta-scale and broadcasts.
-        # (An r6-draft A/B under heavy host noise was inconclusive; the
-        # quiet per-phase probes showed the unrestricted cap shuffle at
-        # ~15 s of a 40 s pairs stage at 529k/5% -- see BENCH.md r6.)
-        # Materialized: the key list is delta-scale, but its PLAN embeds
-        # the MinHash band-key expression forest; the cap and pair joins
-        # below replicate their input subtree 4x during planning, and with
-        # the un-truncated delta_keys tree inside, the duplicated
-        # expression forest OOMed the driver while merely FORMATTING the
-        # plan string. The checkpoint collapses it to a scan leaf.
-        if seed_urls is None:
-            seed_sigs, seed_static = delta_sigs, delta_static
-        else:
-            seed_sigs = sigs.join(seed, "url", "semi")
-            # seeds that are old records pair through their STORED static
-            # keys; only content-new urls (new_urls) take theirs from sigs
-            seed_static = delta_static.union(
-                existing_static_keys.select("url", "key").join(
-                    seed, "url", "semi"
-                )
+        seed_sigs = sigs.join(seed, "url", "semi")
+        # seeds that are old records pair through their STORED static
+        # keys; only content-new urls (new_urls) take theirs from sigs
+        seed_static = delta_static.union(
+            existing_static_keys.select("url", "key").join(
+                seed, "url", "semi"
             )
-        dk = materialize(
-            "delta_keys",
-            lambda: token_keys(seed_sigs)
-            .select("key")
-            .union(seed_static.select("key"))
-            .distinct(),
         )
-        # Broadcast the materialized key set when it is hash-table-sized:
-        # the semi join then FILTERS the key universe during the scan with
-        # no shuffle at all, which is the whole point -- a sort-merge semi
-        # would shuffle the full O(N x keys/record) universe once more and
-        # cost more than the cap shuffle it saves (measured: pairs stage
-        # 40 s unrestricted vs 96 s restricted-SMJ at 529k/5%). Past the
-        # byte gate (huge deltas), fall back to the shuffle semi, where
-        # the cap saving still applies.
-        keys = keys.join(broadcast_if_small(dk.df, "key", dk.rows, cfg), "key", "semi")
+    dk = materialize(
+        "delta_keys",
+        lambda: token_keys(seed_sigs)
+        .select("key")
+        .union(seed_static.select("key"))
+        .distinct(),
+    )
+    # Broadcast the materialized key set when it is hash-table-sized:
+    # the semi join then FILTERS the key universe during the scan with
+    # no shuffle at all, which is the whole point -- a sort-merge semi
+    # would shuffle the full O(N x keys/record) universe once more and
+    # cost more than the cap shuffle it saves (measured: pairs stage
+    # 40 s unrestricted vs 96 s restricted-SMJ at 529k/5%). Past the
+    # byte gate (huge deltas), fall back to the shuffle semi, where
+    # the cap saving still applies.
+    keys = keys.join(broadcast_if_small(dk.df, "key", dk.rows, cfg), "key", "semi")
     capped = cap_blocks(keys, cfg)
     new_keys = capped.join(seed, "url", "semi")
     cand = (
@@ -454,7 +530,7 @@ def score_delta_pairs(
     sigs: DataFrame,
     new_urls: DataFrame,
     cfg: PipelineConfig,
-    existing_static_keys: DataFrame | None = None,
+    existing_static_keys: DataFrame,
     seed_urls: DataFrame | None = None,
 ) -> tuple[StageResult, StageResult]:
     """The ``pairs`` and ``scored`` stages of the delta paths:
@@ -549,36 +625,21 @@ def merge_clusters(
 
 def incremental_er(
     spark: SparkSession,
-    existing_records: DataFrame,
-    existing_clusters: DataFrame,
+    state: ResolutionState,
     new_pages: DataFrame,
     cfg: PipelineConfig | None = None,
     use_html: bool = True,
-    existing_static_keys: DataFrame | None = None,
-    existing_signatures: DataFrame | None = None,
-    existing_token_df: DataFrame | None = None,
-    existing_n_records: int | None = None,
 ) -> IncrementalOutput:
-    """Resolve ``new_pages`` against an existing resolution.
+    """Resolve ``new_pages`` against the stored resolution ``state``
+    (:meth:`ResolutionState.from_pipeline` over a batch run, or the
+    ``state`` of an earlier delta).
 
-    ``existing_records`` is the normalized records table of the already
-    resolved corpus (url, tokens, row_hash, host, text_norm, ...);
-    ``existing_clusters`` its (url, cluster_id) assignment with the batch
-    convention cluster_id = min member url. ``existing_static_keys``
-    (optional): the stored host+MinHash (url, key) rows of the resolved
-    corpus -- pass ``static_keys(base_signatures, cfg)`` persisted at base
-    resolution time to skip projecting the corpus' static keys; the key
-    set (and therefore the output) is identical either way.
-
-    ``existing_signatures`` + ``existing_token_df`` +
-    ``existing_n_records`` (r6, pass all three): the stored signature
-    table, its (token, df) aggregate
-    (``blocking.token_document_frequencies`` over the base records), and
-    the base record count. With them the union signature table comes from
-    :func:`incremental_signatures` -- delta counts merged into the stored
-    DF table, signatures rebuilt only for delta + status-changed records
-    -- removing the last corpus-linear aggregation from the delta path.
-    Output is byte-identical with or without state.
+    The union signature table comes from :func:`incremental_signatures`
+    -- delta counts merged into the stored DF table, signatures rebuilt
+    only for delta + status-changed records -- so no stage aggregates the
+    corpus. The output ``state`` is the resolution after the delta, ready
+    for the next one; ``state.edges``, when kept, gains the delta's
+    accepted edges.
     """
     cfg = cfg or PipelineConfig()
 
@@ -590,36 +651,34 @@ def incremental_er(
         # below). First version wins -- re-crawl UPDATES are
         # :func:`~crocodile_spark.operators.recrawl.recrawl_upsert`.
         # The anti-join build side is CORPUS-scale, so broadcast only
-        # under a known byte budget (state path passes
-        # existing_n_records); past it, the shuffle anti-join stands in
-        # for what a 10^12-doc deployment would do with a bloom-filter
+        # under a known byte budget; past it, the shuffle anti-join stands
+        # in for what a 10^12-doc deployment would do with a bloom-filter
         # pre-pass + exact check on hits.
-        guard = existing_records.select("url")
-        if existing_n_records is not None:
-            guard = broadcast_if_small(guard, "url", existing_n_records, cfg)
+        guard = broadcast_if_small(
+            state.records.select("url"), "url", state.n_records, cfg
+        )
         return normalize_pages(new_pages, use_html).join(guard, "url", "left_anti")
 
     rec = materialize("records", records)
     new_urls = rec.df.select("url")
     sig = materialize(
         "signatures",
-        lambda: union_signatures(
-            existing_records, rec.df, rec.rows, cfg, existing_signatures,
-            existing_token_df, existing_n_records,
-        ),
+        lambda: union_signatures(state, state.records, rec.df, rec.rows, cfg),
     )
-    p, sc = score_delta_pairs(sig.df, new_urls, cfg, existing_static_keys)
+    p, sc = score_delta_pairs(sig.df, new_urls, cfg, state.static_keys)
+    new_edges = sc.df.where(F.col("is_edge")).select("url_a", "url_b")
     cl = materialize(
         "clusters",
         lambda: merge_clusters(
-            existing_clusters,
-            new_urls,
-            sc.df.where(F.col("is_edge")).select("url_a", "url_b"),
-            cfg.max_cc_iterations,
+            state.clusters, new_urls, new_edges, cfg.max_cc_iterations
         ),
     )
+    edges = None if state.edges is None else state.edges.unionByName(new_edges)
     stages = (rec, sig, p, sc, cl)
     return IncrementalOutput(
-        rec.df, p.df, sc.df, cl.df, signatures=sig.df,
+        rec.df, p.df, sc.df, cl.df,
+        state=state.advance(
+            state.records, state.static_keys, rec, sig.df, cl.df, edges, cfg
+        ),
         stage_stats={st.name: st.stats() for st in stages},
     )

@@ -31,7 +31,7 @@ while touching only delta-scale state:
   rows plus the dissolved members reproduces the full re-run's decisions
   under the same stable-DF-profile caveat documented on
   :func:`incremental_er` (old-old blocks created purely by cutoff drift
-  are skipped there too). With ``existing_edges`` (edge-retaining
+  are skipped there too). With ``state.edges`` (edge-retaining
   repair), dissolved members leave the seed entirely: their surviving
   old edges stand in for re-scoring, and only delta-touched pairs are
   regenerated -- O(delta) repair (see the function docstring).
@@ -70,6 +70,7 @@ from pyspark.sql.window import Window
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.lakehouse import materialize
 from crocodile_spark.operators.incremental_er import (
+    ResolutionState,
     broadcast_if_small,
     merge_clusters,
     score_delta_pairs,
@@ -86,39 +87,23 @@ class RecrawlOutput:
     pairs: DataFrame            # regenerated candidate pairs (seed-touching)
     scored: DataFrame           # scored pairs
     clusters: DataFrame         # FULL updated (url, cluster_id) assignment
-    signatures: DataFrame | None = None
-    n_records: int | None = None  # corpus size after the upsert
-    edges: DataFrame | None = None  # updated accepted-edge state (when existing_edges given)
+    state: ResolutionState      # the resolution after the upsert
     stage_stats: dict = field(default_factory=dict)
-
-    def unpersist(self) -> None:
-        """Nothing to release (same contract as
-        :meth:`IncrementalOutput.unpersist`): every materialized frame is
-        a ``localCheckpoint`` freed by the ContextCleaner."""
 
 
 def recrawl_upsert(
     spark: SparkSession,
-    existing_records: DataFrame,
-    existing_clusters: DataFrame,
+    state: ResolutionState,
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
     use_html: bool = True,
-    existing_static_keys: DataFrame | None = None,
-    existing_signatures: DataFrame | None = None,
-    existing_token_df: DataFrame | None = None,
-    existing_n_records: int | None = None,
-    existing_edges: DataFrame | None = None,
 ) -> RecrawlOutput:
-    """Upsert a re-crawl batch into an existing resolution.
+    """Upsert a re-crawl batch into the stored resolution ``state`` (as
+    :func:`incremental_er` takes it). The signature rebuild is the
+    O(delta) merge law with removal support.
 
-    State arguments mirror :func:`incremental_er`; with the full stored
-    state (signatures + token_df + n_records) the signature rebuild is
-    the O(delta) merge law with removal support, otherwise signatures
-    recompute over the survivor union (linear fallback).
-
-    ``existing_edges`` (r7, edge-retaining repair): the base resolution's
-    accepted edges (``base.scored.where("is_edge").select(url_a,url_b)``).
+    ``state.edges`` (r7, edge-retaining repair): the base resolution's
+    accepted edges (``ResolutionState.from_pipeline(..., edges=True)``).
     Without them, an updated url dissolves its WHOLE cluster into the
     pair-generation seed -- measured at 111k with ~5% scattered updates,
     that rescored 63% of the full pair volume (BENCH.md r7). With them,
@@ -129,9 +114,9 @@ def recrawl_upsert(
     stable-DF-profile law as :func:`incremental_er`'s old-old contract),
     and those edges re-enter clustering alongside the fresh ones. Repair
     cost drops from O(affected-cluster members x block size) to
-    O(delta-touched pairs). The output ``edges`` carries the updated edge
-    state for the next batch: old edges minus re-decided incidents, plus
-    newly accepted -- maintain it exactly like signatures/token_df.
+    O(delta-touched pairs). The output ``state.edges`` carries the
+    updated edge state for the next batch: old edges minus re-decided
+    incidents, plus newly accepted.
     """
     cfg = cfg or PipelineConfig()
     # one row per url per batch, deterministic winner (max row_hash):
@@ -149,7 +134,7 @@ def recrawl_upsert(
     batch_urls = broadcast_if_small(batch.df.select("url"), "url", batch.rows, cfg)
     stored_hits = materialize(
         "stored_hits",
-        lambda: existing_records.select("url", F.col("row_hash").alias("old_hash"))
+        lambda: state.records.select("url", F.col("row_hash").alias("old_hash"))
         .join(batch_urls, "url", "semi"),
     )
     cls = batch.df.join(stored_hits.df, "url", "left")
@@ -166,40 +151,35 @@ def recrawl_upsert(
     # -- remove old versions + dissolve their clusters -------------------
     if n_updated:
         upd = broadcast_if_small(updated_urls, "url", n_updated, cfg)
-        removed = existing_records.join(upd, "url", "semi")
-        base_records = existing_records.join(upd, "url", "left_anti")
+        removed = state.records.join(upd, "url", "semi")
+        base_records = state.records.join(upd, "url", "left_anti")
         affected = materialize(
             "affected_cids",
-            lambda: existing_clusters.join(upd, "url", "semi")
+            lambda: state.clusters.join(upd, "url", "semi")
             .select("cluster_id")
             .distinct(),
         )
         cid = broadcast_if_small(affected.df, "cluster_id", affected.rows, cfg)
         members = (
-            existing_clusters.join(cid, "cluster_id", "semi")
+            state.clusters.join(cid, "cluster_id", "semi")
             .select("url")
             .join(upd, "url", "left_anti")
         )
-        base_clusters = existing_clusters.join(cid, "cluster_id", "left_anti")
-        stored_keys = (
-            existing_static_keys.join(upd, "url", "left_anti")
-            if existing_static_keys is not None
-            else None
-        )
+        base_clusters = state.clusters.join(cid, "cluster_id", "left_anti")
+        stored_keys = state.static_keys.join(upd, "url", "left_anti")
     else:
         removed = None
-        base_records = existing_records
+        base_records = state.records
         members = spark.createDataFrame([], "url string")
-        base_clusters = existing_clusters
-        stored_keys = existing_static_keys
+        base_clusters = state.clusters
+        stored_keys = state.static_keys
 
     # -- signatures: merge law with removal support ----------------------
     rebuilt: list[DataFrame] = []  # old urls the merge law re-signed
 
     def signatures() -> DataFrame:
         sigs = union_signatures(
-            base_records, delta, rec.rows, cfg, existing_signatures,
-            existing_token_df, existing_n_records, removed_records=removed,
+            state, base_records, delta, rec.rows, cfg, removed_records=removed,
             n_removed=n_updated,
         )
         if hasattr(sigs, "_rebuilt_urls"):
@@ -215,8 +195,8 @@ def recrawl_upsert(
     ).df
     # Edge-retaining repair needs the merge law's rebuilt-record set to
     # know exactly which old records' decisions are stale; without it
-    # (linear sig fallback) dissolve-and-rescore stays the safe path.
-    retain = existing_edges is not None and n_updated > 0 and bool(rebuilt)
+    # (flip-cap sig fallback) dissolve-and-rescore stays the safe path.
+    retain = state.edges is not None and n_updated > 0 and bool(rebuilt)
     # the SEED is every url whose pair decisions are re-derived this run:
     # retaining mode excludes untouched dissolved members (their old
     # edges stand in for re-scoring), dissolve mode includes them
@@ -233,14 +213,14 @@ def recrawl_upsert(
     new_edges = sc.df.where(F.col("is_edge")).select("url_a", "url_b")
 
     out_edges = None
-    if existing_edges is not None:
+    if state.edges is not None:
         # every pair touching a seed url was scored fresh this run, so old
         # edges incident to the seed are superseded (updated urls are in
         # the delta, hence in the seed); both orientations covered. The
         # seed is delta-scale and materialized -- gate it onto the
         # broadcast path so the anti joins FILTER the edge scan.
         seed_b = broadcast_if_small(seed_stage.df, "url", seed_stage.rows, cfg)
-        kept_edges = existing_edges.join(
+        kept_edges = state.edges.join(
             seed_b.withColumnRenamed("url", "url_a"), "url_a", "left_anti"
         ).join(seed_b.withColumnRenamed("url", "url_b"), "url_b", "left_anti")
         out_edges = kept_edges.select("url_a", "url_b").unionByName(new_edges)
@@ -249,7 +229,7 @@ def recrawl_upsert(
             # clustering: accepted edges never span clusters, so a
             # one-sided member semi captures the affected-component set
             aff_members = (
-                existing_clusters.join(cid, "cluster_id", "semi").select("url")
+                state.clusters.join(cid, "cluster_id", "semi").select("url")
             )
             surviving = kept_edges.join(
                 aff_members.withColumnRenamed("url", "url_a"), "url_a", "semi"
@@ -262,11 +242,6 @@ def recrawl_upsert(
             base_clusters, fresh_urls, new_edges, cfg.max_cc_iterations
         ),
     )
-    n_after = (
-        existing_n_records - n_updated + rec.rows
-        if existing_n_records is not None
-        else None
-    )
     stages = (rec, sig, p, sc, cl)
     return RecrawlOutput(
         delta_records=delta,
@@ -275,9 +250,10 @@ def recrawl_upsert(
         pairs=p.df,
         scored=sc.df,
         clusters=cl.df,
-        signatures=sig.df,
-        n_records=n_after,
-        edges=out_edges,
+        state=state.advance(
+            base_records, stored_keys, rec, sig.df, cl.df, out_edges, cfg,
+            removed=removed, n_removed=n_updated,
+        ),
         stage_stats={
             **{st.name: st.stats() for st in stages},
             "n_batch": batch.rows,

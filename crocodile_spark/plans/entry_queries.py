@@ -2462,17 +2462,15 @@ def q_incremental_er(spark, sf_dir, oracle_dir: str = _INC_ORACLE_DIR):
     verifies. Reference parity: the backend's incremental result-sync loop
     (backend/app/services/result_sync.py), set-at-a-time.
 
-    r6: runs through the STORED-STATE path (signatures + token-DF +
-    static keys persisted with the base resolution,
-    incremental_signatures) so the driver row covers the O(delta)
-    production path; output is byte-identical to the no-state path by the
-    tested equivalence law (test_incremental_er)."""
+    The delta resolves against the base run's ``ResolutionState``
+    (signatures + token-DF + static keys, merged by
+    incremental_signatures), so the driver row covers the O(delta)
+    production path."""
     from crocodile_spark.config import PipelineConfig
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
+    from crocodile_spark.operators.incremental_er import (
+        ResolutionState,
+        incremental_er,
     )
-    from crocodile_spark.operators.incremental_er import incremental_er
     from crocodile_spark.pipeline import run_pipeline
 
     wp = documents_as_web_pages(spark, sf_dir)
@@ -2481,13 +2479,8 @@ def q_incremental_er(spark, sf_dir, oracle_dir: str = _INC_ORACLE_DIR):
 
     cfg = PipelineConfig()
     base = run_pipeline(spark, old_wp, cfg, use_html=False)
-    inc = incremental_er(spark, base.records, base.clusters, new_wp, cfg,
-                         use_html=False,
-                         existing_static_keys=static_keys(base.signatures, cfg),
-                         existing_signatures=base.signatures,
-                         existing_token_df=token_document_frequencies(
-                             base.records, cfg),
-                         existing_n_records=base.stage_stats["records"]["rows"])
+    inc = incremental_er(spark, ResolutionState.from_pipeline(base, cfg),
+                         new_wp, cfg, use_html=False)
 
     base.clusters.select("url", "cluster_id").write.mode("overwrite").parquet(
         f"{oracle_dir}/old_assign.parquet"
@@ -2591,10 +2584,7 @@ def q_recrawl_upsert(spark, sf_dir, oracle_dir: str = _RECRAWL_ORACLE_DIR):
     (backend/app/services/result_sync.py); this is the set-at-a-time form.
     """
     from crocodile_spark.config import PipelineConfig
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
-    )
+    from crocodile_spark.operators.incremental_er import ResolutionState
     from crocodile_spark.operators.recrawl import recrawl_upsert
     from crocodile_spark.pipeline import run_pipeline
 
@@ -2612,16 +2602,8 @@ def q_recrawl_upsert(spark, sf_dir, oracle_dir: str = _RECRAWL_ORACLE_DIR):
     cfg = PipelineConfig()
     base = run_pipeline(spark, base_wp, cfg, use_html=False)
     out = recrawl_upsert(
-        spark,
-        base.records,
-        base.clusters,
-        batch,
-        cfg,
+        spark, ResolutionState.from_pipeline(base, cfg), batch, cfg,
         use_html=False,
-        existing_static_keys=static_keys(base.signatures, cfg),
-        existing_signatures=base.signatures,
-        existing_token_df=token_document_frequencies(base.records, cfg),
-        existing_n_records=base.stage_stats["records"]["rows"],
     )
 
     base.clusters.select("url", "cluster_id").write.mode("overwrite").parquet(
@@ -2650,9 +2632,7 @@ def q_recrawl_upsert(spark, sf_dir, oracle_dir: str = _RECRAWL_ORACLE_DIR):
     res = out.clusters.join(sizes, "cluster_id").select(
         "url", "cluster_id", "cluster_size"
     )
-    res = res.localCheckpoint(eager=True)
-    out.unpersist()
-    return res
+    return res.localCheckpoint(eager=True)
 
 
 SQL_RECRAWL = f"""

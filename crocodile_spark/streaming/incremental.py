@@ -9,7 +9,6 @@ semantics (checkpointLocation).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crocodile_spark.operators.normalize_stage import normalize_pages
@@ -141,9 +140,12 @@ class StreamingEntityResolution:
                              replay of an already-committed batch_id is a
                              no-op
 
-    Batch 0 bootstraps with the full batch pipeline; every later batch is
-    resolved by the O(delta) stored-state path (incremental_signatures:
-    merged token-DF, delta-scoped rebuild). The partition-equivalence law
+    Batch 0 bootstraps with the full batch pipeline
+    (``ResolutionState.from_pipeline``); every later batch reads the
+    committed state back, resolves against it with :func:`incremental_er`
+    (merged token-DF, delta-scoped rebuild) and writes the ``state`` it
+    hands back: the snapshots whole, the staging dirs their delta rows.
+    The partition-equivalence law
     (streamed batches == one-shot batch resolution) and the replay /
     orphan-dir idempotency laws are pytest-gated in test_streaming.py.
 
@@ -228,11 +230,10 @@ class StreamingEntityResolution:
     # -- the foreachBatch callback ----------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from crocodile_spark.operators.blocking import (
-            static_keys,
-            token_document_frequencies,
+        from crocodile_spark.operators.incremental_er import (
+            ResolutionState,
+            incremental_er,
         )
-        from crocodile_spark.operators.incremental_er import incremental_er
         from crocodile_spark.pipeline import run_pipeline
 
         spark, cfg = self.spark, self.cfg
@@ -242,88 +243,41 @@ class StreamingEntityResolution:
             return
         if meta is None:
             out = run_pipeline(spark, batch_df, cfg, use_html=self.use_html)
-            n = out.stage_stats["records"]["rows"]
-            out.records.write.mode("overwrite").parquet(
-                self._p(f"records/batch_{batch_id}")
+            state = ResolutionState.from_pipeline(out, cfg)
+            records, keys, batches = state.records, state.static_keys, []
+        else:
+            b_old = meta["last_batch_id"]
+            prior = ResolutionState(
+                records=spark.read.parquet(*self._batch_paths("records", meta)),
+                clusters=spark.read.parquet(self._p(f"clusters_b{b_old}")),
+                signatures=spark.read.parquet(self._p(f"signatures_b{b_old}")),
+                static_keys=spark.read.parquet(
+                    *self._batch_paths("static_keys", meta)
+                ),
+                token_df=spark.read.parquet(self._p(f"token_df_b{b_old}")),
+                n_records=meta["n_records"],
             )
-            static_keys(out.signatures, cfg).write.mode("overwrite").parquet(
-                self._p(f"static_keys/batch_{batch_id}")
-            )
-            out.signatures.write.mode("overwrite").parquet(
-                self._p(f"signatures_b{batch_id}")
-            )
-            out.clusters.write.mode("overwrite").parquet(
-                self._p(f"clusters_b{batch_id}")
-            )
-            token_document_frequencies(out.records, cfg).write.mode(
-                "overwrite"
-            ).parquet(self._p(f"token_df_b{batch_id}"))
-            self._commit_meta(
-                {"last_batch_id": batch_id, "n_records": n,
-                 "batches": [batch_id]}
-            )
-            return
-
-        b_old = meta["last_batch_id"]
-        records = spark.read.parquet(*self._batch_paths("records", meta))
-        keys = spark.read.parquet(*self._batch_paths("static_keys", meta))
-        sigs = spark.read.parquet(self._p(f"signatures_b{b_old}"))
-        clusters = spark.read.parquet(self._p(f"clusters_b{b_old}"))
-        token_df = spark.read.parquet(self._p(f"token_df_b{b_old}"))
-
-        inc = incremental_er(
-            spark,
-            records,
-            clusters,
-            batch_df,
-            cfg,
-            use_html=self.use_html,
-            existing_static_keys=keys,
-            existing_signatures=sigs,
-            existing_token_df=token_df,
-            existing_n_records=meta["n_records"],
-        )
-        n_delta = inc.stage_stats["records"]["rows"]
-
-        # merged (token, df) for the new snapshot: the stored table outer-
-        # joined with delta counts -- vocab-scale, the same merge law the
-        # signature rebuild used
-        delta_counts = token_document_frequencies(inc.delta_records, cfg)
-        merged = (
-            token_df.withColumnRenamed("df", "df_old")
-            .join(delta_counts.withColumnRenamed("df", "df_new"), "token", "full_outer")
-            .select(
-                "token",
-                (
-                    F.coalesce("df_old", F.lit(0)) + F.coalesce("df_new", F.lit(0))
-                ).alias("df"),
-            )
-        )
-        delta_sigs = inc.signatures.join(
-            inc.delta_records.select("url"), "url", "semi"
-        )
+            inc = incremental_er(spark, prior, batch_df, cfg, use_html=self.use_html)
+            state, records = inc.state, inc.delta_records
+            keys = state.static_keys.join(records.select("url"), "url", "semi")
+            batches = meta["batches"]
 
         # every write is batch-keyed + overwrite (replay-safe); the meta
         # flip is last, so an attempt that dies anywhere above leaves only
         # orphan dirs that the manifest never reads and the replay
         # overwrites
-        inc.signatures.write.mode("overwrite").parquet(
-            self._p(f"signatures_b{batch_id}")
-        )
-        inc.clusters.write.mode("overwrite").parquet(
-            self._p(f"clusters_b{batch_id}")
-        )
-        merged.write.mode("overwrite").parquet(self._p(f"token_df_b{batch_id}"))
-        inc.delta_records.write.mode("overwrite").parquet(
-            self._p(f"records/batch_{batch_id}")
-        )
-        static_keys(delta_sigs, cfg).write.mode("overwrite").parquet(
-            self._p(f"static_keys/batch_{batch_id}")
-        )
+        for df, name in (
+            (records, f"records/batch_{batch_id}"),
+            (keys, f"static_keys/batch_{batch_id}"),
+            (state.signatures, f"signatures_b{batch_id}"),
+            (state.clusters, f"clusters_b{batch_id}"),
+            (state.token_df, f"token_df_b{batch_id}"),
+        ):
+            df.write.mode("overwrite").parquet(self._p(name))
         new_meta = {
             "last_batch_id": batch_id,
-            "n_records": meta["n_records"] + n_delta,
-            "batches": meta["batches"] + [batch_id],
+            "n_records": state.n_records,
+            "batches": batches + [batch_id],
         }
         self._commit_meta(new_meta)
         self._prune_snapshots(new_meta)

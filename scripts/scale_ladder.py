@@ -13,9 +13,9 @@ these steps, each in a ``perfbench.tracing`` span:
 - ``durable``: ``run_pipeline`` with a ``checkpoint_dir``; then
   ``resume_clusters`` re-runs it with only ``clusters`` invalidated, so
   that step's jobs are the cluster stage's.
-- ``base``: ``run_pipeline`` over 80% of the urls (by url hash) plus the
-  stored state kept with it (static keys, token document frequencies,
-  accepted edges), shared by the next two steps.
+- ``base``: ``run_pipeline`` over 80% of the urls (by url hash) plus its
+  ``ResolutionState`` with accepted edges (static keys, token document
+  frequencies and edges materialized here), shared by the next two steps.
 - ``incremental``: ``incremental_er`` of the other 20%, against
   ``inmem`` (the full run over the same union).
 - ``recrawl``: edge-retaining ``recrawl_upsert`` of about 5% updated base
@@ -41,6 +41,7 @@ JSON object with every cell.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import shutil
@@ -140,9 +141,8 @@ def run_cell(spark, n_records: int, root: str, full: bool = True, skew: bool = F
     from crocodile_spark.config import PipelineConfig
     from crocodile_spark.datagen import corpus_to_spark, make_corpus
     from crocodile_spark.lakehouse import Lakehouse, materialize
-    from crocodile_spark.operators.blocking import static_keys, token_document_frequencies
     from crocodile_spark.operators.clustering import CC_DRIVER_MAX_EDGES
-    from crocodile_spark.operators.incremental_er import incremental_er
+    from crocodile_spark.operators.incremental_er import ResolutionState, incremental_er
     from crocodile_spark.operators.recrawl import recrawl_upsert
     from crocodile_spark.pipeline import evaluate_pairwise_f1, run_pipeline
     from perfbench.tracing import Tracer
@@ -190,32 +190,25 @@ def run_cell(spark, n_records: int, root: str, full: bool = True, skew: bool = F
 
         h = F.pmod(F.xxhash64("url"), F.lit(20))
         base_pages, new_pages = pages.where(h >= 4), pages.where(h < 4)
-        state = {}
+        kept = {}
 
         def base_with_state():
+            # the stored state built once, in this step, and shared
             out = run_pipeline(spark, base_pages, cfg)
-            for name, build in (
-                ("static_keys", lambda: static_keys(out.signatures, cfg)),
-                ("token_df", lambda: token_document_frequencies(out.records, cfg)),
-                ("edges", lambda: out.scored.where(F.col("is_edge")).select("url_a", "url_b")),
-            ):
-                state[name] = materialize(name, build)
-                out.stage_stats[name] = state[name].stats()
+            lazy = ResolutionState.from_pipeline(out, cfg, edges=True)
+            built = {
+                name: materialize(name, lambda name=name: getattr(lazy, name))
+                for name in ("static_keys", "token_df", "edges")
+            }
+            out.stage_stats.update({name: b.stats() for name, b in built.items()})
+            kept["state"] = dataclasses.replace(lazy, **{name: b.df for name, b in built.items()})
             return out
 
-        base = step("base", base_with_state)
-        n_base = base.stage_stats["records"]["rows"]
-        state_args = dict(
-            existing_static_keys=state["static_keys"].df,
-            existing_signatures=base.signatures,
-            existing_token_df=state["token_df"].df,
-            existing_n_records=n_base,
-        )
+        step("base", base_with_state)
+        state = kept["state"]
+        n_base = state.n_records
 
-        inc = step(
-            "incremental",
-            lambda: incremental_er(spark, base.records, base.clusters, new_pages, cfg, **state_args),
-        )
+        inc = step("incremental", lambda: incremental_er(spark, state, new_pages, cfg))
         inc_assign = _assignment(inc.clusters)
         report["incremental"] = {
             "base_records": n_base,
@@ -238,21 +231,15 @@ def run_cell(spark, n_records: int, root: str, full: bool = True, skew: bool = F
         )
         batch = updated.unionByName(base_pages.where(h2 == 5)).unionByName(new_pages)
         mutated = base_pages.where(h2 != 3).unionByName(updated).unionByName(new_pages)
-        rc = step(
-            "recrawl",
-            lambda: recrawl_upsert(
-                spark, base.records, base.clusters, batch, cfg,
-                existing_edges=state["edges"].df, **state_args,
-            ),
-        )
+        rc = step("recrawl", lambda: recrawl_upsert(spark, state, batch, cfg))
         rc_full = step("recrawl_full", lambda: run_pipeline(spark, mutated, cfg))
         rc_assign, rc_full_assign = _assignment(rc.clusters), _assignment(rc_full.clusters)
         n_div = sum(len(s) for s in _partition(rc_assign) ^ _partition(rc_full_assign)) // 2
         report["recrawl"] = {
             **{k: rc.stage_stats[k] for k in ("n_batch", "n_updated", "n_new_or_updated", "edge_retaining")},
-            "n_records": rc.n_records,
+            "n_records": rc.state.n_records,
             "partition_identical": rc_assign == rc_full_assign,
-            "divergence_frac": n_div / max(rc.n_records, 1),
+            "divergence_frac": n_div / max(rc.state.n_records, 1),
             "f1": evaluate_pairwise_f1(rc.clusters, gold, rc_full.pairs)["f1"],
             "f1_full_rerun": evaluate_pairwise_f1(rc_full.clusters, gold, rc_full.pairs)["f1"],
         }

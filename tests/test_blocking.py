@@ -103,9 +103,9 @@ def test_spread_not_fooled_by_operator_like_column_name(spark, tmp_path):
     assert out.rdd.getNumPartitions() > 1, "scan with operator-like column name not widened"
 
 
-def test_spread_tiny_scan_and_escape_hatch(spark, tmp_path):
+def test_spread_tiny_scan_stays_narrow(spark, tmp_path):
     """Frames below the byte floor stay narrow (no mostly-empty tasks);
-    spark.croco.spread.enabled=false disables the guard entirely."""
+    a single-partition scan above it is widened."""
     from crocodile_spark.operators.blocking import spread
 
     p = str(tmp_path / "tiny.parquet")
@@ -118,11 +118,6 @@ def test_spread_tiny_scan_and_escape_hatch(spark, tmp_path):
         "id", "repeat('y', 64) AS payload"
     ).write.parquet(big)
     scan = spark.read.parquet(big)
-    spark.conf.set("spark.croco.spread.enabled", "false")
-    try:
-        assert spread(scan) is scan, "escape hatch must disable the guard"
-    finally:
-        spark.conf.unset("spark.croco.spread.enabled")
     assert spread(scan).rdd.getNumPartitions() > 1
 
 

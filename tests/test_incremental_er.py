@@ -13,10 +13,19 @@ from pyspark.sql import functions as F
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.datagen import make_corpus, corpus_to_spark
 from crocodile_spark.operators.incremental_er import (
+    ResolutionState,
     incremental_er,
     merge_clusters,
 )
 from crocodile_spark.pipeline import evaluate_pairwise_f1, run_pipeline
+
+
+def _resolve(spark, base, new, cfg):
+    return incremental_er(spark, ResolutionState.from_pipeline(base, cfg), new, cfg)
+
+
+def _pair_set(pairs_df):
+    return {(r["url_a"], r["url_b"]) for r in pairs_df.select("url_a", "url_b").collect()}
 
 
 def _partition(clusters_df):
@@ -56,7 +65,7 @@ def test_incremental_matches_batch_partition(spark, split_corpus):
 
     full = run_pipeline(spark, wp, cfg)
     base = run_pipeline(spark, old, cfg)
-    inc = incremental_er(spark, base.records, base.clusters, new, cfg)
+    inc = _resolve(spark, base, new, cfg)
 
     assert _partition(inc.clusters) == _partition(full.clusters)
     # same root convention (min member), not just same grouping
@@ -69,25 +78,19 @@ def test_incremental_matches_batch_partition(spark, split_corpus):
 
 
 def test_incremental_with_stored_static_keys_is_identical(spark, split_corpus):
-    """Passing the stored host+MinHash keys of the base corpus (skipping
-    the corpus re-shingling) must yield the identical pair set and the
-    identical final assignment -- static keys are per-record constants."""
-    from crocodile_spark.operators.blocking import static_keys
-
-    _, old, new, _ = split_corpus
+    """Resolving from the stored host+MinHash keys of the base corpus
+    (no corpus re-shingling) yields exactly the full batch run's
+    candidate pairs that touch a delta url -- static keys are per-record
+    constants, so the key set is the full run's (the delta_pairs law)."""
+    wp, old, new, _ = split_corpus
     cfg = PipelineConfig()
+    full = run_pipeline(spark, wp, cfg)
     base = run_pipeline(spark, old, cfg)
-    stored = static_keys(base.signatures, cfg)
+    inc = _resolve(spark, base, new, cfg)
 
-    inc_full = incremental_er(spark, base.records, base.clusters, new, cfg)
-    inc_stored = incremental_er(
-        spark, base.records, base.clusters, new, cfg,
-        existing_static_keys=stored,
-    )
-    pairs_a = {(r["url_a"], r["url_b"]) for r in inc_full.pairs.collect()}
-    pairs_b = {(r["url_a"], r["url_b"]) for r in inc_stored.pairs.collect()}
-    assert pairs_a == pairs_b
-    assert _partition(inc_stored.clusters) == _partition(inc_full.clusters)
+    new_urls = {r["url"] for r in new.select("url").collect()}
+    want = {p for p in _pair_set(full.pairs) if new_urls & set(p)}
+    assert _pair_set(inc.pairs) == want
 
 
 def test_incremental_pairs_all_touch_delta(spark, split_corpus):
@@ -96,7 +99,7 @@ def test_incremental_pairs_all_touch_delta(spark, split_corpus):
     _, old, new, _ = split_corpus
     cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
-    inc = incremental_er(spark, base.records, base.clusters, new, cfg)
+    inc = _resolve(spark, base, new, cfg)
 
     new_urls = {r["url"] for r in new.select("url").collect()}
     for r in inc.pairs.collect():
@@ -108,7 +111,7 @@ def test_incremental_empty_delta_is_identity(spark, split_corpus):
     _, old, new, _ = split_corpus
     cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
-    inc = incremental_er(spark, base.records, base.clusters, new.limit(0), cfg)
+    inc = _resolve(spark, base, new.limit(0), cfg)
     assert inc.pairs.count() == 0
     assert _partition(inc.clusters) == _partition(base.clusters)
 
@@ -122,9 +125,9 @@ def test_incremental_recrawl_urls_are_ignored(spark, split_corpus):
     base = run_pipeline(spark, old, cfg)
     # poison the delta with 10 pages the base corpus already resolved
     recrawl = new.unionByName(old.limit(10))
-    inc = incremental_er(spark, base.records, base.clusters, recrawl, cfg)
+    inc = _resolve(spark, base, recrawl, cfg)
     assert inc.clusters.count() == inc.clusters.select("url").distinct().count()
-    clean = incremental_er(spark, base.records, base.clusters, new, cfg)
+    clean = _resolve(spark, base, new, cfg)
     assert _partition(inc.clusters) == _partition(clean.clusters)
 
 
@@ -159,7 +162,7 @@ def test_incremental_new_entity_forms_own_cluster(spark, split_corpus):
     _, old, new, _ = split_corpus
     cfg = PipelineConfig()
     base = run_pipeline(spark, old, cfg)
-    inc = incremental_er(spark, base.records, base.clusters, new, cfg)
+    inc = _resolve(spark, base, new, cfg)
 
     old_urls = {r["url"] for r in old.select("url").collect()}
     parts = _partition(inc.clusters)
@@ -303,39 +306,28 @@ def test_incremental_signatures_cap_falls_back(spark):
 
 
 def test_incremental_er_with_state_identical_partition(spark, split_corpus):
-    """End-to-end: incremental_er with the full stored state (signatures +
-    token-DF + n + static keys) produces the identical partition to the
-    no-state incremental path on the realistic split corpus."""
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
-    )
-
+    """End-to-end: incremental_er over the stored state (signatures +
+    token-DF + n + static keys) produces the full batch run's partition
+    on the realistic split corpus."""
     wp, old, new, gold = split_corpus
     cfg = PipelineConfig()
+    full = run_pipeline(spark, wp, cfg)
     base = run_pipeline(spark, old, cfg)
-    base.records.cache().count()
-    base.signatures.cache().count()
-    token_df = token_document_frequencies(base.records, cfg).cache()
-    keys = static_keys(base.signatures, cfg).cache()
+    inc = _resolve(spark, base, new, cfg)
+    assert _partition(inc.clusters) == _partition(full.clusters)
 
-    inc_nostate = incremental_er(
-        spark, base.records, base.clusters, new, cfg
-    )
-    inc_state = incremental_er(
-        spark,
-        base.records,
-        base.clusters,
-        new,
-        cfg,
-        existing_static_keys=keys,
-        existing_signatures=base.signatures,
-        existing_token_df=token_df,
-        existing_n_records=base.records.count(),
-    )
-    assert _partition(inc_state.clusters) == _partition(inc_nostate.clusters)
-    inc_nostate.unpersist()
-    inc_state.unpersist()
+
+def test_incremental_state_equals_from_scratch_state(
+    spark, split_corpus, assert_state_from_scratch
+):
+    """The returned state is the state a batch run over the union would
+    build: merged token DF, stored + delta static keys, record count and
+    signatures."""
+    wp, old, new, _ = split_corpus
+    cfg = PipelineConfig()
+    base = run_pipeline(spark, old, cfg)
+    inc = _resolve(spark, base, new, cfg)
+    assert_state_from_scratch(inc.state, run_pipeline(spark, wp, cfg), cfg)
 
 
 def test_broadcast_gate_is_byte_budgeted(spark):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.datagen import corpus_to_spark, make_corpus
+from crocodile_spark.operators.incremental_er import ResolutionState, incremental_er
 from crocodile_spark.operators.recrawl import recrawl_upsert
 from crocodile_spark.pipeline import run_pipeline
 
@@ -136,28 +137,11 @@ def recrawl_fixture(spark):
 
 
 def test_recrawl_upsert_with_state_matches_full_rerun(spark, recrawl_fixture):
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
-    )
-
     fx = recrawl_fixture
     cfg, base = fx["cfg"], fx["base"]
-    token_df = token_document_frequencies(base.records, cfg).cache()
-    keys = static_keys(base.signatures, cfg).cache()
-    n_base = base.records.count()
-
     out = recrawl_upsert(
-        spark,
-        base.records,
-        base.clusters,
-        fx["batch"],
-        cfg,
+        spark, ResolutionState.from_pipeline(base, cfg), fx["batch"], cfg,
         use_html=False,
-        existing_static_keys=keys,
-        existing_signatures=base.signatures,
-        existing_token_df=token_df,
-        existing_n_records=n_base,
     )
     _assert_partition_equal(_partition(out.clusters), fx["full_partition"])
 
@@ -178,22 +162,39 @@ def test_recrawl_upsert_with_state_matches_full_rerun(spark, recrawl_fixture):
 
     # corpus bookkeeping: every url assigned exactly once
     assert out.clusters.count() == out.clusters.select("url").distinct().count()
-    assert out.n_records == fx["mutated_full"].count()
-    out.unpersist()
+    assert out.state.n_records == fx["mutated_full"].count()
 
 
-def test_recrawl_upsert_no_state_matches_full_rerun(spark, recrawl_fixture):
+def test_recrawl_state_equals_from_scratch_and_chains(
+    spark, recrawl_fixture, assert_state_from_scratch
+):
+    """The upsert's returned state (updated urls' old versions
+    subtracted) is the state a batch run over the mutated corpus would
+    build, and a second delta resolved from it lands on the full run's
+    partition over everything."""
     fx = recrawl_fixture
+    cfg = fx["cfg"]
     out = recrawl_upsert(
-        spark,
-        fx["base"].records,
-        fx["base"].clusters,
-        fx["batch"],
-        fx["cfg"],
+        spark, ResolutionState.from_pipeline(fx["base"], cfg), fx["batch"], cfg,
         use_html=False,
     )
-    _assert_partition_equal(_partition(out.clusters), fx["full_partition"])
-    out.unpersist()
+    assert out.stage_stats["n_updated"] > 0
+    full = run_pipeline(spark, fx["mutated_full"], cfg, use_html=False)
+    assert_state_from_scratch(out.state, full, cfg)
+
+    # second delta: mirror copies of two untouched entities' pages
+    mirror = (
+        fx["base_pages"]
+        .where(F.col("entity_id").isin(10, 11))
+        .select(*PAGE_COLS)
+        .withColumn("url", F.concat("url", F.lit("/mirror")))
+    )
+    inc = incremental_er(spark, out.state, mirror, cfg, use_html=False)
+    everything = run_pipeline(
+        spark, fx["mutated_full"].unionByName(mirror), cfg, use_html=False
+    )
+    _assert_partition_equal(_partition(inc.clusters), _partition(everything.clusters))
+    assert_state_from_scratch(inc.state, everything, cfg)
 
 
 def test_recrawl_all_unchanged_is_identity(spark, recrawl_fixture):
@@ -201,8 +202,7 @@ def test_recrawl_all_unchanged_is_identity(spark, recrawl_fixture):
     refetch = fx["base_pages"].select(*PAGE_COLS).limit(20)
     out = recrawl_upsert(
         spark,
-        fx["base"].records,
-        fx["base"].clusters,
+        ResolutionState.from_pipeline(fx["base"], fx["cfg"]),
         refetch,
         fx["cfg"],
         use_html=False,
@@ -211,7 +211,6 @@ def test_recrawl_all_unchanged_is_identity(spark, recrawl_fixture):
     assert out.updated_urls.count() == 0
     assert out.unchanged_urls.count() == 20
     assert _partition(out.clusters) == _partition(fx["base"].clusters)
-    out.unpersist()
 
 
 def test_recrawl_bridge_update_dissolves_and_splits(spark):
@@ -245,7 +244,7 @@ def test_recrawl_bridge_update_dissolves_and_splits(spark):
         ["url", "text"],
     )
     out = recrawl_upsert(
-        spark, base.records, base.clusters, batch, cfg, use_html=False
+        spark, ResolutionState.from_pipeline(base, cfg), batch, cfg, use_html=False
     )
     mutated = wp.withColumn(
         "text",
@@ -262,7 +261,6 @@ def test_recrawl_bridge_update_dissolves_and_splits(spark):
         cl["http://s1.ex/a"],
         cl["http://s3.ex/c"],
     )
-    out.unpersist()
 
 
 def test_incremental_signatures_removal_byte_identical(spark):
@@ -381,37 +379,22 @@ def test_recrawl_edge_retaining_matches_full_rerun(spark, recrawl_fixture):
     instead of re-pairing -- the final partition must still equal the full
     re-run, and the OUTPUT edge state must independently reproduce that
     partition under a plain union-find (the state-maintenance law)."""
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
-    )
-
     fx = recrawl_fixture
     cfg, base = fx["cfg"], fx["base"]
-    token_df = token_document_frequencies(base.records, cfg).cache()
-    keys = static_keys(base.signatures, cfg).cache()
-    edges = base.scored.where(F.col("is_edge")).select("url_a", "url_b").cache()
-
     out = recrawl_upsert(
         spark,
-        base.records,
-        base.clusters,
+        ResolutionState.from_pipeline(base, cfg, edges=True),
         fx["batch"],
         cfg,
         use_html=False,
-        existing_static_keys=keys,
-        existing_signatures=base.signatures,
-        existing_token_df=token_df,
-        existing_n_records=base.records.count(),
-        existing_edges=edges,
     )
     assert out.stage_stats["edge_retaining"] is True
     _assert_partition_equal(_partition(out.clusters), fx["full_partition"])
 
-    # edge-state law: union-find over out.edges alone reproduces the
+    # edge-state law: union-find over out.state.edges alone reproduces the
     # final partition for the whole corpus
     urls = [r["url"] for r in fx["mutated_full"].select("url").collect()]
-    uf = _unionfind_partition(urls, out.edges.collect())
+    uf = _unionfind_partition(urls, out.state.edges.collect())
     _assert_partition_equal(uf, fx["full_partition"])
 
     # no superseded edge leaks into the state: nothing incident to an
@@ -421,20 +404,15 @@ def test_recrawl_edge_retaining_matches_full_rerun(spark, recrawl_fixture):
         (r["url_a"], r["url_b"])
         for r in out.scored.where(F.col("is_edge")).collect()
     }
-    for r in out.edges.collect():
+    for r in out.state.edges.collect():
         if r["url_a"] in upd or r["url_b"] in upd:
             assert (r["url_a"], r["url_b"]) in fresh
-    out.unpersist()
 
 
 def test_recrawl_bridge_update_splits_with_edge_retention(spark):
     """The dissolve-mode bridge-split law must survive edge retention:
     the updated bridge's incident edges are superseded (not retained), so
     the remainder splits exactly as the full re-run decides."""
-    from crocodile_spark.operators.blocking import (
-        static_keys,
-        token_document_frequencies,
-    )
 
     rows = [
         ("http://s1.ex/a", "alice anderson quantum flux capacitor widget alpha"),
@@ -460,18 +438,10 @@ def test_recrawl_bridge_update_splits_with_edge_retention(spark):
     )
     out = recrawl_upsert(
         spark,
-        base.records,
-        base.clusters,
+        ResolutionState.from_pipeline(base, cfg, edges=True),
         batch,
         cfg,
         use_html=False,
-        existing_static_keys=static_keys(base.signatures, cfg),
-        existing_signatures=base.signatures,
-        existing_token_df=token_document_frequencies(base.records, cfg),
-        existing_n_records=base.records.count(),
-        existing_edges=base.scored.where(F.col("is_edge")).select(
-            "url_a", "url_b"
-        ),
     )
     assert out.stage_stats["edge_retaining"] is True
     mutated = wp.withColumn(
@@ -488,4 +458,3 @@ def test_recrawl_bridge_update_splits_with_edge_retention(spark):
         cl["http://s1.ex/a"],
         cl["http://s3.ex/c"],
     )
-    out.unpersist()

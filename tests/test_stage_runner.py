@@ -10,12 +10,8 @@ from pyspark.sql import functions as F
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.datagen import corpus_to_spark, make_corpus
 from crocodile_spark.lakehouse import materialize
-from crocodile_spark.operators.blocking import (
-    mention_signatures,
-    static_keys,
-    token_document_frequencies,
-)
-from crocodile_spark.operators.incremental_er import incremental_er
+from crocodile_spark.operators.blocking import mention_signatures
+from crocodile_spark.operators.incremental_er import ResolutionState, incremental_er
 from crocodile_spark.operators.normalize_stage import normalize_pages
 from crocodile_spark.operators.recrawl import recrawl_upsert
 from crocodile_spark.pipeline import run_pipeline
@@ -47,8 +43,8 @@ def paths(spark, tmp_path_factory):
     is_new = F.pmod(F.xxhash64("url"), F.lit(5)) == 0
     base_wp, new_wp = wp.where(~is_new), wp.where(is_new)
 
-    def frames(out, records):
-        return dict(zip(STAGES, (records, out.signatures, out.pairs, out.scored, out.clusters)))
+    def frames(out, records, signatures):
+        return dict(zip(STAGES, (records, signatures, out.pairs, out.scored, out.clusters)))
 
     mem = run_pipeline(spark, wp, cfg, use_html=False)
     durable_cfg = PipelineConfig(
@@ -56,28 +52,24 @@ def paths(spark, tmp_path_factory):
     )
     dur = run_pipeline(spark, wp, durable_cfg, use_html=False)
     base = run_pipeline(spark, base_wp, cfg, use_html=False)
-    state = dict(
-        existing_static_keys=static_keys(base.signatures, cfg),
-        existing_signatures=base.signatures,
-        existing_token_df=token_document_frequencies(base.records, cfg),
-        existing_n_records=base.stage_stats["records"]["rows"],
-    )
-    inc = incremental_er(
-        spark, base.records, base.clusters, new_wp, cfg, use_html=False, **state
-    )
+    state = ResolutionState.from_pipeline(base, cfg)
+    inc = incremental_er(spark, state, new_wp, cfg, use_html=False)
     updated = base_wp.where(F.pmod(F.xxhash64("url"), F.lit(7)) == 2).withColumn(
         "text", F.concat("text", F.lit(" revised"))
     )
     rec = recrawl_upsert(
-        spark, base.records, base.clusters, new_wp.unionByName(updated), cfg,
-        use_html=False, **state,
+        spark, state, new_wp.unionByName(updated), cfg, use_html=False
     )
     assert rec.stage_stats["n_updated"] > 0
     return {
-        "in_memory": (frames(mem, mem.records), mem.stage_stats),
-        "durable": (frames(dur, dur.records), dur.stage_stats),
-        "incremental_er": (frames(inc, inc.delta_records), inc.stage_stats),
-        "recrawl_upsert": (frames(rec, rec.delta_records), rec.stage_stats),
+        "in_memory": (frames(mem, mem.records, mem.signatures), mem.stage_stats),
+        "durable": (frames(dur, dur.records, dur.signatures), dur.stage_stats),
+        "incremental_er": (
+            frames(inc, inc.delta_records, inc.state.signatures), inc.stage_stats
+        ),
+        "recrawl_upsert": (
+            frames(rec, rec.delta_records, rec.state.signatures), rec.stage_stats
+        ),
     }
 
 
