@@ -78,7 +78,7 @@ def main() -> None:
     )
     cv = e.select(F.col("vec_id").alias("cand_id"), "embedding")
     t0 = time.time()
-    lsh_topk(qv, cv, k=5, arrow=True).write.format("noop").mode("overwrite").save()
+    lsh_topk(qv, cv, k=5).write.format("noop").mode("overwrite").save()
     timings["ann_lsh_arrow"] = round(time.time() - t0, 3)
 
     # r5: the production IVF path (Arrow guarded-matmul cell assignment
@@ -91,9 +91,7 @@ def main() -> None:
 
     cents = seeded_random_centroids(64, 16, 7)
     t0 = time.time()
-    ivf_topk(qv, cv, cents, k=5, n_probe=4, arrow=True).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    ivf_topk(qv, cv, cents, k=5, n_probe=4).write.format("noop").mode("overwrite").save()
     timings["ivf_ann_arrow"] = round(time.time() - t0, 3)
 
     # full ER pipeline (the flagship): time it and derive throughput

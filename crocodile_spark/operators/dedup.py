@@ -16,14 +16,17 @@ Five families, all returning DataFrames (ids/pairs/cluster assignments):
 
 Scale posture: every family is explode -> aggregate/join on a bounded key
 (block caps where a key can be hot); no driver-side loops. Hashing and set
-algebra are native expressions. Two families run Arrow pandas UDFs by
-default (``arrow=True``), each bit-identical to its native twin:
-``simhash`` / ``simhash_pairs`` fold the per-document bit counts in one
-integer-exact UDF, because the native 60-aggregate form costs seconds of
-Catalyst plan/codegen time per query; and
-``embedding_near_dup_pairs`` uses the similarity_search bucket and cosine
-kernels. Pass ``arrow=False`` to ``simhash`` or
-``embedding_near_dup_pairs`` for a UDF-free plan.
+algebra are native expressions. The three LSH families share one
+capped-bucket law (:func:`_capped_bucket_pairs`), and each materializes
+its signature rows once with an eager ``localCheckpoint``.
+
+Two families' plans hold Arrow pandas UDFs: ``simhash`` /
+``simhash_pairs`` fold the per-document bit counts in one integer-exact
+UDF, because the native 60-aggregate form costs seconds of Catalyst
+plan/codegen time per query; ``embedding_near_dup_pairs`` uses the
+similarity_search bucket kernel and the ``emb_kernels`` cosine fold.
+Each is bit-identical to a native law that the tests keep as its
+reference (``_simhash_reference``; the similarity_search native twins).
 
 ``minhash_lsh_pairs`` (when verifying) and ``ngram_jaccard_pairs`` return
 frames backed by a lazy ``localCheckpoint``: see their docstrings.
@@ -87,6 +90,30 @@ def minhash_affine_constants(num_hashes: int, seed: int = 1234) -> list[tuple[in
     ]
 
 
+def _capped_bucket_pairs(
+    buckets: DataFrame, max_bucket_size: int, payload: str | None = None
+) -> DataFrame:
+    """The capped-bucket law of the LSH families: distinct (id_a, id_b)
+    pairs, ``id_a < id_b``, of ids sharing a ``bucket`` that has at most
+    ``max_bucket_size`` (id, bucket) rows. Larger buckets are dropped
+    whole (degenerate content; the pair volume stays bounded). A
+    ``payload`` column of ``buckets`` rides along as ``<payload>_a`` /
+    ``<payload>_b``."""
+    ok = key_count(buckets, "bucket").where(F.col("count") <= max_bucket_size)
+    capped = buckets.join(ok.select("bucket"), "bucket", "inner")
+    cols = ["id", *([payload] if payload else [])]
+    a, b = (
+        capped.select("bucket", *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        for s in "ab"
+    )
+    return (
+        a.join(b, "bucket")
+        .where(F.col("id_a") < F.col("id_b"))
+        .drop("bucket")
+        .distinct()
+    )
+
+
 def minhash_signature_agg(
     df: DataFrame,
     text_col: str,
@@ -134,7 +161,6 @@ def minhash_lsh_pairs(
     jaccard_threshold: float | None = 0.7,
     max_bucket_size: int = 256,
     portable: bool = False,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs, optionally verified.
 
@@ -145,14 +171,14 @@ def minhash_lsh_pairs(
     signature and the band hash to the md5-based law so a DuckDB oracle
     can reproduce the pairs bit-for-bit.
 
-    ``materialize_signatures``: the signature table feeds THREE consumers
-    (the bucket-size count and both sides of the in-bucket self-join), and
-    Spark re-derives a DataFrame lineage per consumer -- the whole
-    shingle+hash pipeline would run ~3x (measured 23 s -> 5.3 s at sf0.1).
-    Signatures are num_hashes longs per doc (~1-2% of text bytes), so
-    materializing is the standard MinHash shape at any scale; in a
-    checkpointed production run the lakehouse stage write plays this role
-    instead (localCheckpoint is executor-local and not kill-resumable).
+    The signature table is materialized with an eager ``localCheckpoint``:
+    it feeds THREE consumers (the bucket-size count and both sides of the
+    in-bucket self-join), and Spark re-derives a DataFrame lineage per
+    consumer -- the whole shingle+hash pipeline would run ~3x (measured
+    23 s -> 5.3 s at sf0.1). Signatures are num_hashes longs per doc
+    (~1-2% of text bytes), so materializing is the standard MinHash shape
+    at any scale (localCheckpoint is executor-local and not
+    kill-resumable).
 
     With ``jaccard_threshold`` set, the returned frame is backed by a lazy
     ``localCheckpoint`` of the verified (id_a, id_b, jaccard) rows (the
@@ -163,9 +189,7 @@ def minhash_lsh_pairs(
     """
     sig = minhash_signature_agg(
         df, text_col, id_col, num_hashes, shingle_size, portable=portable
-    )
-    if materialize_signatures:
-        sig = sig.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
     def band_hash(concat_col):
         if portable:
@@ -189,16 +213,8 @@ def minhash_lsh_pairs(
             for b in range(num_hashes // band_size)
         ]
     )
-    buckets = sig.select("id", F.explode(bands).alias("bucket"))
-    sizes = key_count(buckets, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    buckets = buckets.join(ok, "bucket", "inner")
-    pairs = (
-        buckets.withColumnRenamed("id", "id_a")
-        .join(buckets.withColumnRenamed("id", "id_b"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    pairs = _capped_bucket_pairs(
+        sig.select("id", F.explode(bands).alias("bucket")), max_bucket_size
     )
     if jaccard_threshold is None:
         return pairs
@@ -236,14 +252,15 @@ def minhash_lsh_pairs(
 def _simhash_fold_udf(bits: int):
     """Arrow fingerprint fold: collect_list(token hash) -> simhash long.
 
-    INTEGER-EXACT twin of the native 60/64-aggregate form (r8): per bit i,
-    s_i = sum over tokens of +/-1 = 2*popcount_i - n, fingerprint bit i set
-    iff s_i > 0 -- all int64 arithmetic, so the result is bit-identical to
-    the native aggregate law with zero fp-summation caveats. Exists because
-    the native form's 60 sum(CASE) aggregates + 60-term fingerprint fold
-    cost ~7 s of DRIVER-side Catalyst/Janino work per query at any data
-    size (measured r8, plan=7.1 s vs exec=1.1 s at sf0.1) -- the plan, not
-    the data, was the bottleneck (guide section 4.2: batch the custom
+    INTEGER-EXACT twin of the native sum-of-bits law
+    (:func:`_simhash_reference`): per bit i, s_i = sum over tokens of
+    +/-1 = 2*popcount_i - n, fingerprint bit i set iff s_i > 0 -- all
+    int64 arithmetic, so the result is bit-identical to the native law
+    with zero fp-summation caveats. Exists because the native form's 60
+    sum(CASE) aggregates + 60-term fingerprint fold cost ~7 s of
+    DRIVER-side Catalyst/Janino work per query at any data size
+    (measured r8, plan=7.1 s vs exec=1.1 s at sf0.1) -- the plan, not the
+    data, was the bottleneck (guide section 4.2: batch the custom
     arithmetic in numpy, keep Spark for distribution).
     """
     import numpy as np
@@ -267,13 +284,26 @@ def _simhash_fold_udf(bits: int):
     return fold
 
 
+def _token_hashes(
+    df: DataFrame, text_col: str, id_col: str, portable: bool
+) -> DataFrame:
+    """(id, h): one row per document token with its 64-bit (or portable
+    60-bit) hash -- the input of both SimHash folds."""
+    tok_hash = (
+        portable_hash64(F.col("tok"), 0) if portable else F.xxhash64("tok")
+    )
+    return _spread(df).select(
+        F.col(id_col).alias("id"),
+        F.explode(tokenize(F.col(text_col))).alias("tok"),
+    ).select("id", tok_hash.alias("h"))
+
+
 def simhash(
     df: DataFrame,
     text_col: str,
     id_col: str,
     bits: int = 64,
     portable: bool = False,
-    arrow: bool = True,
 ) -> DataFrame:
     """SimHash over the document's token set.
 
@@ -282,33 +312,37 @@ def simhash(
     the md5 60-bit hash law (callers should pass bits=60 with it) so a
     DuckDB oracle can reproduce fingerprints exactly.
 
-    ``arrow=True`` is the DEFAULT, so the plan holds a pandas UDF unless
-    the caller passes ``arrow=False``: tokens are hashed in the JVM, then
-    the per-document bit-count fold runs as one Arrow pandas UDF over
-    collect_list(h) -- integer-exact, bit-identical to the native form
-    (see _simhash_fold_udf). The aggregation state is the document's own
-    token hashes (bounded by the document's size, which already travels
-    the pipeline), not a hot-key blowup. ``arrow=False`` keeps the
-    UDF-free explode->aggregate form: per bit, sum(+/-1) via
-    shiftright/and -- same results, ~7 s/query slower to PLAN.
+    The plan holds a pandas UDF: tokens are hashed in the JVM, then the
+    per-document bit-count fold runs as one Arrow pandas UDF over
+    collect_list(h) -- integer-exact, bit-identical to the native
+    sum-of-bits law (see _simhash_fold_udf). The aggregation state is the
+    document's own token hashes (bounded by the document's size, which
+    already travels the pipeline), not a hot-key blowup.
     """
-    tok_hash = (
-        portable_hash64(F.col("tok"), 0) if portable else F.xxhash64("tok")
+    hs = _token_hashes(df, text_col, id_col, portable).groupBy("id").agg(
+        F.collect_list("h").alias("_hs")
     )
-    toks = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(tokenize(F.col(text_col))).alias("tok"),
-    ).withColumn("h", tok_hash)
-    if arrow:
-        hs = toks.groupBy("id").agg(F.collect_list("h").alias("_hs"))
-        return hs.select("id", _simhash_fold_udf(bits)(F.col("_hs")).alias("simhash"))
+    return hs.select("id", _simhash_fold_udf(bits)(F.col("_hs")).alias("simhash"))
+
+
+def _simhash_reference(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    bits: int = 64,
+    portable: bool = False,
+) -> DataFrame:
+    """The native SimHash law, the reference the Arrow fold of
+    :func:`simhash` is tested against: explode -> aggregate, per bit
+    sum(+/-1) via shiftright/and, then a ``bits``-term fingerprint fold.
+    Same fingerprints as ``simhash``, ~7 s/query slower to PLAN."""
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"s{i}")
         for i in range(bits)
     ]
-    sums = toks.groupBy("id").agg(*aggs)
+    sums = _token_hashes(df, text_col, id_col, portable).groupBy("id").agg(*aggs)
     fp = sum(
         (
             F.when(F.col(f"s{i}") > 0, F.lit(1).cast("long") * (1 << i) if i < 63
@@ -327,17 +361,17 @@ def simhash_pairs(
     max_hamming: int = 3,
     max_bucket_size: int = 256,
     portable: bool = False,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: 4-segment pigeonhole blocking + exact
     Hamming verification (<= max_hamming, which must be <= 3 for 4
-    segments to guarantee recall). Fingerprints are materialized by
-    default for the same three-consumer reason as minhash_lsh_pairs."""
+    segments to guarantee recall). Fingerprints are materialized with an
+    eager ``localCheckpoint`` for the same three-consumer reason as
+    minhash_lsh_pairs; they ride through the bucket join as payload."""
     bits = 60 if portable else 64
     seg_bits = bits // 4
-    fp = simhash(df, text_col, id_col, bits=bits, portable=portable)
-    if materialize_signatures:
-        fp = fp.localCheckpoint(eager=True)
+    fp = simhash(df, text_col, id_col, bits=bits, portable=portable).localCheckpoint(
+        eager=True
+    )
     segs = F.array(
         *[
             F.concat(
@@ -350,25 +384,15 @@ def simhash_pairs(
         ]
     )
     buckets = fp.select("id", "simhash", F.explode(segs).alias("bucket"))
-    sizes = key_count(buckets, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    buckets = buckets.join(ok, "bucket", "inner")
-    a = buckets.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "bucket"
-    )
-    b = buckets.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "bucket"
-    )
-    pairs = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+    return (
+        _capped_bucket_pairs(buckets, max_bucket_size, payload="simhash")
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
+        )
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -412,8 +436,6 @@ def embedding_near_dup_pairs(
     num_tables: int = 4,
     seed: int = 42,
     max_bucket_size: int = 1024,
-    arrow: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup via banded random-hyperplane LSH.
 
@@ -427,14 +449,15 @@ def embedding_near_dup_pairs(
     + one explode; ids only travel through the bucket join, vectors are
     re-joined after the pair dedup.
 
-    ``arrow=True`` (default) runs the Arrow bucket and cosine kernels
-    (similarity_search.lsh_buckets / pair_cosine), bit-identical to the
-    native HOF twins that ``arrow=False`` selects for UDF-free plans.
+    The plan holds two Arrow pandas UDFs: the guarded-matmul bucket kernel
+    (similarity_search.hyperplane_table_buckets_udf) and the cosine fold
+    (emb_kernels.cosine_fold). A NULL or wrong-width embedding gets no
+    bucket, so it is never a candidate.
     """
+    from crocodile_spark.functions.emb_kernels import cosine_fold
     from crocodile_spark.operators.similarity_search import (
         embedding_dim,
-        lsh_buckets,
-        pair_cosine,
+        hyperplane_table_buckets_udf,
     )
 
     dim = embedding_dim(df, emb_col)
@@ -442,30 +465,23 @@ def embedding_near_dup_pairs(
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    buckets = lsh_buckets(emb_col, dim, num_planes, num_tables, seed, arrow)
-    b = _spread(df).select(
-        F.col(id_col).alias("id"), F.explode(buckets).alias("bucket")
-    )
+    buckets = hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)
     # (id, bucket) feeds the size count + both self-join sides: materialize
     # so the hyperplane projection (the Arrow UDF) runs once, not 3x
-    # (materialize=False keeps the plan lazy for inspection)
-    if materialize:
-        b = b.localCheckpoint(eager=True)
-    sizes = key_count(b, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    b = b.join(ok, "bucket", "inner")
-    pairs = (
-        b.withColumnRenamed("id", "id_a")
-        .join(b.withColumnRenamed("id", "id_b"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    b = (
+        _spread(df)
+        .select(
+            F.col(id_col).alias("id"),
+            F.explode(buckets(F.col(emb_col))).alias("bucket"),
+        )
+        .localCheckpoint(eager=True)
     )
+    pairs = _capped_bucket_pairs(b, max_bucket_size)
     v = df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
     return (
         pairs.join(v.withColumnsRenamed({"id": "id_a", "v": "va"}), "id_a")
         .join(v.withColumnsRenamed({"id": "id_b", "v": "vb"}), "id_b")
-        .withColumn("cosine", pair_cosine(F.col("va"), F.col("vb"), arrow))
+        .withColumn("cosine", cosine_fold(F.col("va"), F.col("vb")))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

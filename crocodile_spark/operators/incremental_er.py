@@ -51,6 +51,7 @@ update loop); this operator is the Spark-native, set-at-a-time form.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,27 +128,25 @@ class ResolutionState:
         survivor_keys: DataFrame,
         delta: StageResult,
         signatures: DataFrame,
+        token_df: DataFrame,
         clusters: DataFrame,
         edges: DataFrame | None,
         cfg: PipelineConfig,
-        removed: DataFrame | None = None,
         n_removed: int = 0,
     ) -> ResolutionState:
-        """The state after ``delta`` entered this one and ``removed``
-        (whose records and keys are already gone from ``survivors`` and
-        ``survivor_keys``) left it: ``signatures``, ``clusters`` and
-        ``edges`` are the delta operator's, the token DF is merged by
-        :func:`merge_token_df`, and only the delta's static keys are
-        projected."""
+        """The state after ``delta`` entered this one and ``n_removed``
+        records (whose records and keys are already gone from
+        ``survivors`` and ``survivor_keys``) left it: ``signatures``,
+        ``token_df`` (the :func:`merge_token_df` table the signature stage
+        materialized), ``clusters`` and ``edges`` are the delta
+        operator's, and only the delta's static keys are projected."""
         delta_sigs = signatures.join(delta.df.select("url"), "url", "semi")
         return ResolutionState(
             records=survivors.select(*delta.df.columns).unionByName(delta.df),
             clusters=clusters,
             signatures=signatures,
             static_keys=survivor_keys.unionByName(static_keys(delta_sigs, cfg)),
-            token_df=merge_token_df(self.token_df, delta.df, cfg, removed).select(
-                "token", "df"
-            ),
+            token_df=token_df.select("token", "df"),
             n_records=self.n_records - n_removed + delta.rows,
             edges=edges,
         )
@@ -281,13 +280,41 @@ def incremental_signatures(
     |removed| x tokens/record x holders-of-those-tokens -- delta-scale
     for re-crawl updates, where the holders of a removed record's
     distinctive tokens are mostly its own entity's other pages.
+
+    The merged DF table is materialized once (:func:`merge_token_df`):
+    the flip collect, the affected-url and the rebuilt slices all read it.
     """
+    return _signature_merge(
+        existing_records, existing_signatures, existing_token_df,
+        existing_n_records, delta, n_delta, cfg, changed_collect_cap,
+        removed_records, n_removed,
+    )[0]
+
+
+def _signature_merge(
+    existing_records: DataFrame,
+    existing_signatures: DataFrame,
+    existing_token_df: DataFrame,
+    existing_n_records: int,
+    delta: DataFrame,
+    n_delta: int,
+    cfg: PipelineConfig,
+    changed_collect_cap: int = 20_000,
+    removed_records: DataFrame | None = None,
+    n_removed: int = 0,
+) -> tuple[DataFrame | None, DataFrame | None, DataFrame]:
+    """The law of :func:`incremental_signatures`: (union signatures,
+    affected old urls, the materialized merged (token, df, df_old)
+    table), with the first two None past the flip collect cap."""
+    merged = materialize(
+        "token_df",
+        lambda: merge_token_df(existing_token_df, delta, cfg, removed_records),
+    ).df
     c_old = mention_df_threshold(cfg, existing_n_records)
     c_new = mention_df_threshold(
         cfg, existing_n_records - n_removed + n_delta
     )
     B = cfg.max_block_size
-    merged = merge_token_df(existing_token_df, delta, cfg, removed_records)
     old_distinct = F.col("df_old") <= F.lit(c_old)
     new_distinct = F.col("df") <= F.lit(c_new)
     base_changed = merged.where(
@@ -308,7 +335,7 @@ def incremental_signatures(
 
     flip_rows = [r["token"] for r in flips.limit(changed_collect_cap + 1).collect()]
     if len(flip_rows) > changed_collect_cap:
-        return None
+        return None, None, merged
     # Broadcast semi join, NOT an up-to-20k-element F.array literal +
     # per-row arrays_overlap: the literal form embeds the flip set in the
     # expression tree (the plan-size pathology this file already fought
@@ -367,44 +394,44 @@ def incremental_signatures(
     kept = existing_signatures.select(*sig_cols).join(
         affected_urls, "url", "left_anti"
     )
-    # Only the DELTA-SCALE pieces are materialized (affected_urls: a tiny
-    # url set; rebuilt: delta + affected rows); the union is returned lazy
-    # for the caller to materialize once. The rebuilt old urls ride on it
-    # for the re-crawl seed.
-    out = kept.unionByName(rebuilt)
-    out._rebuilt_urls = affected_urls
-    return out
+    # Besides the vocab-scale DF table, only the DELTA-SCALE pieces are
+    # materialized (affected_urls: a tiny url set; rebuilt: delta +
+    # affected rows); the union is returned lazy for the caller to
+    # materialize once. The affected urls seed the re-crawl's re-decided
+    # set.
+    return kept.unionByName(rebuilt), affected_urls, merged
 
 
 def union_signatures(
     state: ResolutionState,
     base_records: DataFrame,
-    delta: DataFrame,
-    n_delta: int,
+    delta: StageResult,
     cfg: PipelineConfig,
     removed_records: DataFrame | None = None,
     n_removed: int = 0,
-) -> DataFrame:
-    """Signature table of ``base_records`` plus ``delta``: the
-    stored-state merge law of :func:`incremental_signatures`, or
-    ``mention_signatures`` over the union when its flip set outgrows the
-    collect cap."""
-    sigs = incremental_signatures(
-        base_records,
-        state.signatures,
-        state.token_df,
-        state.n_records,
-        delta,
-        n_delta,
-        cfg,
-        removed_records=removed_records,
+) -> tuple[StageResult, DataFrame, DataFrame | None]:
+    """The ``signatures`` stage of the delta paths: the signature table of
+    ``base_records`` plus ``delta``, by the stored-state merge law of
+    :func:`incremental_signatures`, or ``mention_signatures`` over the
+    union when its flip set outgrows the collect cap.
+
+    Returns the stage, the union's (token, df, df_old) table -- merged
+    once by :func:`merge_token_df` and materialized, so the signature law
+    and the next state read the same rows -- and the old urls whose
+    signature the merge law rebuilt (None after the fallback)."""
+    t0 = time.time()
+    sigs, rebuilt, token_df = _signature_merge(
+        base_records, state.signatures, state.token_df, state.n_records,
+        delta.df, delta.rows, cfg, removed_records=removed_records,
         n_removed=n_removed,
     )
-    if sigs is not None:
-        return sigs
-    return mention_signatures(
-        base_records.select(*delta.columns).unionByName(delta), cfg
-    )
+    if sigs is None:
+        union = base_records.select(*delta.df.columns).unionByName(delta.df)
+        sigs = mention_signatures(union, cfg)
+    sig = materialize("signatures", lambda: sigs)
+    # the stage wall includes the DF merge and the delta-scale slices
+    sig.wall_s = time.time() - t0
+    return sig, token_df, rebuilt
 
 
 def delta_pairs(
@@ -661,10 +688,7 @@ def incremental_er(
 
     rec = materialize("records", records)
     new_urls = rec.df.select("url")
-    sig = materialize(
-        "signatures",
-        lambda: union_signatures(state, state.records, rec.df, rec.rows, cfg),
-    )
+    sig, token_df, _ = union_signatures(state, state.records, rec, cfg)
     p, sc = score_delta_pairs(sig.df, new_urls, cfg, state.static_keys)
     new_edges = sc.df.where(F.col("is_edge")).select("url_a", "url_b")
     cl = materialize(
@@ -678,7 +702,8 @@ def incremental_er(
     return IncrementalOutput(
         rec.df, p.df, sc.df, cl.df,
         state=state.advance(
-            state.records, state.static_keys, rec, sig.df, cl.df, edges, cfg
+            state.records, state.static_keys, rec, sig.df, token_df, cl.df,
+            edges, cfg,
         ),
         stage_stats={st.name: st.stats() for st in stages},
     )

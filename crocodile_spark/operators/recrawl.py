@@ -175,18 +175,11 @@ def recrawl_upsert(
         stored_keys = state.static_keys
 
     # -- signatures: merge law with removal support ----------------------
-    rebuilt: list[DataFrame] = []  # old urls the merge law re-signed
-
-    def signatures() -> DataFrame:
-        sigs = union_signatures(
-            state, base_records, delta, rec.rows, cfg, removed_records=removed,
-            n_removed=n_updated,
-        )
-        if hasattr(sigs, "_rebuilt_urls"):
-            rebuilt.append(sigs._rebuilt_urls)
-        return sigs
-
-    sig = materialize("signatures", signatures)
+    # rebuilt: the old urls the merge law re-signed
+    sig, token_df, rebuilt = union_signatures(
+        state, base_records, rec, cfg, removed_records=removed,
+        n_removed=n_updated,
+    )
 
     # -- seeds: fresh-assignment urls + signature-rebuilt old records ----
     new_urls = delta.select("url")
@@ -196,15 +189,15 @@ def recrawl_upsert(
     # Edge-retaining repair needs the merge law's rebuilt-record set to
     # know exactly which old records' decisions are stale; without it
     # (flip-cap sig fallback) dissolve-and-rescore stays the safe path.
-    retain = state.edges is not None and n_updated > 0 and bool(rebuilt)
+    retain = state.edges is not None and n_updated > 0 and rebuilt is not None
     # the SEED is every url whose pair decisions are re-derived this run:
     # retaining mode excludes untouched dissolved members (their old
     # edges stand in for re-scoring), dissolve mode includes them
     seed = new_urls if retain else fresh_urls
-    if rebuilt:
+    if rebuilt is not None:
         # affected_urls from the signature merge (includes removed urls,
         # harmless: they have no signature row, so they key nothing)
-        seed = seed.unionByName(rebuilt[0]).distinct()
+        seed = seed.unionByName(rebuilt).distinct()
     seed_stage = materialize("seed", lambda: seed)
 
     p, sc = score_delta_pairs(
@@ -251,8 +244,8 @@ def recrawl_upsert(
         scored=sc.df,
         clusters=cl.df,
         state=state.advance(
-            base_records, stored_keys, rec, sig.df, cl.df, out_edges, cfg,
-            removed=removed, n_removed=n_updated,
+            base_records, stored_keys, rec, sig.df, token_df, cl.df, out_edges,
+            cfg, n_removed=n_updated,
         ),
         stage_stats={
             **{st.name: st.stats() for st in stages},

@@ -10,8 +10,8 @@ crocodile/ml.py:57-60) is replaced by a broadcast logistic scorer:
 sigmoid(w . f + b) as a single native expression.
 
 Scale notes: the pair table joins the (much smaller) signature table twice
--- both joins are plain hash joins on url; no Python in the loop. The
-optional Jaro-Winkler column is an Arrow pandas UDF and is off by default.
+-- both joins are plain hash joins on url; no Python in the loop (the
+Jaro-Winkler UDF of ``functions.similarity`` is not a scoring feature).
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.similarity import (
-    jaro_winkler_udf,
     levenshtein_similarity,
     monge_elkan_lev,
     ngram_jaccard,
@@ -100,27 +99,21 @@ def embedding_cosine(a, b):
     ).otherwise(F.lit(0.0))
 
 
-def attach_pair_features(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    use_jaro_winkler: bool = False,
-    broadcast_sigs: bool | None = None,
-) -> DataFrame:
+def attach_pair_features(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     """pairs(url_a, url_b) x sigs -> feature columns per pair.
 
-    Join strategy: left to AQE by default -- it converts to broadcast-hash
-    at runtime when the signature side's actual size is under the
-    threshold, and splits skewed partitions otherwise (both enabled in the
-    session defaults). ``broadcast_sigs=True`` forces the hint (driver-side
-    broadcast build is single-threaded, so forcing it hurts scaling when
-    the join would have been fine).
+    Join strategy: left to AQE -- it converts to broadcast-hash at runtime
+    when the signature side's actual size is under the threshold, and
+    splits skewed partitions otherwise (both enabled in the session
+    defaults). No broadcast is forced: the driver-side broadcast build is
+    single-threaded, so forcing it hurts scaling when the join would have
+    been fine.
     """
     has_emb = "embedding" in sigs.columns
     proj_cols = ["url", "mention_norm", "sig_tokens", "tokens", "row_hash"]
     if has_emb:
         proj_cols.append("embedding")
-    proj = sigs.select(*proj_cols)
-    side = F.broadcast(proj) if broadcast_sigs else proj
+    side = sigs.select(*proj_cols)
     a = side.select(
         F.col("url").alias("url_a"),
         F.col("mention_norm").alias("mention_a"),
@@ -161,10 +154,6 @@ def attach_pair_features(
     if has_emb:
         df = df.withColumn(
             EMB_FEATURE, embedding_cosine(F.col("emb_a"), F.col("emb_b"))
-        )
-    if use_jaro_winkler:
-        df = df.withColumn(
-            "jw_score", jaro_winkler_udf(F.col("mention_a"), F.col("mention_b"))
         )
     return df
 

@@ -10,12 +10,15 @@ Three strategies:
 - ivf_topk: coarse-quantizer cells, each query probing its ``n_probe``
   best cells.
 
-The ANN paths take ``arrow: bool``. True (default) runs one Arrow kernel
-per law: the guarded matmul of ``functions.emb_kernels.exact_dots`` for
-hyperplane signs and centroid choices, and the left-fold cosine for the
-re-rank. Both are bit-identical to the native higher-order-function
-twins that ``arrow=False`` selects (UDF-free plans) on every valid row,
-and so to the DuckDB oracles. Hyperplanes and centroids are seeded.
+The two ANN plans hold Arrow pandas UDFs, one kernel per law: the
+guarded matmul of ``functions.emb_kernels.exact_dots`` for hyperplane
+signs and centroid choices, and the left-fold cosine
+(``emb_kernels.cosine_fold``) for the shared exact re-rank
+(:func:`_exact_topk`). Both are bit-identical on every valid row to the
+native higher-order-function laws kept here as test references
+(``hyperplane_table_buckets``, ``_ivf_dots_struct``) and so to the DuckDB
+oracles. A NULL or wrong-width embedding gets no bucket and no cell, so
+it is never a candidate. Hyperplanes and centroids are seeded.
 
 At 100 TB the brute-force path is a deliberate non-starter (quadratic);
 lsh_topk's cost is bounded by bucket sizes, which are capped.
@@ -148,10 +151,10 @@ def _scatter_rows(mask, rows) -> pd.Series:
 def hyperplane_table_buckets_udf(
     dim: int, planes_per_table: int, num_tables: int, seed: int
 ):
-    """Arrow-vectorized twin of ``hyperplane_table_buckets``: one numpy
-    matmul per Arrow batch instead of per-plane higher-order-function loops
-    (Spark HOFs are CodegenFallback, i.e. interpreted per row). Returns a
-    Column -> Column function.
+    """Arrow-vectorized twin of ``hyperplane_table_buckets`` (its test
+    reference): one numpy matmul per Arrow batch instead of per-plane
+    higher-order-function loops (Spark HOFs are CodegenFallback, i.e.
+    interpreted per row). Returns a Column -> Column function.
 
     Keys are bit-identical to the native form: plane dots come from
     ``emb_kernels.exact_dots``, whose matmul is recomputed as the
@@ -164,8 +167,8 @@ def hyperplane_table_buckets_udf(
     form gives all zeros.
 
     This is the hot path at scale (dim 768 x dozens of planes: a (batch x
-    dim) @ (dim x planes) matmul); the native-expression twin remains for
-    plan-gated tests and UDF-free deployments.
+    dim) @ (dim x planes) matmul); the native-expression twin remains only
+    as the tests' reference law.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -209,30 +212,32 @@ def hyperplane_table_buckets_udf(
     return lambda emb: buckets(emb, has_null_element(emb))
 
 
-def lsh_buckets(
-    emb: str, dim: int, num_planes: int, num_tables: int, seed: int, arrow: bool
-):
-    """The array<string> per-table bucket column: the Arrow kernel, or
-    the native HOF twin for UDF-free plans (``arrow=False``). Identical
-    keys on every valid row (see hyperplane_table_buckets_udf)."""
-    if arrow:
-        return hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)(
-            F.col(emb)
-        )
-    return hyperplane_table_buckets(emb, dim, num_planes, num_tables, seed)
+def _exact_topk(
+    pairs: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    emb: str,
+) -> DataFrame:
+    """The exact re-rank tail of the ANN paths: dedup the candidate
+    (query, corpus) pairs, re-join both vectors (the candidate join
+    carries ids only, so replication never shuffles the embedding
+    payload), score the fold cosine, and keep ``row_number <= k`` per
+    query (cosine desc, corpus id asc)."""
+    from crocodile_spark.functions.emb_kernels import cosine_fold
 
-
-def pair_cosine(a, b, arrow: bool):
-    """The exact-cosine re-rank/verify column: the bit-exact Arrow fold
-    kernel whenever a Python stage is already in the plan (the
-    interpreted HOF was the dominant exec cost of the re-rank), the
-    native HOF twin for UDF-free plans (``arrow=False``). Identical
-    values either way (emb_kernels fold law)."""
-    if arrow:
-        from crocodile_spark.functions.emb_kernels import cosine_fold
-
-        return cosine_fold(a, b)
-    return cosine_similarity(a, b)
+    sims = (
+        pairs.select(query_id, corpus_id)
+        .dropDuplicates([query_id, corpus_id])
+        .join(queries.select(F.col(query_id), F.col(emb).alias("_qv")), query_id)
+        .join(corpus.select(F.col(corpus_id), F.col(emb).alias("_cv")), corpus_id)
+        .withColumn("cosine", cosine_fold(F.col("_qv"), F.col("_cv")))
+        .drop("_qv", "_cv")
+    )
+    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
+    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def lsh_topk(
@@ -246,8 +251,6 @@ def lsh_topk(
     num_tables: int = 12,
     seed: int = 42,
     max_bucket_size: int = 4096,
-    arrow: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """ANN top-k: single-pass random-hyperplane LSH bucket join, exact
     cosine within candidates, OR over ``num_tables`` independent tables.
@@ -255,46 +258,33 @@ def lsh_topk(
     Single-pass shape: all table buckets come from ONE projection and one
     explode on each side (not a per-table union, which would rescan the
     corpus and recount buckets ``num_tables`` times); the bucket join
-    carries ids only, vectors are re-joined after the candidate-pair dedup
-    so the per-table replication never shuffles the embedding payload.
-    Recall grows with num_tables; cost is Sum(bucket pair volume), capped.
-    ``arrow=True`` (default) computes buckets with the guarded-matmul
-    Arrow kernel and the re-rank with the fold kernel -- bit-identical to
-    the native form and the DuckDB oracle on every valid row; False uses
-    the native-expression twin end to end (UDF-free deployments).
+    carries ids only (see :func:`_exact_topk`). Recall grows with
+    num_tables; cost is Sum(bucket pair volume), capped. Buckets come from
+    the guarded-matmul Arrow kernel and the re-rank from the fold kernel
+    -- bit-identical to the native laws and the DuckDB oracle on every
+    valid row.
     """
-    from crocodile_spark.operators.blocking import key_count
+    from crocodile_spark.operators.blocking import key_count, spread
 
     dim = embedding_dim(corpus, emb)
     if dim is None:
         raise ValueError("empty corpus")
-    buckets = lsh_buckets(emb, dim, num_planes, num_tables, seed, arrow)
-
-    from crocodile_spark.operators.blocking import spread
-
+    buckets = hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)(
+        F.col(emb)
+    )
     qb = spread(queries).select(F.col(query_id), F.explode(buckets).alias("bucket"))
-    cb = spread(corpus).select(F.col(corpus_id), F.explode(buckets).alias("bucket"))
     # (id, bucket) feeds the size count AND the bucket join: materialize so
-    # the corpus-side hyperplane projection runs once, not per consumer.
-    # materialize=False keeps the plan lazy (plan inspection, explain).
-    if materialize:
-        cb = cb.localCheckpoint(eager=True)
-    sizes = key_count(cb, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    cb = cb.join(ok, "bucket", "inner")
-    pairs = (
-        qb.join(cb, "bucket")
-        .select(query_id, corpus_id)
-        .dropDuplicates([query_id, corpus_id])
+    # the corpus-side hyperplane projection runs once, not per consumer
+    cb = (
+        spread(corpus)
+        .select(F.col(corpus_id), F.explode(buckets).alias("bucket"))
+        .localCheckpoint(eager=True)
     )
-    sims = (
-        pairs.join(queries.select(F.col(query_id), F.col(emb).alias("_qv")), query_id)
-        .join(corpus.select(F.col(corpus_id), F.col(emb).alias("_cv")), corpus_id)
-        .withColumn("cosine", pair_cosine(F.col("_qv"), F.col("_cv"), arrow))
-        .drop("_qv", "_cv")
+    ok = key_count(cb, "bucket").where(F.col("count") <= max_bucket_size)
+    cb = cb.join(ok.select("bucket"), "bucket", "inner")
+    return _exact_topk(
+        qb.join(cb, "bucket"), queries, corpus, k, query_id, corpus_id, emb
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def seeded_random_centroids(dim: int, n_centroids: int, seed: int):
@@ -354,9 +344,11 @@ def train_ivf_centroids(
 
 
 def _ivf_dots_struct(emb: str, centroids):
-    """array<struct<d, cell>> of per-centroid dots -- the one shared law
-    for corpus assignment AND query probing (ties break to the larger
-    cell id on both, mirrored in the DuckDB oracle)."""
+    """array<struct<d, cell>> of per-centroid dots: the native IVF law
+    the Arrow ``ivf_probe_cells_udf`` is tested against -- corpus
+    assignment ``array_max(...)["cell"]`` and query probing
+    ``reverse(array_sort(...))`` (ties break to the larger cell id on
+    both, mirrored in the DuckDB oracle)."""
     def dot(c):
         return F.aggregate(
             F.zip_with(
@@ -374,11 +366,6 @@ def _ivf_dots_struct(emb: str, centroids):
             for i, c in enumerate(centroids)
         ]
     )
-
-
-def _ivf_cell(emb: str, centroids) -> "F.Column":
-    """argmax-dot centroid id as a native expression."""
-    return F.array_max(_ivf_dots_struct(emb, centroids))["cell"]
 
 
 def ivf_probe_cells_udf(centroids, n_probe: int):
@@ -430,54 +417,30 @@ def ivf_topk(
     query_id: str = "query_id",
     corpus_id: str = "cand_id",
     emb: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF ANN top-k: corpus rows live in their argmax-dot centroid cell;
     each query probes its ``n_probe`` best cells; exact cosine ranks within
     the probed candidates. Complements lsh_topk as the brief's second
     scale path -- cost ~ n_probe/n_centroids of brute force.
 
-    ``arrow=True`` (default) computes cell assignment and probes with the
-    guarded-matmul Arrow kernel (ivf_probe_cells_udf) and the re-rank with
-    the fold kernel -- identical results to the plan-literal HOF form at a
-    fraction of its plan+exec cost; False keeps the fully native HOF form
-    for UDF-free deployments -- same split as lsh_topk."""
+    Cell assignment and probes come from the guarded-matmul Arrow kernel
+    (ivf_probe_cells_udf) and the re-rank from the fold kernel, as in
+    lsh_topk -- identical results to the plan-literal native law
+    (``_ivf_dots_struct``) at a fraction of its plan+exec cost."""
     from crocodile_spark.operators.blocking import spread
 
-    if arrow:
-        assign = ivf_probe_cells_udf(centroids, 1)
-        probe = ivf_probe_cells_udf(centroids, n_probe)
-        cb = spread(corpus).select(
-            F.col(corpus_id),
-            F.element_at(assign(F.col(emb)), 1).cast("int").alias("cell"),
-        )
-        qb = spread(queries).select(
-            F.col(query_id), F.explode(probe(F.col(emb))).alias("cell")
-        )
-    else:
-        cb = spread(corpus).select(
-            F.col(corpus_id), _ivf_cell(emb, centroids).alias("cell")
-        )
-        probes = F.slice(
-            F.reverse(F.array_sort(_ivf_dots_struct(emb, centroids))), 1, n_probe
-        )
-        qb = spread(queries).select(
-            F.col(query_id),
-            F.explode(F.transform(probes, lambda s: s["cell"])).alias("cell"),
-        )
-    pairs = (
-        qb.join(cb, "cell")
-        .select(query_id, corpus_id)
-        .dropDuplicates([query_id, corpus_id])
+    assign = ivf_probe_cells_udf(centroids, 1)
+    probe = ivf_probe_cells_udf(centroids, n_probe)
+    cb = spread(corpus).select(
+        F.col(corpus_id),
+        F.element_at(assign(F.col(emb)), 1).cast("int").alias("cell"),
     )
-    sims = (
-        pairs.join(queries.select(F.col(query_id), F.col(emb).alias("_qv")), query_id)
-        .join(corpus.select(F.col(corpus_id), F.col(emb).alias("_cv")), corpus_id)
-        .withColumn("cosine", pair_cosine(F.col("_qv"), F.col("_cv"), arrow))
-        .drop("_qv", "_cv")
+    qb = spread(queries).select(
+        F.col(query_id), F.explode(probe(F.col(emb))).alias("cell")
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _exact_topk(
+        qb.join(cb, "cell"), queries, corpus, k, query_id, corpus_id, emb
+    )
 
 
 def recall_at_k(ann: DataFrame, exact: DataFrame, query_id: str = "query_id",

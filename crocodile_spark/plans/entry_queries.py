@@ -1521,7 +1521,7 @@ def q_ann_lsh_cosine(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.select(F.col("vec_id").alias("cand_id"), "embedding")
-    # the default Arrow path: the guarded-matmul bucket kernel signs every
+    # the Arrow path: the guarded-matmul bucket kernel signs every
     # plane dot as the oracle's sequential summation does (near-zero dots
     # are recomputed as the left fold, emb_kernels.exact_dots) and the
     # fold cosine re-rank replays list_cosine_similarity bit-for-bit
@@ -1588,7 +1588,7 @@ def q_ivf_ann_cosine(spark, sf_dir):
     )
     c = e.select(F.col("vec_id").alias("cand_id"), "embedding")
     cents = seeded_random_centroids(64, 16, 7)
-    # the default Arrow path: guarded-matmul cell choices equal those of
+    # the Arrow path: guarded-matmul cell choices equal those of
     # DuckDB's sequential list_inner_product (near-tied rows are
     # recomputed as the left fold, emb_kernels.exact_dots) without the
     # plan-literal HOF form's ~2 s plan + ~3 s interpreted exec per run
@@ -1656,7 +1656,7 @@ def q_embedding_near_dup(spark, sf_dir):
         ),
     )
     corp = base.unionByName(pert)
-    # the default Arrow kernels keep summation-order parity with the
+    # the Arrow kernels keep summation-order parity with the
     # oracle (emb_kernels) without the interpreted-HOF cost
     pairs = embedding_near_dup_pairs(corp, threshold=0.98, num_tables=6)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crocodile_spark.operators.dedup import (
+    _simhash_reference,
     dedup_keep_first,
     embedding_near_dup_pairs,
     exact_duplicates,
@@ -55,10 +56,11 @@ def test_simhash_properties(spark, docs):
 
 @pytest.mark.parametrize("portable", [False, True])
 def test_simhash_arrow_default_equals_native(spark, docs, portable):
-    """simhash defaults to the Arrow bit-count fold; its fingerprints must
-    equal the UDF-free native form's, for the xxhash64 law and the
-    portable md5 law (60 bits). Extra documents cover one token, many
-    tokens (bit 63 set or not) and text with no tokens."""
+    """simhash runs the Arrow bit-count fold; its fingerprints must equal
+    the native sum-of-bits reference law's (``_simhash_reference``), for
+    the xxhash64 law and the portable md5 law (60 bits). Extra documents
+    cover one token, many tokens (bit 63 set or not) and text with no
+    tokens."""
     extra = spark.createDataFrame(
         [
             (10, "solo"),
@@ -71,7 +73,7 @@ def test_simhash_arrow_default_equals_native(spark, docs, portable):
     df = docs.unionByName(extra)
     bits = 60 if portable else 64
     default = simhash(df, "text", "doc_id", bits=bits, portable=portable)
-    native = simhash(df, "text", "doc_id", bits=bits, portable=portable, arrow=False)
+    native = _simhash_reference(df, "text", "doc_id", bits=bits, portable=portable)
     got = {r["id"]: r["simhash"] for r in default.collect()}
     want = {r["id"]: r["simhash"] for r in native.collect()}
     assert len(got) >= 9

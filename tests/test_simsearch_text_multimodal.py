@@ -48,9 +48,9 @@ def test_lsh_topk_recall(spark, embeddings):
 
 
 def test_arrow_ann_paths_tolerate_null_and_ragged_embeddings(spark, embeddings):
-    """The Arrow matmul twins must degrade to null buckets/cells on null
-    or wrong-width embedding rows -- not kill the job -- matching the
-    native HOF paths' null propagation (r5 review finding)."""
+    """The Arrow matmul kernels must degrade to null buckets/cells on null
+    or wrong-width embedding rows -- not kill the job -- so such rows are
+    never candidates (r5 review finding)."""
     from crocodile_spark.operators.similarity_search import (
         ivf_topk,
         train_ivf_centroids,
@@ -76,7 +76,7 @@ def test_arrow_ann_paths_tolerate_null_and_ragged_embeddings(spark, embeddings):
         id_col="cand_id",
         n_centroids=8,
     )
-    ivf = ivf_topk(q, dirty, cents, k=5, n_probe=4, arrow=True)
+    ivf = ivf_topk(q, dirty, cents, k=5, n_probe=4)
     assert ivf.count() > 0
     assert ivf.where(F.col("cand_id") % 17 == 0).count() == 0
 
@@ -135,33 +135,47 @@ def test_hyperplane_buckets_arrow_equal_native(spark, embeddings):
     assert all(key.endswith("1111") for key in by_id[-1])
 
 
-def test_ivf_cells_arrow_equal_native_on_dirty_rows(spark):
-    """The Arrow IVF probe order equals the native
-    ``reverse(array_sort(struct<d, cell>))`` order on NaN, NULL-element,
-    +-inf, zero and tiny rows (NaN above every number, ties to the larger
-    cell); NULL and wrong-width arrays get NULL from the Arrow path."""
+def test_ivf_cells_arrow_equal_native_on_dirty_rows(spark, embeddings):
+    """The Arrow IVF cells equal the native ``_ivf_dots_struct`` law: the
+    probe order ``reverse(array_sort(struct<d, cell>))`` (``n_probe=4``)
+    and the corpus assignment ``array_max(...)["cell"]`` (``n_probe=1``).
+    Inputs: NaN, NULL-element, +-inf, zero and tiny rows (NaN above every
+    number, ties to the larger cell) under seeded centroids, and the
+    fixture embeddings under seeded and trained centroids. NULL and
+    wrong-width arrays get NULL from the Arrow path."""
     from crocodile_spark.operators.similarity_search import (
         _ivf_dots_struct,
         ivf_probe_cells_udf,
         seeded_random_centroids,
+        train_ivf_centroids,
     )
 
-    cents = seeded_random_centroids(8, 6, 3)
-    df = spark.createDataFrame(
+    dirty = spark.createDataFrame(
         _dirty_embedding_rows(8), "vec_id long, embedding array<double>"
     )
-    dots = _ivf_dots_struct("embedding", cents)
-    native = F.slice(F.reverse(F.array_sort(dots)), 1, 4)
-    got = df.select(
-        "vec_id",
-        ivf_probe_cells_udf(cents, 4)(F.col("embedding")).alias("a"),
-        F.transform(native, lambda s: s["cell"]).alias("n"),
-    ).collect()
-    for r in got:
-        if r["vec_id"] in (-9, -10, -11):
-            assert r["a"] is None
-        else:
-            assert r["a"] == r["n"], r["vec_id"]
+    fixture = embeddings.select("vec_id", "embedding")
+    trained = train_ivf_centroids(fixture, id_col="vec_id", n_centroids=8, seed=3)
+    for df, cents in (
+        (dirty, seeded_random_centroids(8, 6, 3)),
+        (fixture, seeded_random_centroids(64, 16, 7)),
+        (fixture, trained),
+    ):
+        dots = _ivf_dots_struct("embedding", cents)
+        native = F.slice(F.reverse(F.array_sort(dots)), 1, 4)
+        got = df.select(
+            "vec_id",
+            ivf_probe_cells_udf(cents, 4)(F.col("embedding")).alias("a"),
+            F.transform(native, lambda s: s["cell"]).alias("n"),
+            ivf_probe_cells_udf(cents, 1)(F.col("embedding")).alias("a1"),
+            F.array_max(dots)["cell"].alias("n1"),
+        ).collect()
+        assert got
+        for r in got:
+            if r["vec_id"] in (-9, -10, -11):
+                assert r["a"] is None and r["a1"] is None
+            else:
+                assert r["a"] == r["n"], r["vec_id"]
+                assert r["a1"] == [r["n1"]], r["vec_id"]
 
 
 def test_identify_language(spark):
@@ -324,36 +338,6 @@ def test_ivf_topk_recall(spark, embeddings):
     # every query produces results (compare against the query COUNT --
     # a groupBy over the output alone can never catch an absent query)
     assert ann.select("query_id").distinct().count() == q.count()
-
-
-def test_ivf_arrow_and_native_paths_agree(spark, embeddings):
-    """The Arrow guarded-matmul cell law (ivf_probe_cells_udf) and the
-    native plan-literal HOF form must produce identical top-k results --
-    same cells, same probes, same tie-breaks, bit-identical fold cosines
-    -- on real fixture data."""
-    from crocodile_spark.operators.similarity_search import (
-        ivf_topk,
-        seeded_random_centroids,
-        train_ivf_centroids,
-    )
-
-    q = embeddings.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    c = embeddings.select(F.col("vec_id").alias("cand_id"), "embedding")
-    for cents in (
-        seeded_random_centroids(64, 16, 7),
-        train_ivf_centroids(c, id_col="cand_id", n_centroids=8, seed=3),
-    ):
-        native = ivf_topk(q, c, cents, k=5, n_probe=4, arrow=False)
-        arrow = ivf_topk(q, c, cents, k=5, n_probe=4, arrow=True)
-        cols = ["query_id", "cand_id", "rank", "cosine"]
-        n_rows = native.count()
-        assert n_rows > 0
-        assert arrow.count() == n_rows
-        # exact set equality both directions (rank and cosine included)
-        assert native.select(cols).exceptAll(arrow.select(cols)).count() == 0
-        assert arrow.select(cols).exceptAll(native.select(cols)).count() == 0
 
 
 def test_media_header_parser_properties():
