@@ -19,6 +19,7 @@ input_hint requires a deterministic, byte-identical-per-url extractor).
 
 from __future__ import annotations
 
+import functools
 import html as _html
 import re
 from typing import Iterable
@@ -67,6 +68,13 @@ def row_hash(col: Column | str) -> Column:
     return F.sha2(c.cast("string"), 256)
 
 
+@functools.cache
+def stopword_array() -> Column:
+    """The English stopword set as one array literal, built once per
+    process: its 180 ``F.lit`` nodes cost one py4j round trip each."""
+    return F.array(*[F.lit(s) for s in sorted(ENGLISH_STOPWORDS)])
+
+
 def tokenize(col: Column | str, remove_stopwords: bool = True) -> Column:
     """F4: lowercase -> regex split -> drop empties -> distinct (set
     semantics) -> optionally drop English stopwords.
@@ -82,8 +90,7 @@ def tokenize(col: Column | str, remove_stopwords: bool = True) -> Column:
         )
     )
     if remove_stopwords:
-        stop = F.array(*[F.lit(s) for s in sorted(ENGLISH_STOPWORDS)])
-        toks = F.array_except(toks, stop)
+        toks = F.array_except(toks, stopword_array())
     return toks
 
 

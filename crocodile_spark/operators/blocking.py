@@ -40,7 +40,9 @@ Scale design (10^12-doc posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
@@ -168,43 +170,47 @@ def signatures_from_distinctive(
     (incremental_er.incremental_signatures) applies the IDENTICAL law to
     its rebuild-scoped distinctive rows -- byte-identical signatures are
     the equivalence contract between the two paths."""
-    sig = (
-        dist.groupBy("url")
-        .agg(
-            F.array_sort(F.collect_set(F.struct("df", "token"))).alias("_by_rarity")
-        )
-        .select(
-            "url",
-            F.array_sort(
-                F.transform(
-                    F.slice("_by_rarity", 1, cfg.sig_max_tokens),
-                    lambda s: s["token"],
-                )
-            ).alias("sig_tokens"),
-            F.array_sort(
-                F.transform(
-                    F.slice(
-                        F.filter(
-                            "_by_rarity",
-                            lambda s: s["df"] <= F.lit(cfg.max_block_size),
-                        ),
-                        1,
-                        cfg.block_max_tokens,
-                    ),
-                    lambda s: s["token"],
-                )
-            ).alias("block_tokens"),
-        )
+    by_rarity, sig_cols, fill = _signature_columns(
+        cfg.sig_max_tokens, cfg.max_block_size, cfg.block_max_tokens
     )
-    empty = F.array().cast("array<string>")
+    sig = dist.groupBy("url").agg(by_rarity).select("url", *sig_cols)
     return (
         records.join(sig, "url", "left")
         .join(minhash_bands(records, cfg), "url", "left")
-        .withColumn("sig_tokens", F.coalesce(F.col("sig_tokens"), empty))
-        .withColumn("block_tokens", F.coalesce(F.col("block_tokens"), empty))
-        .withColumn("mh_bands", F.coalesce(F.col("mh_bands"), empty))
-        .withColumn("mention_norm", F.concat_ws(" ", F.col("sig_tokens")))
+        .withColumns(dict(fill))
     )
+
+
+@functools.cache
+def _signature_columns(
+    sig_max_tokens: int, max_block_size: int, block_max_tokens: int
+) -> tuple[Column, tuple[Column, ...], tuple[tuple[str, Column], ...]]:
+    """The signature law's columns, built once per process: the per-url
+    rarity aggregate, the two token slices over it, and the fill of records
+    without a distinctive token or a shingle."""
+    by_rarity = F.array_sort(F.collect_set(F.struct("df", "token"))).alias("_by_rarity")
+    sig_tokens = F.array_sort(
+        F.transform(F.slice("_by_rarity", 1, sig_max_tokens), lambda s: s["token"])
+    ).alias("sig_tokens")
+    block_tokens = F.array_sort(
+        F.transform(
+            F.slice(
+                F.filter("_by_rarity", lambda s: s["df"] <= F.lit(max_block_size)),
+                1,
+                block_max_tokens,
+            ),
+            lambda s: s["token"],
+        )
+    ).alias("block_tokens")
+    empty = F.array().cast("array<string>")
+    filled = F.coalesce(F.col("sig_tokens"), empty)
+    fill = (
+        ("sig_tokens", filled),
+        ("block_tokens", F.coalesce(F.col("block_tokens"), empty)),
+        ("mh_bands", F.coalesce(F.col("mh_bands"), empty)),
+        ("mention_norm", F.concat_ws(" ", filled)),
+    )
+    return by_rarity, (sig_tokens, block_tokens), fill
 
 
 def minhash_bands(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -220,13 +226,21 @@ def minhash_bands(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
     higher-order function and was 2.8-4.9x slower on ~480-char texts
     (BENCH.md, "One-pass blocking keys").
     """
-    k, bsz = cfg.minhash_num_hashes, cfg.minhash_band_size
-    sh = records.select(
-        "url", F.explode(char_ngrams(F.col("text_norm"), cfg.shingle_size)).alias("sh")
+    shingles, mins, bands = _minhash_columns(
+        cfg.minhash_num_hashes, cfg.minhash_band_size, cfg.shingle_size
     )
-    sig = sh.groupBy("url").agg(
-        *[F.min(F.xxhash64("sh", F.lit(i))).alias(f"mh{i}") for i in range(k)]
-    )
+    sig = records.select("url", shingles).groupBy("url").agg(*mins)
+    return sig.select("url", bands)
+
+
+@functools.cache
+def _minhash_columns(
+    k: int, bsz: int, shingle_size: int
+) -> tuple[Column, tuple[Column, ...], Column]:
+    """(shingle explode, the k ``min`` hash slots, the band-key array) of
+    :func:`minhash_bands`, built once per process."""
+    shingles = F.explode(char_ngrams(F.col("text_norm"), shingle_size)).alias("sh")
+    mins = tuple(F.min(F.xxhash64("sh", F.lit(i))).alias(f"mh{i}") for i in range(k))
     bands = [
         F.concat(
             F.lit(f"mh{b}:"),
@@ -238,23 +252,27 @@ def minhash_bands(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
         )
         for b in range(k // bsz)
     ]
-    return sig.select("url", F.array(*bands).alias("mh_bands"))
+    return shingles, mins, F.array(*bands).alias("mh_bands")
 
 
-def _token_key_array():
-    return F.transform(F.col("block_tokens"), lambda t: F.concat(F.lit("tok:"), t))
-
-
-def _host_key_array():
+@functools.cache
+def _key_column(families: tuple[str, ...]) -> Column:
+    """``explode`` of the named key families (``tok``, ``host``, ``mh``)
+    as one ``key`` column, built once per process."""
     host = F.col("host")
-    return F.when(
-        host.isNotNull() & (F.length(host) > 0),
-        F.array(F.concat(F.lit("host:"), host)),
-    ).otherwise(F.array().cast("array<string>"))
+    arrays = {
+        "tok": F.transform(F.col("block_tokens"), lambda t: F.concat(F.lit("tok:"), t)),
+        "host": F.when(
+            host.isNotNull() & (F.length(host) > 0),
+            F.array(F.concat(F.lit("host:"), host)),
+        ).otherwise(F.array().cast("array<string>")),
+        "mh": F.col("mh_bands"),
+    }
+    return F.explode(F.concat(*[arrays[f] for f in families])).alias("key")
 
 
-def _explode_keys(sigs: DataFrame, *families) -> DataFrame:
-    return sigs.select("url", F.explode(F.concat(*families)).alias("key"))
+def _explode_keys(sigs: DataFrame, *families: str) -> DataFrame:
+    return sigs.select("url", _key_column(families))
 
 
 def token_keys(sigs: DataFrame) -> DataFrame:
@@ -263,7 +281,7 @@ def token_keys(sigs: DataFrame) -> DataFrame:
     family whose keys change as the corpus grows (document frequencies
     move under the relative cutoff) -- incremental resolution must
     recompute it over the union, while :func:`static_keys` can be stored."""
-    return _explode_keys(sigs, _token_key_array())
+    return _explode_keys(sigs, "tok")
 
 
 def static_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -271,7 +289,7 @@ def static_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     signature table's ``mh_bands``). Neither depends on any corpus-level
     statistic, so a record's static keys never change once computed -- an
     incremental resolution stores them with the resolution state."""
-    return _explode_keys(sigs, _host_key_array(), F.col("mh_bands"))
+    return _explode_keys(sigs, "host", "mh")
 
 
 def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -281,9 +299,7 @@ def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # is a set; host is one key; band index is in the key prefix), so no
     # dedup shuffle is needed here. Exact-duplicate groups (F3 row hash)
     # are NOT a key family: they are handled linearly by exact_dup_pairs.
-    return _explode_keys(
-        sigs, _token_key_array(), _host_key_array(), F.col("mh_bands")
-    )
+    return _explode_keys(sigs, "tok", "host", "mh")
 
 
 def cap_blocks(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -2,12 +2,12 @@
 deterministic cluster id = min member (SURVEY.md section 7.1 step 5).
 
 Two plans, chosen by the size of the canonical edge set (oriented u > v,
-self-loops dropped, distinct), whose count the first scan already takes
-(*To Partition, or Not to Partition*, SIGMOD 2021):
+self-loops dropped, distinct), which one limited collect both measures and
+brings to the driver (*To Partition, or Not to Partition*, SIGMOD 2021):
 
-- At most ``CC_DRIVER_MAX_EDGES`` edges: the edges are collected to the
-  driver and resolved by union-find with union-by-min, so every root is its
-  component's minimum member. One collect job instead of a join loop.
+- At most ``CC_DRIVER_MAX_EDGES`` edges: the collected edges are resolved
+  on the driver over int codes (the ids' ranks) in numpy, so every root is
+  its component's minimum member. One collect instead of a join loop.
 - Above it: the distributed large-star/small-star loop (Kiveris et al.,
   SoCC 2014) -- a driver-side loop of joins/aggregations with a cheap
   fixed-point check (row count + order-independent xxhash checksum) and
@@ -17,10 +17,10 @@ The cutoff is sized by driver memory, not by speed: the driver path is
 faster at every size measured, but its Python working set grows linearly
 with the edge count (see the constant's comment).
 
-Both plans give byte-identical output. Python ``str`` order is code-point
-order, which equals Spark's UTF-8 binary order, and integral ids compare as
-numbers; node types whose Spark order Python does not reproduce (floats,
-collated strings, ...) always take the distributed loop.
+Both plans give byte-identical output. Arrow sorts strings by their UTF-8
+bytes, which is Spark's binary order, and integral ids as numbers; node
+types whose Spark order Arrow does not reproduce (floats, collated strings,
+...) always take the distributed loop.
 
 Node-id encoding in the distributed loop: string node ids (urls) are
 DICTIONARY-ENCODED to longs before the loop and decoded after. The
@@ -36,7 +36,9 @@ ids the dictionary handed out.
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,11 +98,12 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 
 
 def _canonical(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """The canonical edge set, checkpointed, and its (count, checksum).
+    """The canonical edge set, checkpointed, and its (count, checksum), the
+    star loop's initial fixed-point state.
 
-    The checksum scan materializes the lazy checkpoint as it runs, so this
-    is one job; its result is both the size probe and the star loop's
-    initial fixed-point state."""
+    Under AQE even a lazy ``localCheckpoint`` runs its upstream shuffle
+    stages when it is called: one job for the distinct's exchange, then two
+    for the checksum (20k edges, local[4])."""
     e = _canon(edges).localCheckpoint(eager=False)
     return e, _checksum(e)
 
@@ -110,9 +113,9 @@ def _cc_loop(e: DataFrame, prev: tuple[int, int], max_iterations: int) -> DataFr
     set ``e`` with (count, checksum) ``prev``: -> (node, cluster_id) with
     cluster_id = min member under the node type's natural order."""
     for _ in range(max_iterations):
-        # lazy checkpoint + checksum = ONE job per round: the checksum scan
-        # materializes the checkpoint as it runs (r8; eager=True spent a
-        # separate materialization job per round before the checksum job)
+        # seven jobs per round (20k edges, local[4]): under AQE the lazy
+        # checkpoint runs the round's five upstream shuffle stages when it
+        # is called, and the checksum two more
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         cur = _checksum(e)
         if cur == prev:
@@ -141,15 +144,11 @@ def encode_node_dictionary(edges: DataFrame) -> DataFrame:
     return nodes.withColumn("nid", F.monotonically_increasing_id())
 
 
-def _cc_star(
-    edges: DataFrame, max_iterations: int, chk: tuple[int, int] | None = None
-) -> DataFrame:
+def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
     """Distributed CC: edges(u, v) -> (node, cluster_id), cluster_id = min
     member, by the large-star/small-star loop; string ids run the loop
-    dictionary-encoded. ``chk``: when given, ``edges`` is already the
-    canonical checkpointed edge set and ``chk`` its (count, checksum)."""
-    if chk is None:
-        edges, chk = _canonical(edges)
+    dictionary-encoded."""
+    edges, chk = _canonical(edges)
     if not isinstance(edges.schema["u"].dataType, T.StringType):
         return _cc_loop(edges, chk, max_iterations)
 
@@ -178,40 +177,48 @@ def _cc_star(
     )
 
 
-def _cc_driver(e: DataFrame) -> DataFrame:
-    """Driver CC over a canonical edge set: collect it, union-find with
-    union-by-min (each root is its component's minimum member) and path
-    compression, and return (node, cluster_id) with the input's node type."""
-    tbl = e.toArrow()
-    parent: dict = {}
+def _cc_driver(tbl: pa.Table, spark) -> DataFrame:
+    """Driver CC over a collected canonical edge set: -> (node, cluster_id)
+    with the input's node type, cluster_id = min member.
 
-    def find(x):
-        root = parent.setdefault(x, x)
-        while root != parent[root]:
-            root = parent[root]
-        while x != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for u, v in zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist()):
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    nodes = list(parent)
-    roots = [find(n) for n in nodes]
-    typ = tbl.schema.field("u").type
-    out = pa.table({"node": pa.array(nodes, typ), "cluster_id": pa.array(roots, typ)})
-    return e.sparkSession.createDataFrame(out)
+    The unique node ids are sorted by Arrow (binary order for strings,
+    numeric for integers -- Spark's orders), so an id's position in the
+    sorted array is its rank. The edges are encoded to those int codes and
+    resolved in numpy: each round hooks the larger root of every edge whose
+    ends have different roots onto the smaller one, then pointer jumping
+    flattens every tree onto its root. A parent code never exceeds its own,
+    so each root is its component's minimum code, i.e. its minimum id."""
+    ends = [tbl.column(c).combine_chunks() for c in ("u", "v")]
+    nodes = pc.unique(pa.concat_arrays(ends))
+    nodes = nodes.take(pc.sort_indices(nodes))
+    u, v = (pc.index_in(end, value_set=nodes).to_numpy() for end in ends)
+    parent = np.arange(len(nodes))
+    while True:
+        pu, pv = parent[u], parent[v]
+        split = pu != pv
+        if not split.any():
+            break
+        np.minimum.at(parent, np.maximum(pu, pv)[split], np.minimum(pu, pv)[split])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    out = pa.table({"node": nodes, "cluster_id": nodes.take(pa.array(parent))})
+    return spark.createDataFrame(out)
 
 
 # Canonical edge sets up to this size are resolved on the driver. Sized by
 # driver memory, not speed (the driver path was faster at every size
-# measured). Peak extra Python driver RSS with ~40-character url ids,
+# measured). Peak extra Python driver RSS and wall (connected_components
+# plus a count of its output, min of 3) with ~40-character url ids,
 # local[4] on a 4-vCPU host:
-#   250k edges, 62.5k nodes (4 edges/node)       +80 MB   1.3 s (star 9.6 s)
-#   250k edges, 500k nodes (every edge a cluster) +160 MB  4.9 s
-#   1M edges, 250k nodes (4 edges/node)          +300 MB  5.5 s
-# so 250k edges bound the driver's share at about 160 MB.
+#   250k edges, 62.5k nodes (4 edges/node)        +71 MB  2.3 s (star 11.5 s)
+#   250k edges, 500k nodes (every edge a cluster) +139 MB  4.9 s
+#   1M edges, 250k nodes (4 edges/node)           +287 MB  5.4 s
+# so 250k edges bound the driver's share at about 140 MB. Most of it is the
+# collected edge table and the assignment table handed back to Spark; the
+# numpy resolution adds little.
 CC_DRIVER_MAX_EDGES = 250_000
 
 
@@ -220,17 +227,18 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
     member of the component. Nodes appearing in no edge are absent (the
     caller unions singletons); self-loops and duplicate edges are dropped.
 
-    Canonical edge sets of at most ``CC_DRIVER_MAX_EDGES`` edges (a bound
-    on driver memory) with string or integral node ids are resolved exactly
-    by union-find on the driver; larger ones run the distributed star loop.
+    With string or integral node ids, the canonical edge set is collected
+    once, limited to ``CC_DRIVER_MAX_EDGES`` + 1 rows (a bound on driver
+    memory). When it fits, it is resolved exactly on the driver; otherwise,
+    or for other node types, the distributed star loop runs.
     ``max_iterations`` bounds only that loop. Both give identical output."""
-    e, chk = _canonical(edges)
-    dt = e.schema["u"].dataType
-    if chk[0] <= CC_DRIVER_MAX_EDGES and (
-        dt == T.StringType() or isinstance(dt, T.IntegralType)
-    ):
-        return _cc_driver(e)
-    return _cc_star(e, max_iterations, chk)
+    canon = _canon(edges)
+    dt = canon.schema["u"].dataType
+    if dt == T.StringType() or isinstance(dt, T.IntegralType):
+        tbl = canon.limit(CC_DRIVER_MAX_EDGES + 1).toArrow()
+        if tbl.num_rows <= CC_DRIVER_MAX_EDGES:
+            return _cc_driver(tbl, edges.sparkSession)
+    return _cc_star(edges, max_iterations)
 
 
 def cluster_records(

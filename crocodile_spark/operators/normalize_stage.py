@@ -12,7 +12,9 @@ Everything except the HTML extractor is native-expression / codegen'd.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crocodile_spark.functions.normalize import (
@@ -20,6 +22,31 @@ from crocodile_spark.functions.normalize import (
     row_hash,
     tokenize,
 )
+
+# columns carried through when the input has them; embedding rides through
+# so the scoring stage can compute the emb_cosine pair feature
+_CARRIED = ("warc_ts", "lang", "entity_id", "embedding")
+
+
+@functools.cache
+def _record_columns(from_html: bool) -> tuple[Column, tuple[Column, ...]]:
+    """(text_norm over the raw page, the record columns over text_norm),
+    built once per process."""
+    text = (
+        html_to_text_udf(F.col("html"))
+        if from_html
+        else F.coalesce(F.col("text"), F.lit(""))
+    )
+    # F2 law on page text: lower + whitespace collapse + trim
+    text_norm = F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")).alias("text_norm")
+    record = (
+        F.col("url"),
+        F.parse_url(F.col("url"), F.lit("HOST")).alias("host"),
+        F.col("text_norm"),
+        tokenize(F.col("text_norm")).alias("tokens"),
+        row_hash(F.col("text_norm")).alias("row_hash"),
+    )
+    return text_norm, record
 
 
 def normalize_pages(web_pages: DataFrame, use_html: bool = True) -> DataFrame:
@@ -29,30 +56,10 @@ def normalize_pages(web_pages: DataFrame, use_html: bool = True) -> DataFrame:
     bytes through the frozen extractor (the ``text`` input column is treated
     as untrusted); otherwise ``text`` is taken as-is (testdata tables have
     no html payload).
+
+    Two projections: ``text_norm`` first, so the tokenizer and the row hash
+    read it instead of re-deriving it.
     """
-    df = web_pages
-    if use_html and "html" in df.columns:
-        df = df.withColumn("extracted_text", html_to_text_udf(F.col("html")))
-    else:
-        df = df.withColumn("extracted_text", F.coalesce(F.col("text"), F.lit("")))
-
-    # F2 law on page text: lower + whitespace collapse + trim
-    text_norm = F.trim(
-        F.regexp_replace(F.lower(F.col("extracted_text")), r"\s+", " ")
-    )
-
-    out = (
-        df.withColumn("text_norm", text_norm)
-        .withColumn("row_hash", row_hash(F.col("text_norm")))
-        .withColumn("tokens", tokenize(F.col("text_norm")))
-        .withColumn(
-            "host", F.parse_url(F.col("url"), F.lit("HOST"))
-        )
-    )
-    keep = ["url", "host", "text_norm", "tokens", "row_hash"]
-    # embedding rides through so the scoring stage can compute the
-    # emb_cosine pair feature (r6, north_star parity)
-    for c in ("warc_ts", "lang", "entity_id", "embedding"):
-        if c in out.columns:
-            keep.append(c)
-    return out.select(*keep)
+    text_norm, record = _record_columns(use_html and "html" in web_pages.columns)
+    carried = [c for c in _CARRIED if c in web_pages.columns]
+    return web_pages.select("url", text_norm, *carried).select(*record, *carried)

@@ -16,7 +16,9 @@ Jaro-Winkler UDF of ``functions.similarity`` is not a scoring feature).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
@@ -99,101 +101,98 @@ def embedding_cosine(a, b):
     ).otherwise(F.lit(0.0))
 
 
-def attach_pair_features(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
-    """pairs(url_a, url_b) x sigs -> feature columns per pair.
+# the per-side projection of the signature table: (column, pair-side prefix)
+_SIDE_COLUMNS = (
+    ("url", "url"),
+    ("mention_norm", "mention"),
+    ("sig_tokens", "sig_tokens"),
+    ("tokens", "tokens"),
+    ("row_hash", "row_hash"),
+)
 
-    Join strategy: left to AQE -- it converts to broadcast-hash at runtime
-    when the signature side's actual size is under the threshold, and
-    splits skewed partitions otherwise (both enabled in the session
-    defaults). No broadcast is forced: the driver-side broadcast build is
-    single-threaded, so forcing it hurts scaling when the join would have
-    been fine.
-    """
-    has_emb = "embedding" in sigs.columns
-    proj_cols = ["url", "mention_norm", "sig_tokens", "tokens", "row_hash"]
-    if has_emb:
-        proj_cols.append("embedding")
-    side = sigs.select(*proj_cols)
-    a = side.select(
-        F.col("url").alias("url_a"),
-        F.col("mention_norm").alias("mention_a"),
-        F.col("sig_tokens").alias("sig_tokens_a"),
-        F.col("tokens").alias("tokens_a"),
-        F.col("row_hash").alias("row_hash_a"),
-        *([F.col("embedding").alias("emb_a")] if has_emb else []),
-    )
-    b = side.select(
-        F.col("url").alias("url_b"),
-        F.col("mention_norm").alias("mention_b"),
-        F.col("sig_tokens").alias("sig_tokens_b"),
-        F.col("tokens").alias("tokens_b"),
-        F.col("row_hash").alias("row_hash_b"),
-        *([F.col("embedding").alias("emb_b")] if has_emb else []),
-    )
-    df = pairs.join(a, "url_a", "inner").join(b, "url_b", "inner")
-    df = (
-        df.withColumn(
-            "ed_score", levenshtein_similarity(F.col("mention_a"), F.col("mention_b"))
+
+def _logistic_params(has_emb: bool) -> tuple[tuple[tuple[str, float], ...], float]:
+    """(weights as ordered (feature, weight) pairs, bias) of the logistic
+    scorer: the trained weights JSON, read on every call so a refit takes
+    effect at once, else the literal defaults."""
+    trained = load_trained_weights("emb" if has_emb else "base")
+    if trained is None:
+        trained = (
+            ({**DEFAULT_WEIGHTS, EMB_FEATURE: 4.0}, DEFAULT_BIAS - 2.0)
+            if has_emb
+            else (DEFAULT_WEIGHTS, DEFAULT_BIAS)
         )
-        .withColumn(
-            "jaccard_score",
-            # sig_tokens come from collect_set: distinct -> set_jaccard law
-            set_jaccard(F.col("sig_tokens_a"), F.col("sig_tokens_b")),
-        )
-        .withColumn(
-            "jaccardNgram_score",
-            ngram_jaccard(F.col("mention_a"), F.col("mention_b")),
-        )
+    weights, bias = trained
+    return tuple((c, float(w)) for c, w in weights.items()), float(bias)
+
+
+@functools.cache
+def _side_columns(side: str, has_emb: bool) -> tuple[Column, ...]:
+    """The signature columns one side of a pair joins on, renamed with the
+    side suffix (``a`` or ``b``), built once per process."""
+    cols = _SIDE_COLUMNS + ((("embedding", "emb"),) if has_emb else ())
+    return tuple(F.col(c).alias(f"{prefix}_{side}") for c, prefix in cols)
+
+
+@functools.cache
+def _feature_columns(has_emb: bool) -> tuple[Column, ...]:
+    """The pair feature columns over the joined pair table, built once per
+    process."""
+    features = (
+        levenshtein_similarity(F.col("mention_a"), F.col("mention_b")).alias("ed_score"),
+        # sig_tokens come from collect_set: distinct -> set_jaccard law
+        set_jaccard(F.col("sig_tokens_a"), F.col("sig_tokens_b")).alias("jaccard_score"),
+        ngram_jaccard(F.col("mention_a"), F.col("mention_b")).alias("jaccardNgram_score"),
         # 'desc' slot: full-token-set overlap = context similarity, the
         # in-engine analog of the BoW feature (X2, processors.py:285-292)
-        .withColumn("desc", set_jaccard(F.col("tokens_a"), F.col("tokens_b")))
-        .withColumn(
-            "me_score", monge_elkan_lev(F.col("sig_tokens_a"), F.col("sig_tokens_b"))
-        )
+        set_jaccard(F.col("tokens_a"), F.col("tokens_b")).alias("desc"),
+        monge_elkan_lev(F.col("sig_tokens_a"), F.col("sig_tokens_b")).alias("me_score"),
     )
     if has_emb:
-        df = df.withColumn(
-            EMB_FEATURE, embedding_cosine(F.col("emb_a"), F.col("emb_b"))
-        )
-    return df
+        features += (embedding_cosine(F.col("emb_a"), F.col("emb_b")).alias(EMB_FEATURE),)
+    return features
 
 
-def heuristic_score(df: DataFrame, features=PAIR_FEATURES) -> DataFrame:
-    """W1 law: arithmetic mean of the feature columns (0.0 if none)."""
-    expr = sum((F.col(c) for c in features), F.lit(0.0)) / float(len(features))
-    return df.withColumn("score", F.coalesce(expr, F.lit(0.0)))
-
-
-def logistic_score(
-    df: DataFrame,
-    weights: dict | None = None,
-    bias: float | None = None,
-    out: str = "match_prob",
-) -> DataFrame:
-    """M1 replacement: sigmoid(w . f + b) as one native expression.
-
-    ``weights`` is tiny and lives in the plan as literals -- the moral
-    equivalent of a broadcast variable, with zero pickling per task.
-    Resolution order: explicit args > trained weights JSON > defaults.
-    """
-    if weights is None:
-        trained = load_trained_weights()
-        if trained is not None:
-            t_w, t_b = trained
-            weights = t_w
-            bias = t_b if bias is None else bias
-        else:
-            weights = DEFAULT_WEIGHTS
-    bias = DEFAULT_BIAS if bias is None else bias
+@functools.cache
+def _score_columns(
+    has_emb: bool,
+    weights: tuple[tuple[str, float], ...],
+    bias: float,
+    threshold: float,
+) -> tuple[Column, ...]:
+    """The scored-pair columns over the feature table, built once per
+    process: the W1 heuristic (arithmetic mean of the features, 0.0 if
+    none), the M1 replacement sigmoid(w . f + b) with the weights as plan
+    literals (the moral equivalent of a broadcast variable, with zero
+    pickling per task), and the edge flag."""
+    features = PAIR_FEATURES + ((EMB_FEATURE,) if has_emb else ())
+    mean = sum((F.col(c) for c in features), F.lit(0.0)) / float(len(features))
+    heuristic = F.coalesce(mean, F.lit(0.0))
     z = sum(
-        (F.coalesce(F.col(c), F.lit(0.0)) * float(w) for c, w in weights.items()),
-        F.lit(float(bias)),
+        (F.coalesce(F.col(c), F.lit(0.0)) * w for c, w in weights),
+        F.lit(bias),
     )
-    return df.withColumn(out, F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
+    exact = F.col("row_hash_a") == F.col("row_hash_b")
+    return (
+        F.col("url_a"),
+        F.col("url_b"),
+        *[F.col(c) for c in features],
+        heuristic.alias("score"),
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("match_prob"),
+        ((heuristic >= threshold) | exact).alias("is_edge"),
+    )
 
 
 def score(pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Full stage 3: features + W1 heuristic + logistic prob + edge flag.
+
+    pairs(url_a, url_b) joins the signature table once per side. Join
+    strategy: left to AQE -- it converts to broadcast-hash at runtime when
+    the signature side's actual size is under the threshold, and splits
+    skewed partitions otherwise (both enabled in the session defaults). No
+    broadcast is forced: the driver-side broadcast build is
+    single-threaded, so forcing it hurts scaling when the join would have
+    been fine.
 
     Exact duplicates (equal F3 row hashes) are certain matches regardless
     of the similarity score -- empty mention signatures would otherwise
@@ -205,31 +204,24 @@ def score(pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     weights (logistic_weights_emb.json) with a literal fallback weight.
     Output schema gains the emb_cosine column only when the input has
     embeddings, so embedding-less corpora are byte-identical to r5.
+    Logistic resolution order: trained weights JSON > defaults.
 
     ``pairs`` goes through the :func:`~blocking.spread` width guard first:
     a deduplicated pair table is small in bytes, so AQE coalesces its
     shuffle to one partition, and the per-pair feature projection would
     then run as a single task.
+
+    Two projections over the join: the features, then the scored columns
+    that read them, so no feature expression is evaluated twice.
     """
-    df = attach_pair_features(spread(pairs, downstream_heavy=True), sigs)
-    has_emb = EMB_FEATURE in df.columns
-    features = PAIR_FEATURES + ((EMB_FEATURE,) if has_emb else ())
-    df = heuristic_score(df, features=features)
-    if has_emb:
-        trained = load_trained_weights("emb")
-        if trained is not None:
-            weights, bias = trained
-        else:
-            weights, bias = {**DEFAULT_WEIGHTS, EMB_FEATURE: 4.0}, DEFAULT_BIAS - 2.0
-        df = logistic_score(df, weights=weights, bias=bias)
-    else:
-        df = logistic_score(df)
-    exact = F.col("row_hash_a") == F.col("row_hash_b")
-    return df.select(
-        "url_a",
-        "url_b",
-        *features,
-        "score",
-        "match_prob",
-        ((F.col("score") >= cfg.score_threshold) | exact).alias("is_edge"),
+    has_emb = "embedding" in sigs.columns
+    weights, bias = _logistic_params(has_emb)
+    features = _feature_columns(has_emb)
+    df = (
+        spread(pairs, downstream_heavy=True)
+        .join(sigs.select(*_side_columns("a", has_emb)), "url_a", "inner")
+        .join(sigs.select(*_side_columns("b", has_emb)), "url_b", "inner")
+    )
+    return df.select("url_a", "url_b", "row_hash_a", "row_hash_b", *features).select(
+        *_score_columns(has_emb, weights, bias, float(cfg.score_threshold))
     )

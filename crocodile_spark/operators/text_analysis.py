@@ -7,8 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from crocodile_spark import ENGLISH_STOPWORDS
-from crocodile_spark.functions.normalize import char_ngrams, tokenize
+from crocodile_spark.functions.normalize import char_ngrams, stopword_array, tokenize
 
 # Tiny frozen per-language marker profiles (function words). An n-gram
 # heuristic, not a model -- deterministic and dependency-free. Markers
@@ -179,10 +178,9 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.filter(F.split(t, r"\s+"), lambda x: F.length(x) > 0)
     ).cast("double")
     all_toks = tokenize(t, remove_stopwords=False)
-    stop = F.array(*[F.lit(s) for s in sorted(ENGLISH_STOPWORDS)])
     stop_ratio = F.when(
         F.size(all_toks) > 0,
-        F.size(F.array_intersect(all_toks, stop)) / F.size(all_toks),
+        F.size(F.array_intersect(all_toks, stopword_array())) / F.size(all_toks),
     ).otherwise(F.lit(0.0))
     alpha_ratio = F.when(n > 0, alpha / n).otherwise(F.lit(0.0))
     mean_tok_len = F.when(ws_toks > 0, alpha / ws_toks).otherwise(F.lit(0.0))

@@ -16,9 +16,15 @@ rewritten ``--py-files`` zip still re-imports.
 
 The engine runs as many small Catalyst plans (the pipeline stages, dedup,
 ANN, Lakehouse and incremental operators), so at benchmark sizes their
-cost is orchestration, and Janino compiling generated classes is a large
-share of it. Spark caches the compiled classes by source text, but the
-cache (``spark.sql.codegen.cache.maxEntries``) defaults to 100 entries,
+cost is orchestration. Part of it is on the Python side: every Column
+node is one py4j round trip, so the normalize, blocking and scoring
+stages build their stage-invariant expressions once per process
+(``functools.cache`` builders keyed on the config values they read) and
+only compose DataFrames per call. Rebuilding them on every call cost
+about 2,500 round trips per warm ``er_batch`` iteration; composing the
+cached ones costs about 350. Janino compiling generated classes is
+another large share. Spark caches the compiled classes by source text,
+but the cache (``spark.sql.codegen.cache.maxEntries``) defaults to 100 entries,
 while one session of a benchmark workload generates 117-280 distinct
 classes: each class was evicted before its next use, and every
 steady-state iteration recompiled 53-159 of them. With

@@ -99,16 +99,27 @@ def test_dictionary_encoded_cc_matches_string_cc(spark):
 # in Spark's binary order and in Python's str order.
 _ID_CHARS = ["a", "b", "Z", "0", "\x00", "\xe9", "\u4e2d", "\uffff", "\U0001f600"]
 _STR_IDS = st.text(alphabet=st.sampled_from(_ID_CHARS), max_size=3)
-_LONG_IDS = st.one_of(st.integers(-5, 5), st.integers(-(2**63), 2**63 - 1))
+_INT_IDS = {
+    bits: st.one_of(
+        st.integers(-5, 5), st.integers(-(2 ** (bits - 1)), 2 ** (bits - 1) - 1)
+    )
+    for bits in (16, 32, 64)
+}
+_IDS = {
+    "string": _STR_IDS,
+    "smallint": _INT_IDS[16],
+    "int": _INT_IDS[32],
+    "bigint": _INT_IDS[64],
+}
+# a path whose ids descend along it: the minimum sits at the far end, so
+# min-label propagation needs the most rounds to carry it across
+_DESCENDING_PATH = [(i, i - 1) for i in range(64, 0, -1)]
 
 
 @st.composite
 def _graph(draw):
-    kind = draw(st.sampled_from(["string", "bigint"]))
-    pool = draw(
-        st.lists(_STR_IDS if kind == "string" else _LONG_IDS, min_size=1,
-                 max_size=8, unique=True)
-    )
+    kind = draw(st.sampled_from(sorted(_IDS)))
+    pool = draw(st.lists(_IDS[kind], min_size=1, max_size=8, unique=True))
     node = st.sampled_from(pool)
     # a small pool makes duplicate, reversed and self-loop edges common
     return kind, draw(st.lists(st.tuples(node, node), max_size=20))
@@ -122,14 +133,40 @@ def _graph(draw):
 @example(("bigint", [(3, 3)]))
 @example(("string", [("\uffff", "\U0001f600"), ("\U0001f600", "\uffff"),
                      ("\U0001f600", "\uffff"), ("b", "b")]))
+@example(("smallint", _DESCENDING_PATH))
+@example(("string", [(f"n{u:03d}", f"n{v:03d}") for u, v in _DESCENDING_PATH]))
 def test_driver_cc_equals_star_loop(spark, case):
-    """The driver union-find path equals the distributed star loop on
-    every small graph: string ids (non-ASCII included, so Python's str order
-    must equal Spark's binary order), long ids, duplicate and reversed
-    edges, self-loops and the empty edge set."""
+    """The driver path equals the distributed star loop on every small
+    graph: string ids (non-ASCII included, so Arrow's string order must
+    equal Spark's binary order), smallint, int and bigint ids, duplicate and
+    reversed edges, self-loops, the empty edge set and a long path with
+    descending ids."""
     kind, edges = case
     df = spark.createDataFrame(edges, f"u {kind}, v {kind}")
     driver = connected_components(df)
     star = _cc_star(df, max_iterations=20)
     assert driver.schema == star.schema
     assert sorted(map(tuple, driver.collect())) == sorted(map(tuple, star.collect()))
+
+
+def test_driver_cutoff_boundary_takes_both_plans(spark, monkeypatch):
+    """A canonical edge set of exactly ``CC_DRIVER_MAX_EDGES`` edges is
+    resolved on the driver, one more than the cutoff runs the star loop,
+    and both give the same assignments."""
+    from crocodile_spark.operators import clustering
+
+    edges = [(f"u{i % 30:02d}", f"u{(i * 7 + 3) % 30:02d}") for i in range(60)]
+    df = spark.createDataFrame(edges + [(v, u) for u, v in edges], "u string, v string")
+    n_canon = len({(max(u, v), min(u, v)) for u, v in edges if u != v})
+    ran = []
+    for name in ("_cc_driver", "_cc_star"):
+        real = getattr(clustering, name)
+        monkeypatch.setattr(
+            clustering, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
+        )
+    got = {}
+    for cutoff in (n_canon, n_canon - 1):
+        monkeypatch.setattr(clustering, "CC_DRIVER_MAX_EDGES", cutoff)
+        got[cutoff] = sorted(map(tuple, connected_components(df).collect()))
+    assert ran == ["_cc_driver", "_cc_star"]
+    assert got[n_canon] == got[n_canon - 1] and len(got[n_canon]) == 30
