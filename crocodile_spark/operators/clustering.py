@@ -39,7 +39,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -177,7 +177,7 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
     )
 
 
-def _cc_driver(tbl: pa.Table, spark) -> DataFrame:
+def _cc_driver(tbl: pa.Table, spark: SparkSession) -> DataFrame:
     """Driver CC over a collected canonical edge set: -> (node, cluster_id)
     with the input's node type, cluster_id = min member.
 
