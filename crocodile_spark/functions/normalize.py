@@ -49,15 +49,21 @@ def normalize_mention(col: Column | str) -> Column:
     return F.lower(F.regexp_replace(stripped, "_", " "))
 
 
-def context_text(cols: Iterable[Column | str]) -> Column:
+def context_text(cols: Iterable[Column | str] | Column) -> Column:
     """F2: cell values sorted by string value, space-joined, lowered,
-    whitespace-collapsed, trimmed."""
-    arr = F.array(
-        *[
-            F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit(""))
-            for c in cols
-        ]
-    )
+    whitespace-collapsed, trimmed.
+
+    ``cols`` is a list of columns (a NULL value counts as the empty
+    string) or one ``array<string>`` column of the values."""
+    if isinstance(cols, Column):
+        arr = cols
+    else:
+        arr = F.array(
+            *[
+                F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit(""))
+                for c in cols
+            ]
+        )
     joined = F.concat_ws(" ", F.array_sort(arr))
     return F.trim(F.regexp_replace(F.lower(joined), r"\s+", " "))
 

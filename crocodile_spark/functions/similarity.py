@@ -153,30 +153,27 @@ def monge_elkan_lev(a: Column | str, b: Column | str) -> Column:
     codegen-friendly.
 
     r8: the |A| x |B| similarity matrix is built ONCE and both directions
-    read it -- lev_sim is exactly symmetric (levenshtein and greatest of
-    lengths both are), so one_way(b, a)'s inner maxima are the COLUMN
-    maxima of the same matrix. The previous form evaluated every
-    levenshtein twice (once per direction); values are bit-identical
+    read it -- :func:`levenshtein_similarity` is exactly symmetric
+    (levenshtein and greatest of lengths both are), so one_way(b, a)'s
+    inner maxima are the COLUMN maxima of the same matrix. The previous
+    form evaluated every levenshtein twice (once per direction); values
+    are bit-identical
     (same element order in both direction sums: row maxes summed in a's
     order, column maxes in b's order, exactly as before).
     """
     a, b = _col(a), _col(b)
-
-    def lev_sim(x: Column, y: Column) -> Column:
-        mx = F.greatest(F.length(x), F.length(y)).cast("double")
-        return F.when(
-            mx > 0, 1.0 - F.levenshtein(x, y).cast("double") / mx
-        ).otherwise(F.lit(1.0))
-
-    # M[i][j] = lev_sim(a[i], b[j]), evaluated once per pair
-    m = F.transform(a, lambda s: F.transform(b, lambda d: lev_sim(s, d)))
+    # M[i][j] = levenshtein_similarity(a[i], b[j]), evaluated once per pair
+    m = F.transform(
+        a, lambda s: F.transform(b, lambda d: levenshtein_similarity(s, d))
+    )
     # direction a->b: mean over rows of the row max
     ab = (
         F.aggregate(m, F.lit(0.0), lambda acc, row: acc + F.array_max(row))
         / F.size(a)
     )
     # direction b->a: mean over columns of the column max (elementwise
-    # running max across rows; lev_sim >= 0 so the zero init is neutral)
+    # running max across rows; similarities are >= 0 so the zero init is
+    # neutral)
     colmax = F.aggregate(
         m,
         F.transform(b, lambda _: F.lit(0.0)),

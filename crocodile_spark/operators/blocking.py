@@ -18,6 +18,13 @@ the signature table, so all key families come from one projection and one
 explode over it -- the cap count and both sides of the pair self-join read
 the same cheap projection instead of re-shingling.
 
+The LSH bucket law lives here once and is shared with the near-dup and
+ANN layer (operators.dedup, operators.similarity_search): the MinHash band
+builder (:func:`minhash_band_keys`, with the md5 ``portable`` arm the
+DuckDB oracles reproduce) and the key-cap law (:func:`cap_keys`; the
+dedup/ANN families reach it through :func:`capped_buckets`, which holds
+their one eager ``localCheckpoint`` of the (id, key) rows).
+
 Exact duplicates (F3 row hash law, crocodile/processors.py:112) are not a
 key family: hash groups emit linear min-url star edges (exact_dup_pairs),
 immune to block caps and quadratic blowup.
@@ -214,45 +221,120 @@ def _signature_columns(
 
 
 def minhash_bands(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(url, mh_bands): the MinHash LSH band keys ``mh<b>:<hash(band)>``
-    over the char-``shingle_size``-grams of ``text_norm``, one array per
-    record. Records with no shingle get no row.
+    """(url, mh_bands): the record's MinHash LSH band keys over the
+    char-``shingle_size``-grams of ``text_norm`` (:func:`minhash_band_keys`
+    with the pipeline's MinHash fields). Records with no shingle get no
+    row."""
+    k, bsz, n = cfg.minhash_num_hashes, cfg.minhash_band_size, cfg.shingle_size
+    return minhash_band_keys(records, "url", "text_norm", k, bsz, n)
 
-    Explode -> aggregate: shingles are exploded once and each of the k
-    hash slots is a plain ``min`` aggregate (map-side partial aggregation
-    applies), so the plan carries k tiny expressions instead of k inlined
-    copies of the shingle generator. The per-row form
+
+def portable_hash64(col, seed: int):
+    """Portable 60-bit hash, identical in Spark and DuckDB:
+
+      Spark : conv(substr(md5('<seed>:' || x), 1, 15), 16, 10)::long
+      DuckDB: CAST(('0x' || substr(md5('<seed>:' || x), 1, 15)) AS BIGINT)
+
+    Non-negative (< 2^60), so shift/mask/bit ops are sign-safe. The
+    xxhash64 fast path stays the production default; this exists so the
+    driver's DuckDB oracle can verify the ACTUAL minhash/simhash pairs
+    instead of a rows-only count.
+    """
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
+    ).cast("long")
+
+
+def minhash_affine_constants(num_hashes: int, seed: int = 1234) -> list[tuple[int, int]]:
+    """Seeded odd (A_i, B_i) < 2^29 pairs for the portable minhash family
+    h_i = hi*A_i + lo*B_i; shared with the DuckDB oracle generator."""
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(1, 1 << 29) | 1, rng.randrange(1, 1 << 29) | 1)
+        for _ in range(num_hashes)
+    ]
+
+
+def minhash_band_keys(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    band_size: int,
+    shingle_size: int,
+    portable: bool = False,
+) -> DataFrame:
+    """(id_col, mh_bands): the MinHash LSH band law of ER blocking and
+    near-dup dedup. ``mh_bands`` holds one key ``mh<b>:<hash(band)>`` per
+    band of ``band_size`` of the ``num_hashes`` slots, each slot the
+    ``min`` hash over the char-``shingle_size``-grams of ``text_col``.
+    Rows whose text has no shingle (NULL, empty, shorter than a shingle)
+    get no row.
+
+    Explode -> aggregate: shingles are exploded once and each hash slot is
+    a plain ``min`` aggregate (map-side partial aggregation applies), so
+    the plan carries k tiny expressions instead of k inlined copies of the
+    shingle generator. The per-row form
     ``array_min(transform(shingles, xxhash64))`` is an interpreted
     higher-order function and was 2.8-4.9x slower on ~480-char texts
     (BENCH.md, "One-pass blocking keys").
+
+    ``portable=True`` switches the slot and band hashes to the md5 law of
+    :func:`portable_hash64`, so a DuckDB oracle reproduces the buckets
+    bit-for-bit: one md5 base per shingle, then k affine derivations
+    ``hi*A_i + lo*B_i`` over its 30-bit halves (< 2^60, no overflow under
+    ANSI). The halves are projected as columns before the aggregation: as
+    inline expressions inside the k ``min`` aggregates each slot re-derived
+    the md5 base (no cross-aggregate subexpression elimination; measured
+    3.3 s -> 1.3 s for the signature aggregation at sf0.1).
     """
-    shingles, mins, bands = _minhash_columns(
-        cfg.minhash_num_hashes, cfg.minhash_band_size, cfg.shingle_size
+    shingles, halves, mins, bands = _minhash_columns(
+        text_col, num_hashes, band_size, shingle_size, portable
     )
-    sig = records.select("url", shingles).groupBy("url").agg(*mins)
-    return sig.select("url", bands)
+    sh = df.select(id_col, shingles).select(id_col, *halves)
+    return sh.groupBy(id_col).agg(*mins).select(id_col, bands)
 
 
 @functools.cache
 def _minhash_columns(
-    k: int, bsz: int, shingle_size: int
-) -> tuple[Column, tuple[Column, ...], Column]:
-    """(shingle explode, the k ``min`` hash slots, the band-key array) of
-    :func:`minhash_bands`, built once per process."""
-    shingles = F.explode(char_ngrams(F.col("text_norm"), shingle_size)).alias("sh")
-    mins = tuple(F.min(F.xxhash64("sh", F.lit(i))).alias(f"mh{i}") for i in range(k))
+    text_col: str, k: int, bsz: int, shingle_size: int, portable: bool
+) -> tuple[Column, tuple[Column, ...], tuple[Column, ...], Column]:
+    """(shingle explode, the projection the k slots read, the k ``min``
+    hash slots, the band-key array) of :func:`minhash_band_keys`, built
+    once per process."""
+    shingles = F.explode(char_ngrams(F.col(text_col), shingle_size)).alias("sh")
+    if portable:
+        base = portable_hash64(F.col("sh"), 0)
+        halves = (
+            F.shiftright(base, 30).alias("_hi"),
+            base.bitwiseAND(F.lit((1 << 30) - 1)).alias("_lo"),
+        )
+        hashes = [
+            F.col("_hi") * a + F.col("_lo") * b
+            for a, b in minhash_affine_constants(k)
+        ]
+    else:
+        halves = (F.col("sh"),)
+        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(k)]
+    mins = tuple(F.min(h).alias(f"mh{i}") for i, h in enumerate(hashes))
+
+    def band_hash(c: Column) -> Column:
+        return F.substring(F.md5(c), 1, 16) if portable else F.xxhash64(c).cast("string")
+
     bands = [
         F.concat(
             F.lit(f"mh{b}:"),
-            F.xxhash64(
+            band_hash(
                 F.concat_ws(
                     "_", *[F.col(f"mh{b * bsz + j}").cast("string") for j in range(bsz)]
                 )
-            ).cast("string"),
+            ),
         )
         for b in range(k // bsz)
     ]
-    return shingles, mins, F.array(*bands).alias("mh_bands")
+    return shingles, halves, mins, F.array(*bands).alias("mh_bands")
 
 
 @functools.cache
@@ -302,11 +384,32 @@ def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return _explode_keys(sigs, "tok", "host", "mh")
 
 
-def cap_blocks(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Drop keys whose member count exceeds the block cap."""
-    sizes = key_count(keys, "key")
-    ok = sizes.where(F.col("count") <= cfg.max_block_size).select("key")
+def cap_keys(keys: DataFrame, max_size: int) -> DataFrame:
+    """The key-cap law of every bucket family (ER blocking keys, near-dup
+    and ANN buckets): drop every ``key`` that has more than ``max_size``
+    rows in ``keys``. An oversized key is dropped whole: it marks
+    non-discriminative content, and its pair volume would be quadratic."""
+    ok = key_count(keys, "key").where(F.col("count") <= max_size).select("key")
     return keys.join(ok, "key", "inner")
+
+
+def cap_blocks(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Drop blocking keys whose member count exceeds ``max_block_size``."""
+    return cap_keys(keys, cfg.max_block_size)
+
+
+def capped_buckets(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
+    """The dedup/ANN bucket step: :func:`cap_keys` over (id..., key) rows,
+    materialized first with the layer's one eager ``localCheckpoint``.
+
+    The rows feed three consumers (the key count and both sides of the
+    bucket join), and Spark re-derives a DataFrame lineage per consumer:
+    unmaterialized, the whole signature pipeline (shingle + hash, the
+    SimHash fold, the hyperplane kernel) would run ~3x (measured 23 s ->
+    5.3 s for MinHash at sf0.1). Bucket rows are a few short keys per
+    document, so materializing them is the standard LSH shape at any
+    scale; ``localCheckpoint`` is executor-local and not kill-resumable."""
+    return cap_keys(buckets.localCheckpoint(eager=True), max_bucket_size)
 
 
 def generate_pairs(
@@ -357,12 +460,6 @@ def pairs_from_signatures(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     capped = cap_blocks(keys, cfg)
     pairs = generate_pairs(capped, cfg, distinct=False)
     return pairs.union(exact_dup_pairs(sigs)).dropDuplicates(["url_a", "url_b"])
-
-
-def block(records: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """Full stage 2: returns (signatures, candidate_pairs)."""
-    sigs = mention_signatures(records, cfg)
-    return sigs, pairs_from_signatures(sigs, cfg)
 
 
 # logical-plan node names that imply the frame's width already comes from a

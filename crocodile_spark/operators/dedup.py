@@ -16,9 +16,14 @@ Five families, all returning DataFrames (ids/pairs/cluster assignments):
 
 Scale posture: every family is explode -> aggregate/join on a bounded key
 (block caps where a key can be hot); no driver-side loops. Hashing and set
-algebra are native expressions. The three LSH families share one
-capped-bucket law (:func:`_capped_bucket_pairs`), and each materializes
-its signature rows once with an eager ``localCheckpoint``.
+algebra are native expressions. The LSH bucket law lives in
+``operators.blocking`` and is shared with ER blocking and ``lsh_topk``:
+MinHash bands come from ``minhash_band_keys`` (the ER band builder, with
+its md5 ``portable`` arm), and each LSH family passes only its (id, key)
+bucket projection to ``capped_buckets``, which materializes the rows with
+the layer's one eager ``localCheckpoint`` and drops keys above the cap.
+``minhash_affine_constants`` and ``portable_hash64`` are re-exported here
+for the DuckDB oracle generator.
 
 Two families' plans hold Arrow pandas UDFs: ``simhash`` /
 ``simhash_pairs`` fold the per-document bit counts in one integer-exact
@@ -39,10 +44,15 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams, tokenize
 from crocodile_spark.functions.similarity import set_jaccard
-from crocodile_spark.operators.blocking import key_count, spread as _spread
+from crocodile_spark.operators.blocking import (  # noqa: F401  (re-exported laws)
+    capped_buckets,
+    minhash_affine_constants,
+    minhash_band_keys,
+    portable_hash64,
+    spread as _spread,
+)
 
 
 def exact_duplicates(
@@ -62,92 +72,25 @@ def exact_duplicates(
     )
 
 
-def portable_hash64(col, seed: int):
-    """Portable 60-bit hash, identical in Spark and DuckDB:
-
-      Spark : conv(substr(md5('<seed>:' || x), 1, 15), 16, 10)::long
-      DuckDB: CAST(('0x' || substr(md5('<seed>:' || x), 1, 15)) AS BIGINT)
-
-    Non-negative (< 2^60), so shift/mask/bit ops are sign-safe. The
-    xxhash64 fast path stays the production default; this exists so the
-    driver's DuckDB oracle can verify the ACTUAL minhash/simhash pairs
-    instead of a rows-only count.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def minhash_affine_constants(num_hashes: int, seed: int = 1234) -> list[tuple[int, int]]:
-    """Seeded odd (A_i, B_i) < 2^29 pairs for the portable minhash family
-    h_i = hi*A_i + lo*B_i; shared with the DuckDB oracle generator."""
-    import random
-
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, 1 << 29) | 1, rng.randrange(1, 1 << 29) | 1)
-        for _ in range(num_hashes)
-    ]
-
-
 def _capped_bucket_pairs(
     buckets: DataFrame, max_bucket_size: int, payload: str | None = None
 ) -> DataFrame:
-    """The capped-bucket law of the LSH families: distinct (id_a, id_b)
-    pairs, ``id_a < id_b``, of ids sharing a ``bucket`` that has at most
-    ``max_bucket_size`` (id, bucket) rows. Larger buckets are dropped
-    whole (degenerate content; the pair volume stays bounded). A
-    ``payload`` column of ``buckets`` rides along as ``<payload>_a`` /
-    ``<payload>_b``."""
-    ok = key_count(buckets, "bucket").where(F.col("count") <= max_bucket_size)
-    capped = buckets.join(ok.select("bucket"), "bucket", "inner")
+    """The in-bucket pair join of the LSH families: distinct (id_a, id_b)
+    pairs, ``id_a < id_b``, of ids sharing a ``key`` of the
+    :func:`~crocodile_spark.operators.blocking.capped_buckets` rows of
+    ``buckets``. A ``payload`` column of ``buckets`` rides along as
+    ``<payload>_a`` / ``<payload>_b``."""
+    capped = capped_buckets(buckets, max_bucket_size)
     cols = ["id", *([payload] if payload else [])]
     a, b = (
-        capped.select("bucket", *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        capped.select("key", *[F.col(c).alias(f"{c}_{s}") for c in cols])
         for s in "ab"
     )
     return (
-        a.join(b, "bucket")
+        a.join(b, "key")
         .where(F.col("id_a") < F.col("id_b"))
-        .drop("bucket")
+        .drop("key")
         .distinct()
-    )
-
-
-def minhash_signature_agg(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_size: int = 3,
-    portable: bool = False,
-) -> DataFrame:
-    """(id, mh0..mhk-1) via explode->aggregate (the codegen-safe form)."""
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(char_ngrams(F.lower(F.col(text_col)), shingle_size)).alias("sh"),
-    )
-    if portable:
-        # ONE md5 per shingle, then k affine derivations (hi*A_i + lo*B_i
-        # over the 30-bit halves, < 2^60 so no overflow under ANSI) --
-        # k md5 calls per shingle would dominate the whole query.
-        # r8: hi/lo are materialized as COLUMNS in a projection before the
-        # aggregation -- as inline expressions inside the k min() aggregates
-        # each slot re-derived the md5+conv base (no cross-aggregate
-        # subexpression elimination: 2k md5 evaluations per shingle,
-        # measured 3.3 s -> 1.3 s for the signature aggregation at sf0.1).
-        base = portable_hash64(F.col("sh"), 0)
-        sh = sh.select(
-            "id",
-            F.shiftright(base, 30).alias("_hi"),
-            base.bitwiseAND(F.lit((1 << 30) - 1)).alias("_lo"),
-        )
-        ab = minhash_affine_constants(num_hashes)
-        hashes = [F.col("_hi") * a + F.col("_lo") * b for a, b in ab]
-    else:
-        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(num_hashes)]
-    return sh.groupBy("id").agg(
-        *[F.min(h).alias(f"mh{i}") for i, h in enumerate(hashes)]
     )
 
 
@@ -171,14 +114,10 @@ def minhash_lsh_pairs(
     signature and the band hash to the md5-based law so a DuckDB oracle
     can reproduce the pairs bit-for-bit.
 
-    The signature table is materialized with an eager ``localCheckpoint``:
-    it feeds THREE consumers (the bucket-size count and both sides of the
-    in-bucket self-join), and Spark re-derives a DataFrame lineage per
-    consumer -- the whole shingle+hash pipeline would run ~3x (measured
-    23 s -> 5.3 s at sf0.1). Signatures are num_hashes longs per doc
-    (~1-2% of text bytes), so materializing is the standard MinHash shape
-    at any scale (localCheckpoint is executor-local and not
-    kill-resumable).
+    The band keys come from the ER blocking law
+    (:func:`~crocodile_spark.operators.blocking.minhash_band_keys`) over
+    the lowercased text; the (id, key) rows are materialized once by the
+    shared capped-bucket step.
 
     With ``jaccard_threshold`` set, the returned frame is backed by a lazy
     ``localCheckpoint`` of the verified (id_a, id_b, jaccard) rows (the
@@ -187,41 +126,18 @@ def minhash_lsh_pairs(
     stay cached until the frame is garbage-collected, and the first action
     materializes every candidate pair's score before the threshold filter.
     """
-    sig = minhash_signature_agg(
-        df, text_col, id_col, num_hashes, shingle_size, portable=portable
-    ).localCheckpoint(eager=True)
-
-    def band_hash(concat_col):
-        if portable:
-            return F.substring(F.md5(concat_col), 1, 16)
-        return F.xxhash64(concat_col).cast("string")
-
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"b{b}:"),
-                band_hash(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"mh{b * band_size + j}").cast("string")
-                            for j in range(band_size)
-                        ],
-                    )
-                ),
-            )
-            for b in range(num_hashes // band_size)
-        ]
+    text = _spread(df).select(
+        F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("text")
+    )
+    bands = minhash_band_keys(
+        text, "id", "text", num_hashes, band_size, shingle_size, portable
     )
     pairs = _capped_bucket_pairs(
-        sig.select("id", F.explode(bands).alias("bucket")), max_bucket_size
+        bands.select("id", F.explode("mh_bands").alias("key")), max_bucket_size
     )
     if jaccard_threshold is None:
         return pairs
-    grams = _spread(df).select(
-        F.col(id_col).alias("id"),
-        char_ngrams(F.lower(F.col(text_col)), shingle_size).alias("grams"),
-    )
+    grams = text.select("id", char_ngrams(F.col("text"), shingle_size).alias("grams"))
     joined = pairs.join(
         grams.withColumnsRenamed({"id": "id_a", "grams": "ga"}), "id_a"
     ).join(grams.withColumnsRenamed({"id": "id_b", "grams": "gb"}), "id_b")
@@ -364,14 +280,11 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs: 4-segment pigeonhole blocking + exact
     Hamming verification (<= max_hamming, which must be <= 3 for 4
-    segments to guarantee recall). Fingerprints are materialized with an
-    eager ``localCheckpoint`` for the same three-consumer reason as
-    minhash_lsh_pairs; they ride through the bucket join as payload."""
+    segments to guarantee recall). Fingerprints ride through the shared
+    capped-bucket step as payload."""
     bits = 60 if portable else 64
     seg_bits = bits // 4
-    fp = simhash(df, text_col, id_col, bits=bits, portable=portable).localCheckpoint(
-        eager=True
-    )
+    fp = simhash(df, text_col, id_col, bits=bits, portable=portable)
     segs = F.array(
         *[
             F.concat(
@@ -383,7 +296,7 @@ def simhash_pairs(
             for s in range(4)
         ]
     )
-    buckets = fp.select("id", "simhash", F.explode(segs).alias("bucket"))
+    buckets = fp.select("id", "simhash", F.explode(segs).alias("key"))
     return (
         _capped_bucket_pairs(buckets, max_bucket_size, payload="simhash")
         .withColumn(
@@ -466,17 +379,12 @@ def embedding_near_dup_pairs(
             [], "id_a long, id_b long, cosine double"
         )
     buckets = hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)
-    # (id, bucket) feeds the size count + both self-join sides: materialize
-    # so the hyperplane projection (the Arrow UDF) runs once, not 3x
-    b = (
-        _spread(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(buckets(F.col(emb_col))).alias("bucket"),
-        )
-        .localCheckpoint(eager=True)
+    pairs = _capped_bucket_pairs(
+        _spread(df).select(
+            F.col(id_col).alias("id"), F.explode(buckets(F.col(emb_col))).alias("key")
+        ),
+        max_bucket_size,
     )
-    pairs = _capped_bucket_pairs(b, max_bucket_size)
     v = df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
     return (
         pairs.join(v.withColumnsRenamed({"id": "id_a", "v": "va"}), "id_a")

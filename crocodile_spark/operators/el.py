@@ -82,12 +82,7 @@ def extract_cells(input_rows: DataFrame) -> DataFrame:
         F.col("context_cols"),
         lambda i: F.coalesce(F.try_element_at("data", i + 1), F.lit("")),
     )
-    ctx = F.trim(
-        F.regexp_replace(
-            F.lower(F.concat_ws(" ", F.array_sort(ctx_vals))), r"\s+", " "
-        )
-    )
-    rows = input_rows.withColumn("context_text", ctx).withColumn(
+    rows = input_rows.withColumn("context_text", context_text(ctx_vals)).withColumn(
         "row_hash", row_hash(F.col("context_text"))
     )
     cells = rows.select(

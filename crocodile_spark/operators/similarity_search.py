@@ -21,7 +21,9 @@ oracles. A NULL or wrong-width embedding gets no bucket and no cell, so
 it is never a candidate. Hyperplanes and centroids are seeded.
 
 At 100 TB the brute-force path is a deliberate non-starter (quadratic);
-lsh_topk's cost is bounded by bucket sizes, which are capped.
+lsh_topk's cost is bounded by bucket sizes, which are capped by the key-cap
+law that ER blocking and the near-dup families share
+(``blocking.capped_buckets``).
 """
 
 from __future__ import annotations
@@ -259,12 +261,15 @@ def lsh_topk(
     explode on each side (not a per-table union, which would rescan the
     corpus and recount buckets ``num_tables`` times); the bucket join
     carries ids only (see :func:`_exact_topk`). Recall grows with
-    num_tables; cost is Sum(bucket pair volume), capped. Buckets come from
+    num_tables; cost is Sum(bucket pair volume), capped by the shared
+    bucket step (``blocking.capped_buckets``: the corpus-side (id, key)
+    rows are materialized once, keys above ``max_bucket_size`` dropped
+    whole). Buckets come from
     the guarded-matmul Arrow kernel and the re-rank from the fold kernel
     -- bit-identical to the native laws and the DuckDB oracle on every
     valid row.
     """
-    from crocodile_spark.operators.blocking import key_count, spread
+    from crocodile_spark.operators.blocking import capped_buckets, spread
 
     dim = embedding_dim(corpus, emb)
     if dim is None:
@@ -272,19 +277,12 @@ def lsh_topk(
     buckets = hyperplane_table_buckets_udf(dim, num_planes, num_tables, seed)(
         F.col(emb)
     )
-    qb = spread(queries).select(F.col(query_id), F.explode(buckets).alias("bucket"))
-    # (id, bucket) feeds the size count AND the bucket join: materialize so
-    # the corpus-side hyperplane projection runs once, not per consumer
-    cb = (
-        spread(corpus)
-        .select(F.col(corpus_id), F.explode(buckets).alias("bucket"))
-        .localCheckpoint(eager=True)
+    qb = spread(queries).select(F.col(query_id), F.explode(buckets).alias("key"))
+    cb = capped_buckets(
+        spread(corpus).select(F.col(corpus_id), F.explode(buckets).alias("key")),
+        max_bucket_size,
     )
-    ok = key_count(cb, "bucket").where(F.col("count") <= max_bucket_size)
-    cb = cb.join(ok.select("bucket"), "bucket", "inner")
-    return _exact_topk(
-        qb.join(cb, "bucket"), queries, corpus, k, query_id, corpus_id, emb
-    )
+    return _exact_topk(qb.join(cb, "key"), queries, corpus, k, query_id, corpus_id, emb)
 
 
 def seeded_random_centroids(dim: int, n_centroids: int, seed: int):

@@ -1399,7 +1399,8 @@ def q_minhash_lsh_dedup(spark, sf_dir):
 
 def _mh_sig_aggs() -> str:
     """Portable minhash slots: one md5 base per shingle, affine derivations
-    (must mirror operators.dedup.minhash_signature_agg portable path)."""
+    (must mirror the portable arm of operators.blocking.minhash_band_keys;
+    the oracle's own ``b<i>:`` bucket prefix only names its buckets)."""
     from crocodile_spark.operators.dedup import minhash_affine_constants
 
     lo_mask = (1 << 30) - 1

@@ -145,15 +145,10 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     production analog is executor warmup; workers are reused afterwards
     (spark.python.worker.reuse default). Starting the daemon here also
     stamps its zip importers once (``worker_daemon.main``), so no task of
-    a forked worker re-reads an unchanged archive. Guarded by
-    ``spark.croco.prewarmPython`` (default true); failures are benign --
-    the first real UDF job simply pays the fork as before."""
+    a forked worker re-reads an unchanged archive. It runs on every
+    session build; failures are benign -- the first real UDF job simply
+    pays the fork as before."""
     try:
-        if (
-            str(spark.conf.get("spark.croco.prewarmPython", "true")).lower()
-            != "true"
-        ):
-            return
         import pandas as _pd  # noqa: F401  (driver side, already imported)
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

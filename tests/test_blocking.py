@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.operators.blocking import (
-    block,
     cap_blocks,
     generate_pairs,
+    mention_signatures,
     minhash_bands,
+    pairs_from_signatures,
 )
 from crocodile_spark.operators.normalize_stage import normalize_pages
 
@@ -53,7 +54,8 @@ def test_block_stage_recall_on_corpus(spark, corpus_dfs):
     wp, _, gold = corpus_dfs
     cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=True)
-    sigs, pairs = block(records, cfg)
+    sigs = mention_signatures(records, cfg)
+    pairs = pairs_from_signatures(sigs, cfg)
     pos = gold.where(F.col("label") == 1)
     covered = pos.join(pairs, ["url_a", "url_b"], "left_semi").count()
     total = pos.count()
@@ -156,7 +158,8 @@ def test_token_rich_records_keep_recall_under_sig_truncation(spark):
     wp = spark.createDataFrame(rows, ["url", "text"])
     cfg = PipelineConfig(sig_max_tokens=4)
     records = normalize_pages(wp, use_html=False)
-    sigs, pairs = block(records, cfg)
+    sigs = mention_signatures(records, cfg)
+    pairs = pairs_from_signatures(sigs, cfg)
 
     sig_rows = sigs.select("url", "sig_tokens", "block_tokens").collect()
     for r in sig_rows:
@@ -186,7 +189,7 @@ def test_token_rich_records_keep_recall_under_sig_truncation(spark):
     # and the budget really truncates: past block_max_tokens eligible
     # tokens the rarest win
     tight = PipelineConfig(sig_max_tokens=4, block_max_tokens=5)
-    sigs2, _ = block(records, tight)
+    sigs2 = mention_signatures(records, tight)
     for r in sigs2.select("block_tokens").collect():
         assert len(r["block_tokens"]) == 5
 

@@ -47,6 +47,111 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert not any({a, b} == {1, 4} for a, b in pairs)
 
 
+def _reference_minhash_pairs(df, jaccard_threshold, max_bucket_size, portable):
+    """The near-dup MinHash law as dedup spelled it before it shared the
+    ER band builder: its own explode -> ``min`` signature (md5 affine arm
+    when portable), its own ``b<i>:`` band keys and its own bucket cap,
+    then the exact-Jaccard verify."""
+    from crocodile_spark.functions.normalize import char_ngrams
+    from crocodile_spark.functions.similarity import set_jaccard
+    from crocodile_spark.operators.dedup import (
+        minhash_affine_constants,
+        portable_hash64,
+    )
+
+    k, bsz = 16, 4
+    sh = df.select(
+        F.col("doc_id").alias("id"),
+        F.explode(char_ngrams(F.lower(F.col("text")), 3)).alias("sh"),
+    )
+    if portable:
+        base = portable_hash64(F.col("sh"), 0)
+        sh = sh.select(
+            "id",
+            F.shiftright(base, 30).alias("_hi"),
+            base.bitwiseAND(F.lit((1 << 30) - 1)).alias("_lo"),
+        )
+        ab = minhash_affine_constants(k)
+        hashes = [F.col("_hi") * a + F.col("_lo") * b for a, b in ab]
+    else:
+        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(k)]
+    sig = sh.groupBy("id").agg(*[F.min(h).alias(f"mh{i}") for i, h in enumerate(hashes)])
+
+    def band_hash(c):
+        return F.substring(F.md5(c), 1, 16) if portable else F.xxhash64(c).cast("string")
+
+    bands = F.array(
+        *[
+            F.concat(
+                F.lit(f"b{b}:"),
+                band_hash(
+                    F.concat_ws(
+                        "_", *[F.col(f"mh{b * bsz + j}").cast("string") for j in range(bsz)]
+                    )
+                ),
+            )
+            for b in range(k // bsz)
+        ]
+    )
+    buckets = sig.select("id", F.explode(bands).alias("bucket"))
+    ok = buckets.groupBy("bucket").count().where(F.col("count") <= max_bucket_size)
+    capped = buckets.join(ok.select("bucket"), "bucket")
+    a = capped.select("bucket", F.col("id").alias("id_a"))
+    b = capped.select("bucket", F.col("id").alias("id_b"))
+    pairs = (
+        a.join(b, "bucket")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    if jaccard_threshold is None:
+        return pairs
+    grams = df.select(
+        F.col("doc_id").alias("id"), char_ngrams(F.lower(F.col("text")), 3).alias("grams")
+    )
+    return (
+        pairs.join(grams.withColumnsRenamed({"id": "id_a", "grams": "ga"}), "id_a")
+        .join(grams.withColumnsRenamed({"id": "id_b", "grams": "gb"}), "id_b")
+        .select("id_a", "id_b", set_jaccard(F.col("ga"), F.col("gb")).alias("jaccard"))
+        .where(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
+@pytest.mark.parametrize("portable", [False, True])
+@pytest.mark.parametrize("jaccard_threshold", [None, 0.5])
+def test_minhash_lsh_pairs_equal_reference_law(spark, docs, portable, jaccard_threshold):
+    """minhash_lsh_pairs, built on the ER band builder and the shared
+    capped-bucket step, returns exactly the reference law's rows on dirty
+    input: NULL, empty and shorter-than-a-shingle texts, exact and
+    case-only duplicates, and one group of five identical texts whose
+    buckets exceed ``max_bucket_size`` and are dropped whole."""
+    import random
+
+    hot = "boilerplate footer text repeated on every page of the site"
+    rnd = random.Random(7)
+    words = ["alpha", "beta", "gamma", "delta", "omega", "sigma", "kappa", "zeta"]
+    # short texts over a small vocabulary: partial overlaps whose band
+    # collisions depend on the exact slot and band hashes
+    mixed = [(100 + i, " ".join(rnd.choices(words, k=4))) for i in range(40)]
+    dirty = spark.createDataFrame(
+        [(10, None), (11, ""), (12, "ab"), (13, "ab"), (14, "the quick brown fox")]
+        + [(20 + i, hot) for i in range(5)]
+        + mixed,
+        "doc_id long, text string",
+    )
+    df = docs.unionByName(dirty)
+    got = sorted(
+        minhash_lsh_pairs(
+            df, jaccard_threshold=jaccard_threshold, max_bucket_size=4, portable=portable
+        ).collect()
+    )
+    want = sorted(_reference_minhash_pairs(df, jaccard_threshold, 4, portable).collect())
+    assert got == want
+    ids = {(r["id_a"], r["id_b"]) for r in got}
+    assert (0, 2) in ids and (1, 5) in ids
+    assert not any(20 <= a < 25 for a, _ in ids)  # the capped group pairs nowhere
+
+
 def test_simhash_properties(spark, docs):
     fp = {r["id"]: r["simhash"] for r in simhash(docs, "text", "doc_id").collect()}
     assert fp[0] == fp[2]          # identical text -> identical fingerprint

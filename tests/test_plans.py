@@ -61,14 +61,18 @@ def test_scoring_has_no_python_udf_in_plan(spark, corpus_dfs):
     """The pairwise scoring hot path must be pure JVM (no BatchEvalPython /
     ArrowEvalPython nodes)."""
     from crocodile_spark.config import PipelineConfig
-    from crocodile_spark.operators.blocking import block
+    from crocodile_spark.operators.blocking import (
+        mention_signatures,
+        pairs_from_signatures,
+    )
     from crocodile_spark.operators.normalize_stage import normalize_pages
     from crocodile_spark.operators.scoring import score
 
     wp, _, _ = corpus_dfs
     cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=False)  # html UDF excluded here
-    sigs, pairs = block(records, cfg)
+    sigs = mention_signatures(records, cfg)
+    pairs = pairs_from_signatures(sigs, cfg)
     scored = score(pairs, sigs, cfg)
     plan = _plan(scored)
     assert "EvalPython" not in plan
@@ -114,7 +118,10 @@ def test_pipeline_plans_have_no_cartesian_or_forced_broadcast(spark, corpus_dfs)
     anywhere, and no broadcast hint forced on the (data-scale) signature
     join -- the strategy is AQE's call at runtime."""
     from crocodile_spark.config import PipelineConfig
-    from crocodile_spark.operators.blocking import block
+    from crocodile_spark.operators.blocking import (
+        mention_signatures,
+        pairs_from_signatures,
+    )
     from crocodile_spark.operators.clustering import cluster_records
     from crocodile_spark.operators.normalize_stage import normalize_pages
     from crocodile_spark.operators.scoring import score
@@ -122,7 +129,8 @@ def test_pipeline_plans_have_no_cartesian_or_forced_broadcast(spark, corpus_dfs)
     wp, _, _ = corpus_dfs
     cfg = PipelineConfig()
     records = normalize_pages(wp, use_html=False)
-    sigs, pairs = block(records, cfg)
+    sigs = mention_signatures(records, cfg)
+    pairs = pairs_from_signatures(sigs, cfg)
     scored = score(pairs, sigs, cfg)
     for df in (records, sigs, pairs, scored):
         assert "CartesianProduct" not in _plan(df)

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from crocodile_spark.config import PipelineConfig
 from crocodile_spark.operators.blocking import (
-    block,
     cap_blocks,
     generate_pairs,
     mention_df_threshold,
