@@ -14,6 +14,12 @@ task before the UDF runs, on the critical path of every Arrow kernel. The
 daemon re-reads an archive only when its mtime or size changed, so a
 rewritten ``--py-files`` zip still re-imports.
 
+Session start runs no Spark job: the daemon and its workers fork on the
+first pandas-UDF task and are reused after it, and parquet's classes load
+on the first parquet query. A session that does neither (the in-memory
+pipeline with ``use_html=False``) pays for neither. A caller that times
+single queries warms both itself first, as ``bench.py`` does.
+
 The engine runs as many small Catalyst plans (the pipeline stages, dedup,
 ANN, Lakehouse and incremental operators), so at benchmark sizes their
 cost is orchestration. Part of it is on the Python side: every Column
@@ -52,8 +58,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
-
 from pyspark.sql import SparkSession
 
 # Entries of Spark's generated-class cache (static
@@ -78,13 +82,26 @@ def _package_parent() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(crocodile_spark.__file__)))
 
 
+def available_cpus() -> int:
+    """CPUs this process may run on: its affinity set, which a cpuset or
+    ``taskset`` narrows, or the host's count where the platform has no
+    affinity call."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 8
+
+
 def get_spark(
     app_name: str = "croco-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = os.cpu_count() or 8
+    """The engine's session, at ``local[available_cpus()]`` with as many
+    shuffle partitions unless told otherwise. It returns once the JVM and
+    the session are up, having run no Spark job."""
+    cores = available_cpus()
     # Executor python workers must be able to unpickle our pandas UDFs even
     # when the driver script runs from another cwd. On a real cluster this
     # is `spark-submit --py-files`; locally we put the repo root on the
@@ -134,44 +151,4 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prewarm_python_workers(spark)
     return spark
-
-
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Fork the Python UDF daemon + one worker per task slot at session
-    build, so the FIRST pandas-UDF query does not pay the fork/import cost
-    (pyarrow+pandas import is ~1-2 s across a 32-slot local master). The
-    production analog is executor warmup; workers are reused afterwards
-    (spark.python.worker.reuse default). Starting the daemon here also
-    stamps its zip importers once (``worker_daemon.main``), so no task of
-    a forked worker re-reads an unchanged archive. It runs on every
-    session build; failures are benign -- the first real UDF job simply
-    pays the fork as before."""
-    try:
-        import pandas as _pd  # noqa: F401  (driver side, already imported)
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        @F.pandas_udf(T.LongType())
-        def _noop(x: pd.Series) -> pd.Series:
-            return x
-
-        n = spark.sparkContext.defaultParallelism
-        spark.range(0, n, 1, n).select(_noop("id")).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        # touch the parquet reader+writer once: Hadoop FS / parquet-mr
-        # class-init otherwise lands on the session's FIRST real parquet
-        # query (~0.8 s, measured). Session-private path, removed after.
-        import shutil
-        import tempfile
-
-        pq = tempfile.mkdtemp(prefix="croco_pq_warm_")
-        try:
-            spark.range(1).write.mode("overwrite").parquet(pq)
-            spark.read.parquet(pq).collect()
-        finally:
-            shutil.rmtree(pq, ignore_errors=True)
-    except Exception:
-        pass  # warmup must never break session creation

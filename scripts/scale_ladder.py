@@ -402,8 +402,10 @@ def main(argv=None) -> int:
                 "f1", "accepted_edges", "gates", "incremental", "recrawl", "scaling")}, indent=1) + "\n")
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    from crocodile_spark.session import available_cpus
+
     print(json.dumps({
-        "host_cpus": os.cpu_count(),
+        "host_cpus": available_cpus(),
         "wall_s": time.perf_counter() - t0,
         "ok": ok,
         "sizes": sizes,
